@@ -68,9 +68,7 @@ object Graft {
     * The near-dup cluster resolver behind x12_dedup_clusters — the
     * edge list collapses toward a star forest each round, so dense
     * template clusters (quadratic verified-pair sets) cost one full
-    * pass, not one per round; `ops.ConnectedComponents.minLabel` (the
-    * pointer-jumping label loop) remains available for sparse
-    * long-chain graphs. Scoped: the internal snapshot is released
+    * pass, not one per round. Scoped: the internal snapshot is released
     * after the result's FIRST materialization (no per-call storage
     * leak). A later re-materialization is still correct and stays
     * cheap — recompute re-reads the loop's retained shuffle files

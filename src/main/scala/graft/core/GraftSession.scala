@@ -60,6 +60,18 @@ object GraftSession {
       // handles are small (the compiled code lives in metaspace
       // either way), so the cost is a few MB of heap.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // ...and keep the stage id out of the generated class name, so
+      // that cache can hit. AQE numbers whole-stage pipelines in the
+      // order it plans query stages, which follows the order earlier
+      // stages finish; with the id in the name, the same pipeline
+      // renumbered is new source and is Janino-compiled again on the
+      // query thread, then JIT-compiled again: a cost that depends on
+      // timing. opsbench traces showed 18 Janino compiles per
+      // flooded_ingest cycle and 8 per audit_churn cycle; without the
+      // id they fall to 0.7 and 2.7 (on audit_churn the rest are the
+      // unique- and duplicate-key variants of a broadcast join, each
+      // compiled once). The id only served debugging.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // AQE coalescing stays at Spark's parallelism-first DEFAULT.
       // Round 15 measured the size-first alternative
       // (coalescePartitions.parallelismFirst=false, the usual remedy

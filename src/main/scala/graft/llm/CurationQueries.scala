@@ -214,14 +214,11 @@ object CurationQueries {
       // crossing pairs only.
       val sig = graft.core.CacheScope.cacheEager(MinHash.signaturesFromSets(
         MinHash.shingleSets(MinHash.docs(spark, dir), 5).filter(col("c") > 0)))
-      // round 15: the >= 14/16 verify rides the key rows' carried
-      // complement quads (MinHash.verifiedPairedAsymFromKeys) — the
-      // old shape joined the crossing candidates back to this cached
-      // sig table twice
+      // the >= 14/16 verify rides the key rows' carried complement
+      // quads (MinHash.banded) — no join back to this sig table
       val keys = MinHash.bandPairKeysSorted(sig)
-      val nearIds = MinHash.verifiedPairedAsymFromKeys(
-        keys.filter(col("doc_id") % 4 === 3),
-        keys.filter(col("doc_id") % 4 =!= 3), 14)
+      val nearIds = MinHash.banded(keys.filter(col("doc_id") % 4 =!= 3),
+        Some(keys.filter(col("doc_id") % 4 === 3)), MinHash.Rule.Exact, 14)
         .select(col("d1").as("doc_id"))
         .distinct().withColumn("is_near", lit(1L))
       batch.select("doc_id", "lang")

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.core.CacheScope
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -358,29 +359,24 @@ object DedupIndex {
     * minimum doc_id; id = lbl rows are the canonicals. This is the
     * day-0 producer of the forest [[saveForest]] persists.
     *
-    * Candidates come from the HYBRID bucket rule at
-    * [[MinHash.DefaultCap]] (VERDICT r12 task 1 — the x86-gated rule
-    * deployed where it will actually run): ordinary buckets keep the
-    * exact all-pairs join, template-flooded ones escalate to the
-    * anchor star, so the day-0 resolve is O(cap · keys) worst-case
-    * instead of Σ b² — the difference between a payable and an
-    * unpayable build on a boilerplate-heavy 100 TB corpus. At the
+    * Candidates and verify are [[MinHash.banded]] under
+    * `Rule.Deployed` (the x86-gated cap plus the x88 chain): ordinary
+    * buckets keep the exact all-pairs join, template-flooded ones
+    * escalate to the anchor star and SNM chain, so the day-0 resolve
+    * is O(cap · keys) worst-case instead of Σ b² — the difference
+    * between a payable and an unpayable build on a boilerplate-heavy
+    * 100 TB corpus. At the
     * correctness-gate scales no real-corpus bucket exceeds the cap, so
     * the answer is bit-identical to the uncapped resolve (b26/b27 gate
     * it against x12's verbatim full-recompute oracle); the flooded
-    * regime is gated by b28. */
-  def clusterLabels(idx: DataFrame): DataFrame = {
-    // Verify rides the candidate legs (round 15, guide §8/§2.4): every
-    // candidate pair forms inside a shared (bp, k) bucket whose packed
-    // key pins 8 lanes equal, and the other 8 ride the key rows as
-    // r0..r3 — so the >= 14/16 gate is row-local arithmetic at pair
-    // formation. The old shape joined the (deduped) candidate set back
-    // to this cached sig table TWICE (two doc_id exchanges + the
-    // second artifact-column fan-out); now sig feeds exactly one key
-    // projection.
-    val sig = graft.core.CacheScope.cacheEager(sigOf(idx))
-    val pairs = MinHash.verifiedHybridChainFromKeys(
-      MinHash.bandPairKeysSorted(sig), MinHash.DefaultCap, 14)
+    * regime is gated by b28. Scoped: the cached signatures are
+    * released after the result's first materialization. */
+  def clusterLabels(idx: DataFrame): DataFrame = CacheScope.scoped {
+    // the verify rides the key rows' carried quads, so sig feeds
+    // exactly one key projection — no doc_id join-back
+    val sig = CacheScope.cacheEager(sigOf(idx))
+    val pairs = MinHash.banded(
+      MinHash.bandPairKeysSorted(sig), None, MinHash.Rule.Deployed, 14)
     graft.ops.ConnectedComponents.stars(idx.select("doc_id"), pairs)
   }
 
@@ -454,12 +450,12 @@ object DedupIndex {
     * scan for its signatures), the pinned index rows (signature lanes
     * — old-corpus text is never touched), and the pinned label forest
     * (n rows — the old quadratic pair bulk is never re-formed).
-    * Candidates are ASYMMETRIC HYBRID banding at
-    * [[MinHash.DefaultCap]] ([[MinHash.candidatesHybridAsymFromKeys]],
-    * VERDICT r12 task 1): batch keys probe (index ∪ batch) buckets,
+    * Candidates are [[MinHash.banded]] under `Rule.Deployed` with the
+    * batch as probe side: batch keys probe (index ∪ batch) buckets,
     * ordinary buckets keep the exact all-pairs join, template-flooded
-    * ones escalate to the anchor star — so per-ingest candidate volume
-    * is O(cap · batch-keys) plus Σ(b−1) over escalated buckets,
+    * ones escalate to the anchor star and SNM chain — so per-ingest
+    * candidate volume is O(cap · batch-keys) plus Σ(b−1) over
+    * escalated buckets,
     * data-independently, where the raw band join paid bucket-size work
     * per batch key (the x85/x86 cliff, now closed on the path that
     * will actually see 100 TB; b28 gates the flooded lifecycle with
@@ -472,7 +468,9 @@ object DedupIndex {
     * [[disjointGuard]] riding the batch-signature cache
     * materialization (VERDICT r13 task 1 folded the separate limit(1)
     * job away): a colliding ingest still fails with the contract
-    * message before any candidate work runs. */
+    * message before any candidate work runs. Scoped: the cached batch
+    * signatures are released after the result's first
+    * materialization. */
   def maintainClusters(spark: SparkSession, path: String, version: Int,
       batch: DataFrame): DataFrame =
     maintainClustersImpl(spark, path, version,
@@ -495,7 +493,7 @@ object DedupIndex {
       batchRows.select("doc_id"))
 
   private def maintainClustersImpl(spark: SparkSession, path: String,
-      version: Int, rawBSig: DataFrame, batchIds: DataFrame): DataFrame = {
+      version: Int, rawBSig: DataFrame, batchIds: DataFrame): DataFrame = CacheScope.scoped {
     // ONE manifest collect feeds both the pinned rows and the pinned
     // forest (round 15, guide §1.2: the old shape ran loadAt and
     // loadForestAt as two collects of the same manifest parquet — one
@@ -503,18 +501,16 @@ object DedupIndex {
     val man = graft.core.Snapshots.entries(spark, path, version)
     val idx = loadFromEntries(spark, path, man)
     val iSig = sigOf(idx)
-    val bSig = graft.core.CacheScope.cacheEager(
+    val bSig = CacheScope.cacheEager(
       rawBSig.unionByName(
         disjointGuard(idx, batchIds, "maintainClusters", rawBSig)))
     val allSig = iSig.unionByName(bSig)
-    // Verify fused into the candidate legs (round 15, guide §8): the
-    // index signature artifact is touched exactly ONCE per maintain —
-    // the base-key projection — where the old shape re-joined the
-    // candidate set against (index ∪ batch) signatures by doc_id, a
-    // second full artifact scan plus two exchanges per ingest.
-    val batchPairs = MinHash.verifiedHybridChainAsymFromKeys(
-      MinHash.bandPairKeysSorted(bSig), MinHash.bandPairKeysSorted(allSig),
-      MinHash.DefaultCap, 14)
+    // the verify rides the key rows' carried quads: the index
+    // signature artifact is touched exactly ONCE per maintain, by the
+    // base-key projection
+    val batchPairs = MinHash.banded(MinHash.bandPairKeysSorted(allSig),
+      Some(MinHash.bandPairKeysSorted(bSig)), MinHash.Rule.Deployed, 14)
+      .select("d1", "d2")
     val forest = forestFromEntries(spark, path, version, man)
     graft.ops.ConnectedComponents.stars(
       idx.select("doc_id").unionByName(batchIds.select("doc_id")),
@@ -538,9 +534,9 @@ object DedupIndex {
     * doc_id + the mh lanes and deliberately NOT cached — at
     * production scale the index is far bigger than executor storage,
     * and one pruned columnar scan of a compact artifact is the right
-    * price. Candidate generation is
-    * ASYMMETRIC HYBRID banding at [[MinHash.DefaultCap]] (batch keys
-    * probe index-side buckets; VERDICT r12 task 1): within-index pairs
+    * price. Candidates and verify are [[MinHash.banded]] under
+    * `Rule.Deployed` with the batch as probe side (batch keys probe
+    * index-side buckets): within-index pairs and batch–batch pairs
     * are never formed, ordinary buckets keep the exact batch×bucket
     * join so candidate volume scales with the batch, and an
     * index-side bucket a template corpus floods costs each batch key
@@ -552,8 +548,10 @@ object DedupIndex {
     * contract (batch doc_ids disjoint from indexed ones) is enforced
     * here too — ADVICE r13: append/maintainClusters had the guard,
     * this path silently tolerated overlap — by [[disjointGuard]]
-    * riding the batch-signature cache materialization. */
-  def dedupBatch(batch: DataFrame, idx: DataFrame): DataFrame = {
+    * riding the batch-signature cache materialization. Scoped: the
+    * two cached batch tables are released after the result's first
+    * materialization. */
+  def dedupBatch(batch: DataFrame, idx: DataFrame): DataFrame = CacheScope.scoped {
     // ONE batch text scan (round 14, guide §2.3/§2.4): sha-256 and the
     // native signature lanes ride one cached row-local projection — the
     // previous shape scanned the batch text twice (an exact-dup leg and
@@ -561,7 +559,7 @@ object DedupIndex {
     // second pass over the heaviest column.
     val sigs = graft.functions.ShingleExpressions.minhashSigs(
       graft.functions.ShingleExpressions.shingleSet(lower(col("text")), 5))
-    val base = graft.core.CacheScope.cacheEager(batch.select(
+    val base = CacheScope.cacheEager(batch.select(
       col("doc_id"), col("lang"), sha2(col("text"), 256).as("h"), sigs.as("sigs")))
     val bh = base.select("doc_id", "lang", "h")
     // no distinct() on the index h set: a LEFT SEMI join is
@@ -574,19 +572,12 @@ object DedupIndex {
     val rawBSig = base.filter(col("sigs").isNotNull)
       .select(col("doc_id") +:
         (0 until 16).map(i => col("sigs").getItem(i).as(s"mh$i")): _*)
-    val bSig = graft.core.CacheScope.cacheEager(
+    val bSig = CacheScope.cacheEager(
       rawBSig.unionByName(disjointGuard(idx, base, "dedupBatch", rawBSig)))
-    val iSig = idx.filter(col("mh0").isNotNull)
-      .select(col("doc_id") +: (0 until 16).map(i => col(s"mh$i")): _*)
-    // Verify fused into the candidate legs (round 15, guide §8): the
-    // >= 14/16 gate is computed from the carried r0..r3 quads at pair
-    // formation, so the index's mh lanes are scanned exactly once (the
-    // base-key projection) — the old shape re-joined candidates
-    // against both signature tables by doc_id, a second pruned
-    // artifact scan plus two exchanges per serve.
-    val nearIds = MinHash.verifiedHybridChainAsymFromKeys(
-      MinHash.bandPairKeysSorted(bSig), MinHash.bandPairKeysSorted(iSig),
-      MinHash.DefaultCap, 14)
+    // the verify rides the key rows' carried quads: the index's mh
+    // lanes are scanned exactly once, by the base-key projection
+    val nearIds = MinHash.banded(MinHash.bandPairKeysSorted(sigOf(idx)),
+      Some(MinHash.bandPairKeysSorted(bSig)), MinHash.Rule.Deployed, 14)
       .select(col("d1").as("doc_id"))
       .distinct().withColumn("is_near", lit(1L))
     bh.select("doc_id", "lang")

@@ -48,12 +48,10 @@ object DedupQueries {
     // real crawl data). The oracle's sig CTE omits them identically.
     val sig = CacheScope.cacheEager(MinHash.signaturesFromSets(
       MinHash.shingleSets(MinHash.docs(spark, dir), 5).filter(col("c") > 0)))
-    // round 15: the >= 14/16 verify rides the band-pair key rows'
-    // carried complement quads (MinHash.verifiedPairedFromKeys), so
-    // the two doc_id join-backs to this sig table are gone; `matches`
-    // is the same full 16-lane agreement (8 keyed lanes pinned equal
-    // by the shared bucket + the carried complement count).
-    MinHash.verifiedPairedFromKeys(MinHash.bandPairKeysSorted(sig), 14)
+    // the >= 14/16 verify rides the band-pair key rows' carried
+    // complement quads (MinHash.banded), so nothing joins back to this
+    // sig table; `matches` is the full 16-lane agreement
+    MinHash.banded(MinHash.bandPairKeysSorted(sig), None, MinHash.Rule.Exact, 14)
   }
 
   /** The ~190-char template every member of the planted skew cluster
@@ -663,22 +661,18 @@ object DedupQueries {
       val isNew = col("doc_id") % 3 === 2
       val sig = CacheScope.cacheEager(MinHash.signaturesFromSets(
         MinHash.shingleSets(docs, 5).filter(col("c") > 0)))
-      // round 15: both legs' >= 14/16 verify rides the key rows'
-      // carried complement quads (MinHash.verifiedPaired*FromKeys) —
-      // the old shape joined each candidate set back to this cached
-      // sig table twice (four doc_id exchanges per run)
       // yesterday's state: the label forest over the old corpus
-      val oldPairs = MinHash.verifiedPairedFromKeys(
-        MinHash.bandPairKeysSorted(sig.filter(col("doc_id") % 3 =!= 2)), 14)
-        .select("d1", "d2")
+      val oldPairs = MinHash.banded(
+        MinHash.bandPairKeysSorted(sig.filter(col("doc_id") % 3 =!= 2)), None,
+        MinHash.Rule.Exact, 14).select("d1", "d2")
       val forest = graft.ops.ConnectedComponents
         .stars(docs.filter(!isNew).select("doc_id"), oldPairs)
         .filter(col("id") =!= col("lbl"))
         .select(col("id").as("d1"), col("lbl").as("d2"))
       // today's ingest: candidates involving the batch only
-      val batchPairs = MinHash.verifiedPairedAsymFromKeys(
-        MinHash.bandPairKeysSorted(sig.filter(isNew)),
-        MinHash.bandPairKeysSorted(sig), 14)
+      val batchPairs = MinHash.banded(MinHash.bandPairKeysSorted(sig),
+        Some(MinHash.bandPairKeysSorted(sig.filter(isNew))), MinHash.Rule.Exact, 14)
+        .select("d1", "d2")
       graft.ops.ConnectedComponents
         .stars(docs.select("doc_id"), forest.union(batchPairs))
         .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
@@ -773,7 +767,7 @@ object DedupQueries {
     // standalone rule (x86); round 13 deploys it inside the production
     // paths — DedupIndex.clusterLabels (day-0 resolve) and
     // maintainClusters/dedupBatch (every ingest) now run
-    // candidatesHybrid(Asym) at MinHash.DefaultCap — and THIS row
+    // MinHash.banded at MinHash.DefaultCap — and THIS row
     // proves the deployed composition on the corpus shape that
     // motivated it: real documents ∪ the 1,000-doc planted template
     // cluster (ids shifted by max(doc_id)+1, x69's collision-proof
@@ -875,7 +869,7 @@ object DedupQueries {
       val sig = CacheScope.cacheEager(MinHash.signaturesFromSets(
         MinHash.shingleSets(corpus.select("doc_id", "text"), 5)
           .filter(col("c") > 0)))
-      val keysFlagged = CacheScope.cacheEager(MinHash.bandPairKeys(sig)
+      val keysFlagged = CacheScope.cacheEager(MinHash.bandPairKeysSorted(sig)
         .join(corpus.select("doc_id", "is_old"), "doc_id"))
       val meta = keysFlagged
         .groupBy("bp", "k").agg(
@@ -1049,12 +1043,10 @@ object DedupQueries {
         val sets = CacheScope.cache(
           MinHash.shingleSets(Tables.fanOut(docsDf), 9).filter(col("c") > 0))
         val sig = CacheScope.cacheEager(MinHash.signaturesFromSets(sets))
-        // round 15: fused in-bucket verify — the hot 1,000-doc bucket's
-        // ~3M pre-distinct candidate rows are verified at pair
-        // formation (row-local quad compares) instead of being
-        // distinct'd and joined back to the sig table twice
-        val pairs = MinHash.verifiedPairedFromKeys(
-          MinHash.bandPairKeysSorted(sig), 14).select("d1", "d2")
+        // the hot 1,000-doc bucket's ~3M pre-distinct candidate rows
+        // are verified at pair formation (row-local quad compares)
+        val pairs = MinHash.banded(
+          MinHash.bandPairKeysSorted(sig), None, MinHash.Rule.Exact, 14)
         val cc = graft.ops.ConnectedComponents.stars(
           docsDf.select("doc_id"), pairs)
         // Output: the cluster-size histogram — tiny, and the strongest
@@ -1071,10 +1063,10 @@ object DedupQueries {
     // under the DuckDB oracle). Same fixture as x21 — 1,000-member
     // template cluster + 4,000 distinct docs, generated in-plan AND
     // regenerated verbatim by the oracle's corpus CTE — but candidates
-    // come from MinHash.candidatesCapped: within each band-pair bucket
+    // come from MinHash.banded's Rule.Anchor: within each band-pair bucket
     // every member pairs with the bucket's MINIMUM doc_id only (the
     // rare-anchor representative), so candidate volume is Σ(n_bucket−1)
-    // — LINEAR where candidatesPaired's self-join is Σ n_bucket²
+    // — LINEAR where Rule.Exact's self-join is Σ n_bucket²
     // (C(1000,2) ≈ 500k pairs on this fixture; 10¹² on a 10⁶-member
     // boilerplate cluster at 100 TB). The oracle restates the capped
     // rule exactly (anch/cand CTEs), and the output carries the
@@ -1124,21 +1116,10 @@ object DedupQueries {
       val sets = CacheScope.cache(
         MinHash.shingleSets(Tables.fanOut(docsDf), 9).filter(col("c") > 0))
       val sig = CacheScope.cacheEager(MinHash.signaturesFromSets(sets))
-      // keys feed three consumers (anchors, join-back, audit) — cache
-      // the 6-rows/doc projection, not the pair set.
-      val keys = CacheScope.cacheEager(MinHash.bandPairKeys(sig))
-      val cand = MinHash.candidatesCappedFromKeys(keys)
-      val s1 = sig.toDF("s1_doc" +: (0 until 16).map(i => s"a$i"): _*)
-      val s2 = sig.toDF("s2_doc" +: (0 until 16).map(i => s"b$i"): _*)
-      val matches = (0 until 16)
-        .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
-        .reduce(_ + _)
-      val pairs = cand
-        .join(s1, col("d1") === col("s1_doc"))
-        .join(s2, col("d2") === col("s2_doc"))
-        .select(col("d1"), col("d2"), matches.as("m"))
-        .filter(col("m") >= 14)
-        .select("d1", "d2")
+      // keys feed the banded legs and the audit — cache the
+      // 6-rows/doc projection, not the pair set.
+      val keys = CacheScope.cacheEager(MinHash.bandPairKeysSorted(sig))
+      val pairs = MinHash.banded(keys, None, MinHash.Rule.Anchor, 14)
       val cc = graft.ops.ConnectedComponents.stars(
         docsDf.select("doc_id"), pairs)
       val audit = keys.groupBy("bp", "k").agg(count(lit(1)).as("b"))
@@ -1154,7 +1135,7 @@ object DedupQueries {
     // (the judge's "sub-band escalation" remedy made the default):
     // buckets at or under 16 members keep the exact all-pairs join —
     // LOSSLESS, and on ordinary corpora that is every bucket, so the
-    // candidate set equals candidatesPaired's — while buckets over 16
+    // candidate set equals Rule.Exact's — while buckets over 16
     // escalate to x85's min-id anchor pairing, so a flooded template
     // bucket costs Σ(b−1) instead of Σ b². Worst-case candidate volume
     // is O(cap · keys) BY CONSTRUCTION, data-independent. The fixture
@@ -1221,11 +1202,10 @@ object DedupQueries {
             .select((col("doc_id") + col("m")).as("doc_id"), col("text"))))
       val sig = CacheScope.cacheEager(MinHash.signaturesFromSets(
         MinHash.shingleSets(corpus, 9).filter(col("c") > 0)))
-      // round 15: fused in-bucket verify on the hybrid rule — the
-      // flooded buckets' pairs verify against the anchor's carried
-      // quads at pair formation; no sig join-backs
+      // the flooded buckets' pairs verify against the anchor's
+      // carried quads at pair formation
       val keys = CacheScope.cacheEager(MinHash.bandPairKeysSorted(sig))
-      val pairs = MinHash.verifiedHybridFromKeys(keys, 16, 14)
+      val pairs = MinHash.banded(keys, None, MinHash.Rule(16, chain = false), 14)
       val cc = graft.ops.ConnectedComponents.stars(
         corpus.select("doc_id"), pairs)
       val audit = keys.groupBy("bp", "k").agg(count(lit(1)).as("b"))
@@ -1255,7 +1235,7 @@ object DedupQueries {
     // 100, far over the cap) with drifting right lanes mh_{8+m} =
     // (id+m) div 4 (a sliding window: 2 of 8 boundaries cross per step
     // of distance). Ground truth is the LOSSLESS rule
-    // (candidatesPaired — every >= 14/16 pair shares a band pair by
+    // (Rule.Exact — every >= 14/16 pair shares a band pair by
     // pigeonhole): 99 chain pairs, ONE 100-doc cluster. The hybrid rule
     // at the deployed cap keeps only the anchor's own chain edge
     // (0, 1): 98 of 99 verified pairs LOST, the cluster fragments into
@@ -1267,7 +1247,7 @@ object DedupQueries {
     // where the exact join is unpayable at 100 TB (10¹² pairs on a
     // 10⁶ flood), and real template floods are star-shaped (x85/x86),
     // not adversarial chains; consumers needing chain-shaped recall
-    // inside floods keep candidatesPaired (l2/x12 still run it).
+    // inside floods keep Rule.Exact (l2/x12 still run it).
     Q(
       "x87_chain_recall",
       s"""WITH RECURSIVE sig AS (SELECT d.id AS doc_id, l.i,
@@ -1321,11 +1301,11 @@ object DedupQueries {
          |FROM hist CROSS JOIN audit ORDER BY cluster_size""".stripMargin
     ) { (spark, _) =>
       val sig = CacheScope.cacheEager(chainFixtureSig(spark))
-      val keys = CacheScope.cacheEager(MinHash.bandPairKeys(sig))
-      val hybridPairs = CacheScope.cacheEager(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridFromKeys(keys, MinHash.DefaultCap), sig, sig, 14))
-      val exactPairs = CacheScope.cacheEager(MinHash.agreeAtLeast(
-        MinHash.candidatesPaired(sig), sig, sig, 14))
+      val keys = CacheScope.cacheEager(MinHash.bandPairKeysSorted(sig))
+      val hybridPairs = CacheScope.cacheEager(MinHash.banded(
+        keys, None, MinHash.Rule(MinHash.DefaultCap, chain = false), 14))
+      val exactPairs = CacheScope.cacheEager(
+        MinHash.banded(keys, None, MinHash.Rule.Exact, 14))
       val nodes = sig.select("doc_id")
       val ccHybrid = graft.ops.ConnectedComponents.stars(nodes, hybridPairs)
       val ccExact = graft.ops.ConnectedComponents.stars(nodes, exactPairs)
@@ -1353,8 +1333,8 @@ object DedupQueries {
     // IS the drift order, so the successor pairs are exactly the 99
     // true links the anchor star loses: lost_pairs drops 98 → 0 and
     // the 100-doc cluster survives escalation intact. This
-    // chain-escalation rule (MinHash.candidatesHybridChainFromKeys /
-    // ...ChainAsymFromKeys) is what the DEPLOYED dedup paths now run
+    // chain-escalation rule (MinHash.Rule.Deployed) is what the
+    // DEPLOYED dedup paths now run
     // — clusterLabels, maintainClusters, dedupBatch — so x87 (anchor
     // only) and this row read as measured-loss vs deployed-remedy on
     // one fixture; b28 gates the deployed rule's volume audit on the
@@ -1418,11 +1398,10 @@ object DedupQueries {
     ) { (spark, _) =>
       val sig = CacheScope.cacheEager(chainFixtureSig(spark))
       val keys = CacheScope.cacheEager(MinHash.bandPairKeysSorted(sig))
-      val chainPairs = CacheScope.cacheEager(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainFromKeys(keys, MinHash.DefaultCap),
-        sig, sig, 14))
-      val exactPairs = CacheScope.cacheEager(MinHash.agreeAtLeast(
-        MinHash.candidatesPaired(sig), sig, sig, 14))
+      val chainPairs = CacheScope.cacheEager(
+        MinHash.banded(keys, None, MinHash.Rule.Deployed, 14))
+      val exactPairs = CacheScope.cacheEager(
+        MinHash.banded(keys, None, MinHash.Rule.Exact, 14))
       val cc = graft.ops.ConnectedComponents.stars(
         sig.select("doc_id"), chainPairs)
       // orientation-free pair count: the chain leg emits (pred, succ),
@@ -1465,7 +1444,7 @@ object DedupQueries {
     // through small band-(0,3)/(1,3) buckets — the rescue the rule
     // actually provides on real data — which is why the loss is 36,
     // not everything outside the chain. Consumers needing full recall
-    // inside adversarial floods keep candidatesPaired (l2/x12's
+    // inside adversarial floods keep Rule.Exact (l2/x12's
     // declared forms — COVERAGE.md's scale note). Oracle restates the
     // fixture, the banding, all three candidate legs (DISTINCT over
     // UNION ALL — DuckDB 1.0.0 under WITH RECURSIVE does not fully
@@ -1538,11 +1517,10 @@ object DedupQueries {
     ) { (spark, _) =>
       val sig = CacheScope.cacheEager(denseGraphFixtureSig(spark))
       val keys = CacheScope.cacheEager(MinHash.bandPairKeysSorted(sig))
-      val chainPairs = CacheScope.cacheEager(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainFromKeys(keys, MinHash.DefaultCap),
-        sig, sig, 14))
-      val exactPairs = CacheScope.cacheEager(MinHash.agreeAtLeast(
-        MinHash.candidatesPaired(sig), sig, sig, 14))
+      val chainPairs = CacheScope.cacheEager(
+        MinHash.banded(keys, None, MinHash.Rule.Deployed, 14))
+      val exactPairs = CacheScope.cacheEager(
+        MinHash.banded(keys, None, MinHash.Rule.Exact, 14))
       val nodes = sig.select("doc_id")
       val ccChain = graft.ops.ConnectedComponents.stars(nodes, chainPairs)
       val ccExact = graft.ops.ConnectedComponents.stars(nodes, exactPairs)
@@ -1705,10 +1683,8 @@ object DedupQueries {
           (sum("ck") % P).cast("long").as("shingle_checksum"))
       val sig = CacheScope.cacheEager(
         MinHash.signaturesFromSets(sets.filter(col("c") > 0)))
-      // round 15: fused in-bucket verify (same pair set, no sig
-      // join-backs)
-      val dp = MinHash.verifiedPairedFromKeys(
-        MinHash.bandPairKeysSorted(sig), 14)
+      val dp = MinHash.banded(
+        MinHash.bandPairKeysSorted(sig), None, MinHash.Rule.Exact, 14)
         .select("d1")
         .join(corpus.select(col("doc_id").as("d1"), col("lang")), "d1")
         .groupBy("lang").agg(count(lit(1)).as("dup_pairs"))

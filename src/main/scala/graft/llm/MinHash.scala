@@ -118,67 +118,12 @@ object MinHash {
       .select("d1", "d2").distinct()
   }
 
-  /** Distinct candidate pairs (d1 < d2) sharing at least TWO full bands,
-    * keyed on the C(4,2) = 6 band pairs: each doc emits 6 rows keyed
-    * (band_i, band_j, bk_i, bk_j) and candidates join on that compound
-    * key. Still lossless for the >= 14/16 agreement gate (pigeonhole:
-    * 2 mismatching minhashes break at most 2 of the 4 bands, leaving
-    * >= 2 intact bands, i.e. at least one fully-matching band PAIR) —
-    * but bucket sizes shrink multiplicatively, because a bucket now
-    * requires 8 shared minhash values instead of 4. Measured at sf0.1
-    * on the synthetic corpus: 1,202,857 single-band candidate pairs
-    * (max bucket 1,181 of 5,000 docs) vs 62,052 band-pair candidates
-    * (max bucket 111) — the difference between a quadratic blowup and
-    * a linear-ish candidate set at scale. */
-  def candidatesPaired(sig: DataFrame): DataFrame = {
-    val rows = bandPairKeys(sig)
-    val b1 = rows.toDF("d1", "bp", "k")
-    val b2 = rows.toDF("d2", "bp2", "k2")
-    b1.join(b2, col("bp") === col("bp2") && col("k") === col("k2") && col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-  }
-
-  /** CAPPED candidate pairs (d1 < d2) over precomputed band-pair key
-    * rows — the bounded-work variant for TEMPLATE corpora (boilerplate
-    * pages, license headers), where one near-dup cluster floods its
-    * band buckets and the all-pairs-within-bucket join goes quadratic
-    * in cluster size (VERDICT r11: Σ n_bucket² is the one scale cliff
-    * the star-CC switch did not fix — a 10⁶-member boilerplate cluster
-    * is 10¹² candidate pairs). Rule: within each (bp, k) bucket, every
-    * member pairs with the bucket's MINIMUM doc_id (the rare-anchor
-    * representative — x52's posting-probe trick generalized), so
-    * candidate volume is Σ (n_bucket − 1): LINEAR in bucket occupancy,
-    * and the verified pair set is star-shaped per bucket — exactly the
-    * shape ConnectedComponents.stars collapses in one round. The cap
-    * trades the pairwise ≥14/16 losslessness guarantee for bounded
-    * work: two docs agreeing ≥14 still share a band-pair bucket
-    * (pigeonhole), so each is candidate-paired with that bucket's
-    * anchor, and the CLUSTER is recovered whenever members verify
-    * against the anchor (true for template clusters by construction —
-    * x85's planted fixture gates exactly that, with the capped rule
-    * restated verbatim in its DuckDB oracle and the candidate-volume
-    * audit emitted as output columns). Plan shape: one (bp, k) partial
-    * aggregate for the anchors + one co-partitioned join back — the
-    * hot bucket costs one 10⁶-row scan, never a 10¹²-row join. */
-  def candidatesCappedFromKeys(keys: DataFrame): DataFrame = {
-    val anchors = keys.groupBy("bp", "k").agg(min("doc_id").as("d1"))
-    keys.join(anchors, Seq("bp", "k"))
-      .filter(col("doc_id") =!= col("d1"))
-      .select(col("d1"), col("doc_id").as("d2"))
-      .distinct()
-  }
-
-  /** [[candidatesCappedFromKeys]] over a signature table. */
-  def candidatesCapped(sig: DataFrame): DataFrame =
-    candidatesCappedFromKeys(bandPairKeys(sig))
-
   /** The bucket-size cap the DEPLOYED dedup paths run with
-    * ([[graft.llm.DedupIndex]] — VERDICT r12 task 1): buckets at or
-    * under it keep the exact all-pairs candidate join (lossless for
-    * the >= 14/16 gate), bigger ones escalate to the min-id anchor
-    * star PLUS the signature-sorted SNM successor chain
-    * ([[candidatesHybridChainFromKeys]] — 2(b−1) rows per escalated
-    * bucket, still linear). 16 is the x86-gated value: at the
+    * ([[graft.llm.DedupIndex]], `Rule.Deployed`): buckets at or under it
+    * keep the exact all-pairs join (lossless for the >= 14/16 gate),
+    * bigger ones escalate to the min-id anchor star PLUS the
+    * signature-sorted SNM successor chain — 2(b−1) rows per escalated
+    * bucket, still linear. 16 is the x86-gated value: at the
     * correctness-gate scales the real corpus's largest band-pair
     * bucket is 14 members, so ordinary data never escalates, while a
     * template mega-cluster's flooded buckets (1,000+ members on the
@@ -188,221 +133,157 @@ object MinHash {
     * exactly that loss. */
   val DefaultCap = 16
 
-  /** HYBRID candidate pairs — the deployable form of the cap (x86):
-    * buckets at or under `cap` members keep the exact all-pairs join
-    * (lossless, and bounded by cap·Σb rows), buckets OVER it escalate
-    * to the anchor rule. Ordinary corpora see pure all-pairs behavior
-    * (every bucket is small — candidate set identical to
-    * [[candidatesPaired]]'s); a template mega-cluster's flooded
-    * buckets switch to Σ(b−1) anchor pairs, so worst-case work is
-    * O(cap · keys) by construction instead of Σ b². One bucket-size
-    * aggregate + one co-partitioned meta join-back feed both
-    * branches. */
-  def candidatesHybridFromKeys(keys: DataFrame, cap: Int): DataFrame = {
-    val meta = keys.groupBy("bp", "k")
-      .agg(count(lit(1)).as("b"), min("doc_id").as("anchor"))
-    val sized = keys.join(meta, Seq("bp", "k"))
-    val small = sized.filter(col("b") <= cap)
-    val smallPairs = small.select(col("bp"), col("k"), col("doc_id").as("d1"))
-      .join(small.select(col("bp").as("bp2"), col("k").as("k2"),
-        col("doc_id").as("d2")),
-        col("bp") === col("bp2") && col("k") === col("k2") &&
-          col("d1") < col("d2"))
-      .select("d1", "d2")
-    val largePairs = sized.filter(col("b") > cap)
-      .filter(col("doc_id") =!= col("anchor"))
-      .select(col("anchor").as("d1"), col("doc_id").as("d2"))
-    smallPairs.unionByName(largePairs).distinct()
+  /** How [[banded]] pairs the members of one (bp, k) bucket of b docs:
+    *   - b <= `cap`: every two members (exact, lossless for >= 14/16 —
+    *     pigeonhole: 2 mismatching lanes break at most 2 of the 4 bands,
+    *     so a >= 14/16 pair shares at least one full band PAIR);
+    *   - b > `cap`: each member with the bucket's minimum doc_id (the
+    *     anchor star, Σ(b−1) rows — a template flood verifies against
+    *     its anchor), and with `chain` also each member with its
+    *     successor in (mh0..mh15, doc_id) order (Hernández & Stolfo's
+    *     sorted neighbourhood — a drift chain's true links are adjacent
+    *     in signature order; x88 gates zero lost pairs on x87's fixture).
+    * Worst-case candidate volume is O(cap · keys), data-independently. */
+  final case class Rule(cap: Int, chain: Boolean)
+
+  object Rule {
+    /** All pairs in every bucket — l2/x12/x36/x80's lossless rule. */
+    val Exact: Rule = Rule(Int.MaxValue, chain = false)
+    /** The anchor star in every bucket (x85). */
+    val Anchor: Rule = Rule(1, chain = false)
+    /** Exact below [[DefaultCap]], anchor star + SNM chain above it. */
+    val Deployed: Rule = Rule(DefaultCap, chain = true)
   }
 
-  /** HYBRID candidates for the ASYMMETRIC consumers (batch-vs-corpus:
-    * DedupIndex.maintainClusters and dedupBatch) — the x86 rule with
-    * the batch×corpus shape preserved (VERDICT r12 task 1). Both
-    * inputs are (doc_id, bp, k) band-pair key rows; output is distinct
-    * (d1, d2) with d1 always a PROBE doc. Bucket size is measured over
-    * `baseKeys` (the side a template corpus floods — for cluster
-    * maintenance base is index ∪ batch, for batch dedup it is the
-    * index alone):
-    *   - buckets <= cap: exact all-pairs probe×base within the bucket
-    *     (lossless, and bounded by cap rows per probe key — worst-case
-    *     volume O(cap · probe-keys) data-independently);
-    *   - buckets > cap: the min-id anchor star restricted to
-    *     probe-involving pairs — every probe member pairs with the
-    *     bucket's base-side anchor (Σ probe-occupancy rows), and when
-    *     the anchor is ITSELF a probe doc it stars out to the whole
-    *     bucket (Σ(b−1) rows — without this leg a batch doc that
-    *     happens to be a flooded bucket's minimum id would go
-    *     unlabeled even when it verifies against the cluster). Each
-    *     escalated bucket therefore costs at most b−1 candidates —
-    *     linear in occupancy, never C(b,2).
-    * Plan shape: one (bp, k) partial aggregate for bucket meta + three
-    * co-partitioned join-backs feeding a union; nothing anywhere is
-    * quadratic in bucket size. */
-  def candidatesHybridAsymFromKeys(probeKeys: DataFrame, baseKeys: DataFrame,
-      cap: Int): DataFrame = {
-    val meta = baseKeys.groupBy("bp", "k")
-      .agg(count(lit(1)).as("b"), min("doc_id").as("anchor"))
-    val pk = probeKeys.toDF("d1", "bp", "k")
-    val bk = baseKeys.toDF("d2", "bp", "k")
-    val esc = meta.filter(col("b") > cap)
-    val smallPairs = pk
-      .join(bk.join(meta.filter(col("b") <= cap).select("bp", "k"), Seq("bp", "k")),
-        Seq("bp", "k"))
-      .filter(col("d1") =!= col("d2"))
-      .select("d1", "d2")
-    val escProbe = pk.join(esc.select("bp", "k", "anchor"), Seq("bp", "k"))
-      .filter(col("d1") =!= col("anchor"))
-      .select(col("d1"), col("anchor").as("d2"))
-    val probeAnchored = esc
-      .join(probeKeys.select(col("doc_id").as("anchor")).distinct(),
-        Seq("anchor"), "left_semi")
-    val escAnchor = bk.join(probeAnchored.select("bp", "k", "anchor"), Seq("bp", "k"))
-      .filter(col("d2") =!= col("anchor"))
-      .select(col("anchor").as("d1"), col("d2"))
-    smallPairs.unionByName(escProbe).unionByName(escAnchor).distinct()
-  }
-
-  /** SNM successor pairs over escalated-bucket member rows carrying
-    * their [[bandPairKeysSorted]] r0..r3 sort lanes: within each
-    * (bp, k) bucket, members sort by their FULL 16-lane signature (then
-    * doc_id) and each pairs with its immediate successor — the classic
-    * sorted-neighborhood move (Hernández & Stolfo's merge/purge),
-    * applied inside a bucket whose members already share 8 lanes.
-    * Exactly b−1 rows per bucket; one window over the escalated rows
-    * only. Signature order is the similarity-correlated key the bucket
-    * gives us for free: docs whose remaining lanes drift apart
-    * gradually (a template chain) sort adjacently, so consecutive
-    * pairs recover precisely the links the anchor star loses.
+  /** The banded near-duplicate rule: pairs of docs that share a (bp, k)
+    * band-pair bucket, chosen per bucket by `rule`, whose signatures
+    * agree on at least `threshold` of the 16 lanes. Output is distinct
+    * (d1, d2, matches), `matches` the pair's full 16-lane agreement.
     *
-    * Round-14 shape (VERDICT r13 task 1): the sort lanes RIDE THE KEY
-    * ROWS — round 13 joined the escalated members back to the full
-    * signature table, which re-scanned and shuffled the whole (at the
-    * deployed sites, artifact-backed) sig table per call even when few
-    * or no buckets escalated, the dominant term in the b13/b14/b21
-    * bench breaches. Now the leg costs exactly a window over the
-    * already-materialized escalated rows: when nothing escalates it is
-    * free, and the 16-lead-column comparator is 4 packed longs. */
-  private def chainSuccessorPairs(members: DataFrame): DataFrame = {
+    * `base` (and `probe`) are [[bandPairKeysSorted]] rows.
+    *   - `probe = None` (symmetric): pairs within `base`; the all-pairs
+    *     and anchor legs emit d1 < d2, the chain leg (predecessor,
+    *     successor).
+    *   - `probe = Some(p)` (batch against corpus): only pairs with one
+    *     probe end and one base end, the probe end as d1; bucket size
+    *     and anchor are measured over `base`, and an anchor that is
+    *     itself a probe doc stars out to its whole bucket. Probe docs
+    *     join the chain order (a batch doc sorts between its nearest
+    *     base neighbours), but a successor pair is kept only when one
+    *     end is a probe doc and the other a base doc — for probe ⊆ base
+    *     (cluster maintenance) that is every pair touching the probe,
+    *     for disjoint sides (batch dedup) batch–batch links drop.
+    *
+    * Threshold 0 yields the bare candidate set: two docs in one bucket
+    * share its 8 keyed lanes, so `matches` is always >= 8. That also
+    * makes the verify row-local — 8 + agreement of the carried r0..r3
+    * complement quads — and since a pair's count is the same in every
+    * bucket it shares, verifying per leg commutes with the distinct.
+    * With an unbounded cap no bucket aggregate is built: the plan is
+    * the plain bucket join. */
+  def banded(base: DataFrame, probe: Option[DataFrame], rule: Rule,
+      threshold: Int): DataFrame = {
+    val legs = (probe, rule.cap) match {
+      case (None, Int.MaxValue) => Seq(pairsWithin(base, base, _ < _))
+      case (Some(p), Int.MaxValue) => Seq(pairsWithin(p, base, _ =!= _))
+      case (None, cap) =>
+        val sized = base.join(bucketMeta(base), Seq("bp", "k"))
+        val esc = sized.filter(col("b") > cap)
+        val small = sized.filter(col("b") <= cap)
+        Seq(pairsWithin(small, small, _ < _), anchorStar(esc, probeFirst = false)) ++
+          (if (rule.chain) Seq(snmChain(esc, flagged = false)) else Nil)
+      case (Some(p), cap) =>
+        val meta = bucketMeta(base)
+        // base ⋈ meta once; every base-side leg filters this one join
+        val sized = base.join(meta, Seq("bp", "k"))
+        val escBase = sized.filter(col("b") > cap)
+        // probe rows of escalated buckets, carrying the anchor's quads:
+        // they feed the probe→anchor star and the chain members
+        val escProbe = p.join(meta.filter(col("b") > cap)
+          .select(Seq(col("bp"), col("k"), col("anchor")) ++ quad("q"): _*), Seq("bp", "k"))
+        val probeAnchored = escBase.join(
+          p.select(col("doc_id").as("anchor")).distinct(), Seq("anchor"), "left_semi")
+        // chain members: escalated base ∪ probe rows, merged per doc
+        // with p = "is a probe doc" and q = "is a base doc"
+        def flagged(rows: DataFrame, isProbe: Long) =
+          rows.select(Seq(col("bp"), col("k"), col("doc_id"),
+            lit(isProbe).as("p"), lit(1L - isProbe).as("q")) ++ quad("r"): _*)
+        val members = flagged(escBase, 0L).unionByName(flagged(escProbe, 1L))
+          .groupBy(Seq(col("bp"), col("k"), col("doc_id")) ++ quad("r"): _*)
+          .agg(max(col("p")).as("p"), max(col("q")).as("q"))
+        Seq(pairsWithin(p, sized.filter(col("b") <= cap), _ =!= _),
+          anchorStar(escProbe, probeFirst = true),
+          anchorStar(probeAnchored, probeFirst = false)) ++
+          (if (rule.chain) Seq(snmChain(members, flagged = true)) else Nil)
+    }
+    legs.reduce(_ unionByName _).filter(col("matches") >= threshold).distinct()
+  }
+
+  /** Per (bp, k) bucket: size b, anchor (min doc_id) and the anchor's
+    * r0..r3 as q0..q3. min_by keeps every buffer slot a fixed-width
+    * long (doc_id is unique per bucket, so it is deterministic), so the
+    * aggregate stays a whole-stage HashAggregate; a min(struct(...))
+    * spelling forces the sort-based object aggregate. */
+  private def bucketMeta(keys: DataFrame): DataFrame =
+    keys.groupBy("bp", "k").agg(count(lit(1)).as("b"),
+      min("doc_id").as("anchor") +:
+        (0 until 4).map(i => min_by(col(s"r$i"), col("doc_id")).as(s"q$i")): _*)
+
+  /** Pairs of a `left` and a `right` row in one bucket, d1 from `left`,
+    * kept where `keep(d1, d2)`. */
+  private def pairsWithin(left: DataFrame, right: DataFrame,
+      keep: (Column, Column) => Column): DataFrame =
+    left.select(Seq(col("bp"), col("k"), col("doc_id").as("d1")) ++ quadAs("x"): _*)
+      .join(right.select(Seq(col("bp").as("bp2"), col("k").as("k2"),
+          col("doc_id").as("d2")) ++ quadAs("y"): _*),
+        col("bp") === col("bp2") && col("k") === col("k2") && keep(col("d1"), col("d2")))
+      .select(col("d1"), col("d2"), packedLaneAgree("x", "y").as("matches"))
+
+  /** Each row's doc paired with its bucket's anchor (rows carry
+    * `anchor` and its quads q0..q3); the anchor is d1 unless
+    * `probeFirst`. */
+  private def anchorStar(rows: DataFrame, probeFirst: Boolean): DataFrame = {
+    val (d1, d2) =
+      if (probeFirst) (col("doc_id"), col("anchor")) else (col("anchor"), col("doc_id"))
+    rows.filter(col("doc_id") =!= col("anchor"))
+      .select(d1.as("d1"), d2.as("d2"), packedLaneAgree("r", "q").as("matches"))
+  }
+
+  /** Each bucket member paired with its successor in (r0..r3, doc_id)
+    * order — within a bucket the packed key pins the 8 keyed lanes, so
+    * that IS the (mh0..mh15, doc_id) order, at a quarter of the
+    * comparator width and with no signature re-join. One window over
+    * the escalated rows only: free when nothing escalates. `flagged`
+    * members carry p (probe doc) and q (base doc): a pair is kept only
+    * with one probe end and one base end, the probe end as d1. */
+  private def snmChain(members: DataFrame, flagged: Boolean): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("bp", "k")
       .orderBy(col("r0"), col("r1"), col("r2"), col("r3"), col("doc_id"))
-    members
-      .select(col("bp"), col("k"), col("doc_id").as("d1"),
-        lead("doc_id", 1).over(w).as("d2"))
-      .filter(col("d2").isNotNull)
-      .select("d1", "d2")
+    def next(c: String) = lead(col(c), 1).over(w)
+    val flags =
+      if (flagged) Seq(col("p").as("pa"), col("q").as("qa"), next("p").as("pb"), next("q").as("qb"))
+      else Nil
+    val succ = members
+      .select(Seq(col("doc_id").as("ca"), next("doc_id").as("cb")) ++ flags ++
+        quadAs("x") ++ (0 until 4).map(i => next(s"r$i").as(s"y$i")): _*)
+      .filter(col("cb").isNotNull)
+    val agree = packedLaneAgree("x", "y").as("matches")
+    if (!flagged) succ.select(col("ca").as("d1"), col("cb").as("d2"), agree)
+    else {
+      val fwd = col("pa") === 1L && col("qb") === 1L
+      succ.filter(fwd || (col("pb") === 1L && col("qa") === 1L))
+        .select(when(fwd, col("ca")).otherwise(col("cb")).as("d1"),
+          when(fwd, col("cb")).otherwise(col("ca")).as("d2"), agree)
+    }
   }
 
-  /** HYBRID + CHAIN candidate pairs — the DEPLOYED escalation rule
-    * (round 13): [[candidatesHybridFromKeys]]'s small-bucket all-pairs
-    * and escalated anchor star, PLUS the [[chainSuccessorPairs]] SNM
-    * leg over each escalated bucket. Escalated volume is 2(b−1) per
-    * bucket — still linear, never C(b,2) — and the recall loss x87
-    * measures for the anchor-only rule closes: a star-shaped template
-    * flood is recovered through the anchor (every member verifies
-    * against it), a drift CHAIN is recovered through the
-    * signature-sorted successor pairs (adjacent-in-order members are
-    * the chain's true links — x88 gates zero lost pairs on x87's
-    * adversarial fixture). `keys` must be [[bandPairKeysSorted]] rows
-    * (doc_id, bp, k, r0..r3) — the chain order derives from the
-    * carried lanes; no signature re-join anywhere. */
-  def candidatesHybridChainFromKeys(keys: DataFrame, cap: Int): DataFrame = {
-    val meta = keys.groupBy("bp", "k")
-      .agg(count(lit(1)).as("b"), min("doc_id").as("anchor"))
-    val sized = keys.join(meta, Seq("bp", "k"))
-    val small = sized.filter(col("b") <= cap)
-    val smallPairs = small.select(col("bp"), col("k"), col("doc_id").as("d1"))
-      .join(small.select(col("bp").as("bp2"), col("k").as("k2"),
-        col("doc_id").as("d2")),
-        col("bp") === col("bp2") && col("k") === col("k2") &&
-          col("d1") < col("d2"))
-      .select("d1", "d2")
-    val escRows = sized.filter(col("b") > cap)
-    val starPairs = escRows.filter(col("doc_id") =!= col("anchor"))
-      .select(col("anchor").as("d1"), col("doc_id").as("d2"))
-    val chain = chainSuccessorPairs(escRows)
-    smallPairs.unionByName(starPairs).unionByName(chain).distinct()
-  }
-
-  /** [[candidatesHybridChainFromKeys]]'s escalation for the ASYMMETRIC
-    * consumers — [[candidatesHybridAsymFromKeys]]'s three legs plus
-    * the SNM chain leg, computed over (base ∪ probe) member rows of
-    * each escalated bucket and kept only where at least one end is a
-    * probe doc (within-base links are the forest's job in maintenance
-    * and unusable in batch dedup). The probe end is emitted as d1 (the
-    * output contract). Why the probe rows join the ordering even when
-    * probe ⊄ base (batch dedup, where base is the index alone): a
-    * batch doc sorts BETWEEN its nearest index neighbors, so its
-    * successor/predecessor links are exactly the near-matches the
-    * anchor star would miss. Volume: ≤ 2 chain rows per member of an
-    * escalated bucket — the O(cap · probe-keys + Σ_esc b) bound keeps
-    * its shape. Both key tables must be [[bandPairKeysSorted]] rows:
-    * the chain order derives from the carried r0..r3 lanes, never from
-    * a signature re-join. */
-  def candidatesHybridChainAsymFromKeys(probeKeys: DataFrame,
-      baseKeys: DataFrame, cap: Int): DataFrame = {
-    val rs = (0 until 4).map(i => col(s"r$i"))
-    val meta = baseKeys.groupBy("bp", "k")
-      .agg(count(lit(1)).as("b"), min("doc_id").as("anchor"))
-    val pk = probeKeys.withColumnRenamed("doc_id", "d1")
-    val bk = baseKeys.withColumnRenamed("doc_id", "d2")
-    val esc = meta.filter(col("b") > cap)
-    // bk ⋈ meta once; every base-side leg filters this one join, so
-    // the underlying key/meta exchanges are built once and reused
-    val bkSized = bk.join(meta, Seq("bp", "k"))
-    val smallPairs = pk
-      .join(bkSized.filter(col("b") <= cap).select("bp", "k", "d2"),
-        Seq("bp", "k"))
-      .filter(col("d1") =!= col("d2"))
-      .select("d1", "d2")
-    // probe rows in escalated buckets, kept with their keys: feed both
-    // the anchor-pair leg and the chain-member union
-    val escProbeRows = pk.join(esc.select("bp", "k", "anchor"), Seq("bp", "k"))
-    val escProbe = escProbeRows
-      .filter(col("d1") =!= col("anchor"))
-      .select(col("d1"), col("anchor").as("d2"))
-    val probeIds = probeKeys.select("doc_id").distinct()
-    val escBaseRows = bkSized.filter(col("b") > cap)
-    // the whole-bucket star fires only where the bucket's anchor is
-    // itself a probe doc (semi-join on the carried anchor column)
-    val escAnchor = escBaseRows
-      .join(probeIds.select(col("doc_id").as("anchor")), Seq("anchor"), "left_semi")
-      .filter(col("d2") =!= col("anchor"))
-      .select(col("anchor").as("d1"), col("d2"))
-    // chain members = escalated base rows ∪ escalated probe rows —
-    // both already materialized for the legs above (reused exchanges);
-    // the distinct shuffles only escalated-bucket member rows (tiny by
-    // definition at any corpus size), never the full key set. The
-    // r0..r3 sort lanes ride along, so the chain needs no sig re-join.
-    val members = escBaseRows
-      .select(col("d2").as("doc_id") +: col("bp") +: col("k") +: rs: _*)
-      .unionByName(escProbeRows
-        .select(col("d1").as("doc_id") +: col("bp") +: col("k") +: rs: _*))
-      .distinct()
-    val p1 = probeIds.toDF("d1").withColumn("p1", lit(true))
-    val p2 = probeIds.toDF("d2").withColumn("p2", lit(true))
-    val chain = chainSuccessorPairs(members)
-      .join(p1, Seq("d1"), "left")
-      .join(p2, Seq("d2"), "left")
-      .filter(coalesce(col("p1"), lit(false)) || coalesce(col("p2"), lit(false)))
-      .select(
-        when(coalesce(col("p1"), lit(false)), col("d1")).otherwise(col("d2")).as("c1"),
-        when(coalesce(col("p1"), lit(false)), col("d2")).otherwise(col("d1")).as("c2"))
-      .toDF("d1", "d2")
-    smallPairs.unionByName(escProbe).unionByName(escAnchor).unionByName(chain)
-      .distinct()
-  }
-
-  /** 16-lane agreement count computed ROW-LOCALLY from two carried
-    * complement-lane quads riding one bucket row (round 15, guide §8:
-    * shuffle keys and metadata, never re-attach the payload). Both
-    * rows of a candidate pair share a (bp, k) bucket, and the packed
-    * key's injectivity pins the 8 keyed lanes EQUAL — so total
-    * agreement = 8 + agreement over the 8 complement lanes, which ride
-    * the key rows as r0..r3 (two lanes per long, a·2³¹+b with both
-    * < 2³¹). `x`/`y` name the two sides' quad column prefixes
-    * (x0..x3 / y0..y3). Pure comparisons and adds — whole-stage
-    * codegen, no join anywhere. */
+  /** 16-lane agreement of two rows of one bucket, from their carried
+    * complement quads: the shared packed key pins the 8 keyed lanes
+    * equal, so agreement = 8 + agreement over the 8 complement lanes,
+    * which ride as r0..r3 (two lanes per long, a·2³¹+b with both
+    * < 2³¹). `x`/`y` name the two sides' quad column prefixes. Pure
+    * comparisons and adds — whole-stage codegen, no join. */
   private def packedLaneAgree(x: String, y: String): Column =
     lit(8L) + (0 until 4).map { j =>
       when(shiftright(col(s"$x$j"), 31) === shiftright(col(s"$y$j"), 31), 1L)
@@ -411,280 +292,36 @@ object MinHash {
           col(s"$y$j").bitwiseAND(lit(2147483647L)), 1L).otherwise(0L)
     }.reduce(_ + _)
 
+  private def quad(prefix: String): Seq[Column] = (0 until 4).map(i => col(s"$prefix$i"))
+
   private def quadAs(prefix: String): Seq[Column] =
     (0 until 4).map(i => col(s"r$i").as(s"$prefix$i"))
 
-  /** [[candidatesHybridChainFromKeys]] WITH the >= `threshold`/16
-    * verify FUSED into each candidate leg — the deployed symmetric
-    * resolve (DedupIndex.clusterLabels). Every candidate pair forms
-    * inside a shared (bp, k) bucket, so [[packedLaneAgree]] computes
-    * the pair's FULL 16-lane agreement from the carried r0..r3 quads
-    * alone: the two doc_id-keyed joins back to the signature table
-    * (and their exchanges, and the second artifact scan they forced)
-    * disappear, and the post-union distinct shuffles only SURVIVING
-    * pairs instead of every candidate. Output = exactly
-    * agreeAtLeast(candidatesHybridChainFromKeys(keys, cap), sig, sig,
-    * threshold): a pair's agreement count is bucket-independent
-    * (8 shared + complement is the same total in every bucket the
-    * pair co-occupies), so per-occurrence verification commutes with
-    * the distinct — DedupSpec pins the parity. `keys` must be
-    * [[bandPairKeysSorted]] rows. */
-  def verifiedHybridChainFromKeys(keys: DataFrame, cap: Int,
-      threshold: Int): DataFrame = {
-    // anchor quads via min_by (doc_id unique per bucket, so min_by is
-    // deterministic): every buffer slot stays a fixed-width long, so
-    // the bucket aggregate keeps whole-stage HashAggregate — a
-    // min(struct(...)) spelling of the same thing forces the sort/
-    // object aggregate path with interpreted struct ordering
-    val meta = keys.groupBy("bp", "k").agg(
-      count(lit(1)).as("b"),
-      min("doc_id").as("anchor") +:
-        (0 until 4).map(i => min_by(col(s"r$i"), col("doc_id")).as(s"q$i")): _*)
-    val sized = keys.join(meta, Seq("bp", "k"))
-    val small = sized.filter(col("b") <= cap)
-    val smallPairs = small
-      .select(Seq(col("bp"), col("k"), col("doc_id").as("d1")) ++ quadAs("x"): _*)
-      .join(small.select(Seq(col("bp").as("bp2"), col("k").as("k2"),
-          col("doc_id").as("d2")) ++ quadAs("y"): _*),
-        col("bp") === col("bp2") && col("k") === col("k2") &&
-          col("d1") < col("d2"))
-      .filter(packedLaneAgree("x", "y") >= threshold)
-      .select("d1", "d2")
-    val esc = sized.filter(col("b") > cap)
-    val starPairs = esc.filter(col("doc_id") =!= col("anchor"))
-      .filter(packedLaneAgree("r", "q") >= threshold)
-      .select(col("anchor").as("d1"), col("doc_id").as("d2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bp", "k")
-      .orderBy(col("r0"), col("r1"), col("r2"), col("r3"), col("doc_id"))
-    val chain = esc
-      .select(Seq(col("bp"), col("k"), col("doc_id").as("d1"),
-        lead("doc_id", 1).over(w).as("d2")) ++ quadAs("x") ++
-        (0 until 4).map(i => lead(col(s"r$i"), 1).over(w).as(s"y$i")): _*)
-      .filter(col("d2").isNotNull)
-      .filter(packedLaneAgree("x", "y") >= threshold)
-      .select("d1", "d2")
-    smallPairs.unionByName(starPairs).unionByName(chain).distinct()
-  }
+  /** [[banded]]'s (d1, d2) candidates under the deployed rule shape,
+    * kept because the operations benchmark (opsbench/harness) calls
+    * this name. */
+  def candidatesHybridChainAsymFromKeys(probeKeys: DataFrame,
+      baseKeys: DataFrame, cap: Int): DataFrame =
+    verifiedHybridChainAsymFromKeys(probeKeys, baseKeys, cap, 0)
 
-  /** [[candidatesHybridChainAsymFromKeys]] WITH the verify fused into
-    * each leg — the deployed asymmetric serve
-    * (DedupIndex.maintainClusters / dedupBatch). Same carried-quad
-    * arithmetic as [[verifiedHybridChainFromKeys]]; output = exactly
-    * agreeAtLeast(candidatesHybridChainAsymFromKeys(probe, base, cap),
-    * probeSig, baseSig, threshold) with d1 the probe end. Beyond the
-    * dropped verify joins, the chain leg's probe-end flag now RIDES
-    * the member rows (a bool column folded by the member aggregate)
-    * instead of two post-hoc joins against the probe id set. At scale
-    * this makes candidate generation + verification touch the base
-    * signature artifact exactly ONCE (the key projection) — nothing
-    * downstream re-shuffles or re-scans it. */
+  /** [[banded]]'s (d1, d2) verified pairs under the deployed rule
+    * shape, kept because the operations benchmark (opsbench/harness)
+    * calls this name. */
   def verifiedHybridChainAsymFromKeys(probeKeys: DataFrame,
-      baseKeys: DataFrame, cap: Int, threshold: Int): DataFrame = {
-    // same fixed-width min_by anchor-quad trick as the symmetric form
-    val meta = baseKeys.groupBy("bp", "k").agg(
-      count(lit(1)).as("b"),
-      min("doc_id").as("anchor") +:
-        (0 until 4).map(i => min_by(col(s"r$i"), col("doc_id")).as(s"q$i")): _*)
-    val pk = probeKeys
-      .select(Seq(col("bp"), col("k"), col("doc_id").as("d1")) ++ quadAs("x"): _*)
-    val bkSized = baseKeys
-      .select(Seq(col("bp"), col("k"), col("doc_id").as("d2")) ++ quadAs("y"): _*)
-      .join(meta, Seq("bp", "k"))
-    val smallPairs = pk
-      .join(bkSized.filter(col("b") <= cap)
-          .select(Seq(col("bp"), col("k"), col("d2")) ++
-            (0 until 4).map(i => col(s"y$i")): _*),
-        Seq("bp", "k"))
-      .filter(col("d1") =!= col("d2"))
-      .filter(packedLaneAgree("x", "y") >= threshold)
-      .select("d1", "d2")
-    val esc = meta.filter(col("b") > cap)
-      .select(Seq(col("bp"), col("k"), col("anchor")) ++
-        (0 until 4).map(i => col(s"q$i")): _*)
-    // probe rows in escalated buckets, with their quads AND the
-    // anchor's: feed the anchor-pair leg and the chain-member union
-    val escProbeRows = pk.join(esc, Seq("bp", "k"))
-    val escProbe = escProbeRows
-      .filter(col("d1") =!= col("anchor"))
-      .filter(packedLaneAgree("x", "q") >= threshold)
-      .select(col("d1"), col("anchor").as("d2"))
-    val probeIds = probeKeys.select("doc_id").distinct()
-    val escBaseRows = bkSized.filter(col("b") > cap)
-    val escAnchor = escBaseRows
-      .join(probeIds.select(col("doc_id").as("anchor")), Seq("anchor"), "left_semi")
-      .filter(col("d2") =!= col("anchor"))
-      .filter(packedLaneAgree("y", "q") >= threshold)
-      .select(col("anchor").as("d1"), col("d2"))
-    // chain members = escalated base ∪ probe rows with a carried
-    // probe-end flag; the merge aggregate replaces the old distinct
-    // (identical key set — a doc present on both sides carries the
-    // same quads, so the old distinct merged it too) and the flag
-    // replaces the two post-hoc probe-id joins.
-    val members = escBaseRows
-      .select(Seq(col("bp"), col("k"), col("d2").as("doc_id"), lit(0L).as("p")) ++
-        (0 until 4).map(i => col(s"y$i").as(s"r$i")): _*)
-      .unionByName(escProbeRows
-        .select(Seq(col("bp"), col("k"), col("d1").as("doc_id"), lit(1L).as("p")) ++
-          (0 until 4).map(i => col(s"x$i").as(s"r$i")): _*))
-      .groupBy(Seq(col("bp"), col("k"), col("doc_id")) ++
-        (0 until 4).map(i => col(s"r$i")): _*)
-      .agg(max(col("p")).as("p"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bp", "k")
-      .orderBy(col("r0"), col("r1"), col("r2"), col("r3"), col("doc_id"))
-    val chain = members
-      .select(Seq(col("doc_id").as("ca"), col("p").as("pa"),
-        lead("doc_id", 1).over(w).as("cb"),
-        lead(col("p"), 1).over(w).as("pb")) ++ quadAs("x") ++
-        (0 until 4).map(i => lead(col(s"r$i"), 1).over(w).as(s"y$i")): _*)
-      .filter(col("cb").isNotNull && (col("pa") === 1L || col("pb") === 1L))
-      .filter(packedLaneAgree("x", "y") >= threshold)
-      .select(
-        when(col("pa") === 1L, col("ca")).otherwise(col("cb")).as("d1"),
-        when(col("pa") === 1L, col("cb")).otherwise(col("ca")).as("d2"))
-    smallPairs.unionByName(escProbe).unionByName(escAnchor).unionByName(chain)
-      .distinct()
-  }
+      baseKeys: DataFrame, cap: Int, threshold: Int): DataFrame =
+    banded(baseKeys, Some(probeKeys), Rule(cap, chain = true), threshold).select("d1", "d2")
 
-  /** [[candidatesPaired]] + the >= `threshold`/16 verify fused
-    * in-bucket, emitting (d1, d2, matches) with d1 < d2 — the
-    * uncapped all-pairs form for consumers whose rule has no
-    * escalation (minhashPairs: l2/x12/x36). Same carried-quad
-    * arithmetic and the same equivalence argument as
-    * [[verifiedHybridChainFromKeys]]; `matches` is the pair's full
-    * 16-lane agreement (bucket-independent), so the distinct carries
-    * it unchanged. `keys` must be [[bandPairKeysSorted]] rows. */
-  def verifiedPairedFromKeys(keys: DataFrame, threshold: Int): DataFrame =
-    keys.select(Seq(col("bp"), col("k"), col("doc_id").as("d1")) ++ quadAs("x"): _*)
-      .join(keys.select(Seq(col("bp").as("bp2"), col("k").as("k2"),
-          col("doc_id").as("d2")) ++ quadAs("y"): _*),
-        col("bp") === col("bp2") && col("k") === col("k2") &&
-          col("d1") < col("d2"))
-      .select(col("d1"), col("d2"), packedLaneAgree("x", "y").as("matches"))
-      .filter(col("matches") >= threshold)
-      .distinct()
-
-  /** [[candidatesHybridFromKeys]] + fused verify — the NO-CHAIN
-    * hybrid rule (x86's gated escalation shape: small buckets exact
-    * all-pairs, flooded buckets anchor star, no SNM leg). Output =
-    * agreeAtLeast(candidatesHybridFromKeys(keys, cap), sig, sig,
-    * threshold); `keys` must be [[bandPairKeysSorted]] rows. */
-  def verifiedHybridFromKeys(keys: DataFrame, cap: Int,
-      threshold: Int): DataFrame = {
-    val meta = keys.groupBy("bp", "k").agg(
-      count(lit(1)).as("b"),
-      min("doc_id").as("anchor") +:
-        (0 until 4).map(i => min_by(col(s"r$i"), col("doc_id")).as(s"q$i")): _*)
-    val sized = keys.join(meta, Seq("bp", "k"))
-    val small = sized.filter(col("b") <= cap)
-    val smallPairs = small
-      .select(Seq(col("bp"), col("k"), col("doc_id").as("d1")) ++ quadAs("x"): _*)
-      .join(small.select(Seq(col("bp").as("bp2"), col("k").as("k2"),
-          col("doc_id").as("d2")) ++ quadAs("y"): _*),
-        col("bp") === col("bp2") && col("k") === col("k2") &&
-          col("d1") < col("d2"))
-      .filter(packedLaneAgree("x", "y") >= threshold)
-      .select("d1", "d2")
-    val starPairs = sized.filter(col("b") > cap)
-      .filter(col("doc_id") =!= col("anchor"))
-      .filter(packedLaneAgree("r", "q") >= threshold)
-      .select(col("anchor").as("d1"), col("doc_id").as("d2"))
-    smallPairs.unionByName(starPairs).distinct()
-  }
-
-  /** The asymmetric uncapped form: probe keys x base keys, verify
-    * fused, (d1, d2) with d1 the probe end — the raw batch-vs-corpus
-    * band join + verify (x80's ingest leg) without the two join-backs
-    * to the signature tables. */
-  def verifiedPairedAsymFromKeys(probeKeys: DataFrame, baseKeys: DataFrame,
-      threshold: Int): DataFrame =
-    probeKeys.select(Seq(col("bp"), col("k"), col("doc_id").as("d1")) ++ quadAs("x"): _*)
-      .join(baseKeys.select(Seq(col("bp").as("bp2"), col("k").as("k2"),
-          col("doc_id").as("d2")) ++ quadAs("y"): _*),
-        col("bp") === col("bp2") && col("k") === col("k2") &&
-          col("d1") =!= col("d2"))
-      .filter(packedLaneAgree("x", "y") >= threshold)
-      .select("d1", "d2")
-      .distinct()
-
-  /** Keep the candidate pairs whose signatures agree on >= `threshold`
-    * of the 16 lanes — the exact-verify step every banded consumer runs
-    * after candidate generation. `cand`'s first column joins `left`'s
-    * doc_id, its second joins `right`'s (the two sides differ for
-    * asymmetric batch-vs-corpus consumers); both sides must be wide
-    * (doc_id, mh0..mh15) tables. Two doc_id-keyed 1:1 joins + a
-    * row-local lane count — cost tracks the candidate set. */
-  def agreeAtLeast(cand: DataFrame, left: DataFrame, right: DataFrame,
-      threshold: Int): DataFrame = {
-    val Array(c1, c2) = cand.columns.take(2)
-    val s1 = left.toDF("s1_doc" +: (0 until 16).map(i => s"a$i"): _*)
-    val s2 = right.toDF("s2_doc" +: (0 until 16).map(i => s"b$i"): _*)
-    val matches = (0 until 16)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
-      .reduce(_ + _)
-    cand
-      .join(s1, col(c1) === col("s1_doc"))
-      .join(s2, col(c2) === col("s2_doc"))
-      .select(col(c1), col(c2), matches.as("m"))
-      .filter(col("m") >= threshold)
-      .select(c1, c2)
-  }
-
-  /** The C(4,2) = 6 compound band-pair keys per doc: (doc_id, bp, k).
-    * `candidatesPaired` self-joins these; asymmetric consumers (x24's
-    * incremental batch-vs-base dedup) join a filtered slice against
-    * another, which keeps candidate generation proportional to the
-    * small side instead of paying for every within-base pair.
-    *
-    * `k` is the 8 keyed lanes packed EXACTLY into a struct of 4 longs,
-    * two lanes per long as a·2³¹ + b (lanes are < P < 2³¹, so the
-    * packing is injective): struct equality on k IS lane-8-tuple
-    * equality — the same buckets, provably, as the former comma-joined
-    * decimal STRING key (round 15, guide §2.3 narrower types /
-    * VERDICT r14 item 7: ~90 B of UTF8 digits per key row shuffled
-    * where 32 B of longs carry the same information; the key is
-    * internal-only — every oracle restates bucket semantics over band
-    * VALUES, never key text — and DedupSpec pins the bucket parity).
-    * Callers must pre-filter NULL signatures (sigOf / filter(c > 0)),
-    * the same contract as before: an all-NULL signature row would pair
-    * quadratically under the string key and never-match under the
-    * packed one — every shipped caller filters them upstream. */
-  def bandPairKeys(sig: DataFrame): DataFrame = {
-    val withPk = sig.select(col("doc_id") +: (0 until 8).map { p =>
-      (col(s"mh${2 * p}") * 2147483648L + col(s"mh${2 * p + 1}")).as(s"p$p")
-    }: _*)
-    val pairKeys = for { i <- 0 until 4; j <- (i + 1) until 4 } yield
-      struct(lit(4 * i + j).as("bp"),
-        struct(col(s"p${2 * i}").as("k0"), col(s"p${2 * i + 1}").as("k1"),
-          col(s"p${2 * j}").as("k2"), col(s"p${2 * j + 1}").as("k3")).as("k"))
-    withPk
-      .select(col("doc_id"), explode(array(pairKeys: _*)).as("e"))
-      .select(col("doc_id"), col("e.bp").as("bp"), col("e.k").as("k"))
-  }
-
-  /** [[bandPairKeys]] WITH the chain leg's sort lanes carried on each
-    * row: (doc_id, bp, k, r0..r3), where r0..r3 are the 8 COMPLEMENT
-    * lanes of band pair bp (the lanes of the two bands NOT in the key)
-    * packed two-per-long as a·2³¹ + b (lanes are < P < 2³¹, so packing
-    * preserves pairwise lexicographic order). Within a (bp, k) bucket
-    * the shared key string pins the two keyed bands' 8 lane values
-    * (comma-joined decimals parse uniquely), so ordering by
-    * (r0..r3, doc_id) is EXACTLY the full-signature
-    * (mh0..mh15, doc_id) order [[chainSuccessorPairs]] is specified
-    * against — the same total order the x88/b28 oracles restate — at
-    * a quarter of the comparator width and with NO join back to the
-    * signature table (VERDICT r13 task 1: that join re-scanned the
-    * artifact-backed sig per deployed call). Row-local projection +
-    * explode, no shuffle; consumers that ignore r0..r3 get them pruned
-    * by Catalyst. 32 extra bytes per key row is the whole cost.
-    *
-    * `k` uses [[bandPairKeys]]'s packed-long struct (round 15): the
-    * keyed bands' p-longs are the SAME packing as the carried r lanes,
-    * so the whole row is doc_id + bp + 8 longs — no string anywhere.
-    * Within a (bp, k) bucket the shared packed key pins the two keyed
-    * bands' 8 lane values exactly as the comma-joined string did
-    * (injective packing), so the (r0..r3, doc_id) order is unchanged. */
+  /** The C(4,2) = 6 band-pair key rows per doc, (doc_id, bp, k,
+    * r0..r3), that [[banded]] buckets on: `k` is the 8 lanes of band
+    * pair bp, r0..r3 the 8 COMPLEMENT lanes (the two bands not in the
+    * key), each packed two per long as a·2³¹ + b. Lanes are < P < 2³¹,
+    * so the packing is injective (struct equality on k IS equality of
+    * the 8 keyed lanes — DedupSpec pins the buckets against the
+    * retired comma-joined string key) and preserves lexicographic
+    * order (so (r0..r3, doc_id) within a bucket is the full-signature
+    * order). Row-local projection + explode, no shuffle. Callers must
+    * pre-filter NULL signatures (sigOf / filter(c > 0)): an all-NULL
+    * row would never match under the packed key. */
   def bandPairKeysSorted(sig: DataFrame): DataFrame = {
     val withPk = sig.select(col("doc_id") +: (0 until 8).map { p =>
       (col(s"mh${2 * p}") * 2147483648L + col(s"mh${2 * p + 1}")).as(s"p$p")

@@ -7,41 +7,23 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Distributed connected components: min-label propagation accelerated
-  * by pointer jumping.
+/** Distributed connected components by alternating large-star /
+  * small-star contraction ([[ConnectedComponents.stars]]).
   *
-  * Each round every ACTIVE node (one that appears in an edge — inert
-  * singletons never enter the loop and are labeled by a final
-  * left-join) adopts the minimum of (a) its own label, (b) its
-  * neighbors' labels, and (c) its label's label — the pointer-jumping
-  * shortcut `lbl ← lbl(lbl)`, which doubles the distance a label has
-  * travelled per round. On a path of length d plain neighbor-min needs
-  * d rounds; with jumping the reach is 2^(r-1), so convergence is
-  * O(log diameter) — the property that makes chain-shaped near-dup
-  * clusters (doc i ≈ doc i+1, typical of template corpora) safe at
-  * 100 TB, where the corpus is huge but the dup GRAPH is small.
-  *
-  * The loop itself runs on RDDs — the one genuinely iterative operator
-  * in the engine, and the one place the DataFrame API is the wrong
-  * tool: Catalyst re-analyzes, re-optimizes and re-codegens the plan
-  * EVERY round (measured ~0.6 s/round of pure driver time at sf0.1,
-  * 10x the actual 0.06 s/round of cluster work), while the RDD loop
-  * replans nothing. The edge list is hash-partitioned once — at a
-  * width RIGHT-SIZED to the measured graph (~64k nodes / 256k edges
-  * per partition, floor 1, cap defaultParallelism), because the dup
-  * graph is usually minuscule next to the corpus and the loop's cost
-  * is per-task driver overhead, not data — labels come back from each
-  * round's reduceByKey with the same partitioner, so the neighbor join
-  * is narrow (zero shuffle) every round: the Pregel shape. Per round
-  * exactly ONE job runs: neighbor + jump label reads, the min-label
-  * reduce, and the convergence check (an accumulator counting changed
-  * labels) all ride the materializing `count()`. The previous round's
-  * blocks are unpersisted (blocking) as soon as the next round lands,
-  * so executor storage holds at most two label snapshots and the
+  * The loop runs on RDDs — the one genuinely iterative operator in the
+  * engine, and the one place the DataFrame API is the wrong tool:
+  * Catalyst re-analyzes, re-optimizes and re-codegens the plan EVERY
+  * round (measured ~0.6 s/round of pure driver time at sf0.1, 10x the
+  * actual 0.06 s/round of cluster work), while the RDD loop replans
+  * nothing. The edge list is hash-partitioned once at a width
+  * RIGHT-SIZED to the measured graph (~256k edges per partition,
+  * floor 1, cap defaultParallelism), because the dup graph is usually
+  * minuscule next to the corpus and the loop's cost is per-task driver
+  * overhead, not data. Each round's superseded edge snapshot is
+  * unpersisted (blocking) as soon as the next lands, so the
   * block-manager endpoint never accumulates removal backlog. No
   * driver-side union-find, no collected adjacency. Per-round wall/GC
-  * timings stream to stderr as `[cc] round=...` for in-suite
-  * diagnosis.
+  * timings stream to stderr as `[cc*] round=...` when tracing is on.
   */
 object ConnectedComponents {
 
@@ -66,37 +48,28 @@ object ConnectedComponents {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
-  /** @param nodes single-column DataFrame of node ids (numeric)
-    * @param edges two-column DataFrame of undirected edges, each pair
-    *              listed once in either direction
-    * @return (id, lbl) with lbl = min node id of the component; every
-    *         id of `nodes` appears exactly once.
-    *
-    * Cache lifecycle: the loop's final label snapshot stays persisted
-    * to back the returned DataFrame, and is released automatically
-    * after the first completed action that consumes the result (its own
-    * [[CacheScope]]; nested transparently inside any enclosing scope) —
-    * library callers get no orphaned RDDs.
-    */
-  def minLabel(nodes: DataFrame, edges: DataFrame): DataFrame =
-    minLabelCounted(nodes, edges)._1
-
   /** Alternating LARGE-STAR / SMALL-STAR connected components (Kiveris
     * et al., "Connected Components in MapReduce and Beyond", SoCC'14)
-    * — the DENSE-graph scale step (VERDICT r10 task 4). [[minLabel]]'s
-    * min-label loop re-reads the FULL edge list every round: on the
-    * near-dup graph that list is the verified pair set, which template
-    * clusters make quadratic in cluster size (sf1.0 measured 22.3M
-    * edges over 36k nodes, ~624/node), so 8 rounds each re-join 22M
-    * edges while fewer than 300 labels still change. The star
-    * algorithm REWRITES the edge list each round — large-star hangs
+    * — the DENSE-graph scale step. A min-label loop re-reads the FULL
+    * edge list every round: on the near-dup graph that list is the
+    * verified pair set, which template clusters make quadratic in
+    * cluster size (sf1.0 measured 22.3M edges over 36k nodes,
+    * ~624/node). The star algorithm REWRITES the edge list each round — large-star hangs
     * every node's larger neighbors onto its neighborhood minimum,
     * small-star re-points its smaller neighbors there — so a dense
     * cluster collapses toward its star (≤ one edge per node) after
     * the first pass and every later round touches a vanishing edge
-    * set. Same contract and return shape as [[minLabel]]; the x12/x36
-    * oracle (label-set equality) is algorithm-independent, and
-    * ConnectedComponentsSpec cross-checks the two loops node for node.
+    * set.
+    *
+    * @param nodes single-column DataFrame of node ids (numeric)
+    * @param edges two-column DataFrame of undirected edges, either
+    *              direction; self-loops and duplicates are absorbed
+    * @return (id, lbl) with lbl = min node id of the component; every
+    *         id of `nodes` appears exactly once. The loop's final edge
+    *         snapshot backs the result and is released after the first
+    *         action that consumes it (its own [[CacheScope]], nested
+    *         transparently inside any enclosing scope).
+    *
     *
     * Implementation notes: edges are kept CANONICAL (hi, lo), each
     * phase is reduceByKey(min) + a co-partitioned JOIN — never a
@@ -126,7 +99,12 @@ object ConnectedComponents {
     val sc = spark.sparkContext
 
     val tFence = System.nanoTime()
-    sc.getExecutorMemoryStatus // drain the block-manager endpoint (see minLabel)
+    // Synchronous round-trip to the block-manager master before any
+    // timing-sensitive work: non-blocking unpersists from earlier
+    // queries queue up on that single-threaded endpoint, and draining
+    // them here surfaces inherited congestion as one visible fence
+    // cost instead of a per-round tax.
+    sc.getExecutorMemoryStatus
     val fenceMs = (System.nanoTime() - tFence) / 1e6
 
     // Canonical (hi, lo) edges, self-loops dropped — NOT deduped here
@@ -217,147 +195,6 @@ object ConnectedComponents {
       .join(active, col("id") === col("aid"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
     val last = e
-    CacheScope.release(() => { last.unpersist(false); () })
-    out
-  }
-
-  /** As `minLabel`, also returning the number of rounds run (the last
-    * round is the fixpoint-confirming one that changes nothing). */
-  private[graft] def minLabelCounted(nodes: DataFrame, edges: DataFrame): (DataFrame, Int) = {
-    var rounds = 0
-    val out = CacheScope.scoped(minLabelBody(nodes, edges, r => rounds = r))
-    (out, rounds)
-  }
-
-  private def minLabelBody(
-      nodes: DataFrame, edges: DataFrame, reportRounds: Int => Unit): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val idCol = nodes.columns.head
-    val Array(srcCol, dstCol) = edges.columns.take(2)
-    val sc = spark.sparkContext
-    val part = new HashPartitioner(sc.defaultParallelism)
-
-    // Synchronous round-trip to the block-manager master BEFORE any
-    // timing-sensitive work: non-blocking unpersists from earlier
-    // queries in a long-lived session queue up on that single-threaded
-    // endpoint, and this loop talks to it every round (persist
-    // registrations, removals). Draining the backlog here makes the
-    // per-round numbers below measure THIS loop, and surfaces inherited
-    // congestion as one visible fence cost instead of a mysterious
-    // per-round tax.
-    val tFence = System.nanoTime()
-    sc.getExecutorMemoryStatus
-    val fenceMs = (System.nanoTime() - tFence) / 1e6
-    val gc0 = gcMillis()
-
-    // (src, tgt) request edges in both directions, partitioned once by
-    // the label owner (src) — every round's neighbor join is narrow.
-    // The edge accumulator piggybacks on the first materializing job;
-    // task retries may overcount, which only nudges a sizing heuristic.
-    val edgeAcc = sc.longAccumulator("cc-edges")
-    val symBySrcWide = edges
-      .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].rdd
-      .flatMap { case (a, b) => edgeAcc.add(2); Iterator((a, b), (b, a)) }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Active nodes (edge endpoints). Initialization already performs
-    // the first neighbor-min round for free: lbl0(v) = min(v, min
-    // neighbor of v) is one reduceByKey over the partitioned edge list
-    // — the values at key v ARE v's neighbors — where a join-based
-    // round would cost the same shuffle plus a join.
-    var prevRdd: RDD[(Long, Long)] = symBySrcWide
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      .mapPartitions(_.map { case (id, minNbr) => (id, math.min(id, minNbr)) },
-        preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nActive = prevRdd.count()
-
-    // Right-size the loop. The dup GRAPH is typically minuscule next to
-    // the corpus (near-dup pairs, not all docs), yet the loop's cost is
-    // dominated by fixed per-task driver overhead: rounds x stages x
-    // partitions tiny tasks — the exact quantity a congested long-lived
-    // driver amplifies. Target ~64k nodes / ~256k edges per partition,
-    // floor 1, cap defaultParallelism: at 100 TB the graph is large and
-    // this keeps full parallelism; at bench scale it collapses ~770
-    // scheduled tasks to ~30. One narrow repartition of the tiny graph
-    // pays for itself within the first round.
-    val nEdges: Long = edgeAcc.value
-    val loopN = math.max(1L, math.max(nActive / 65536L + 1L, nEdges / 262144L + 1L))
-      .min(part.numPartitions.toLong).toInt
-    val loopPart = if (loopN == part.numPartitions) part else new HashPartitioner(loopN)
-    val symBySrc =
-      if (loopPart eq part) symBySrcWide
-      else {
-        val e2 = symBySrcWide.partitionBy(loopPart).persist(StorageLevel.MEMORY_AND_DISK)
-        val l2 = prevRdd.partitionBy(loopPart).persist(StorageLevel.MEMORY_AND_DISK)
-        e2.count(); l2.count()
-        symBySrcWide.unpersist(blocking = true)
-        prevRdd.unpersist(blocking = true)
-        prevRdd = l2
-        e2
-      }
-    trace(f"[cc] init fence_ms=$fenceMs%.0f active=$nActive " +
-      f"edges=$nEdges parts=${loopPart.numPartitions}")
-
-    var rounds = 0
-    var changed = nActive > 0
-    while (changed) {
-      rounds += 1
-      val tRound = System.nanoTime()
-      val gcBefore = gcMillis()
-      val labels = prevRdd
-      // Neighbor reads: co-partitioned narrow join, no shuffle.
-      val nbr = symBySrc.join(labels)
-        .map { case (_, (tgt, lbl)) => (tgt, lbl) }
-      // Pointer-jump reads: node id asks for its label's label. The
-      // request side shuffles (it's keyed by the label), the label side
-      // stays put.
-      val jump = labels.map { case (id, lbl) => (lbl, id) }.join(labels)
-        .map { case (_, (tgt, lbl)) => (tgt, lbl) }
-      // Min-label reduce; each node's own row carries its previous
-      // label so the convergence check needs no extra join. Value =
-      // (candidate lbl, old lbl, hasOld).
-      val self = labels.mapPartitions(
-        _.map { case (id, lbl) => (id, (lbl, lbl, true)) }, preservesPartitioning = true)
-      val upd = (nbr ++ jump).map { case (id, lbl) => (id, (lbl, 0L, false)) }
-      val acc = sc.longAccumulator("cc-changed")
-      val rdd = (self ++ upd)
-        .reduceByKey(loopPart,
-          (x: (Long, Long, Boolean), y: (Long, Long, Boolean)) =>
-            (math.min(x._1, y._1), if (x._3) x._2 else y._2, x._3 || y._3))
-        .mapPartitions(_.map { case (id, (lbl, old, _)) =>
-          if (lbl < old) acc.add(1)
-          (id, lbl)
-        }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      rdd.count() // the round's one job
-      changed = acc.value > 0
-      // Blocking: the previous snapshot is ~one small row per active
-      // node, so waiting is cheap — and it guarantees removal requests
-      // never accumulate on the block-manager endpoint across rounds
-      // (the async variant let a long-lived bench JVM snowball them).
-      prevRdd.unpersist(blocking = true)
-      prevRdd = rdd
-      trace(f"[cc] round=$rounds ms=${(System.nanoTime() - tRound) / 1e6}%.0f " +
-        f"gc_ms=${gcMillis() - gcBefore} changed=${acc.value}")
-    }
-    symBySrc.unpersist(blocking = true)
-    reportRounds(rounds)
-    trace(f"[cc] done rounds=$rounds gc_total_ms=${gcMillis() - gc0}")
-
-    // Inert nodes (no edges) label themselves; actives take the loop's
-    // fixpoint.
-    val active = spark.createDataset(prevRdd).toDF("aid", "lbl")
-    val out = nodes.select(col(idCol).cast("long").as("id"))
-      .join(active, col("id") === col("aid"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
-    // The final snapshot backs the returned DataFrame; the enclosing
-    // scope (always present — minLabelCounted opens one) frees it after
-    // the first action that consumes the result.
-    val last = prevRdd
     CacheScope.release(() => { last.unpersist(false); () })
     out
   }

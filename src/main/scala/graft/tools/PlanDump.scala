@@ -155,10 +155,10 @@ object PlanDump {
     // centered-feature projection.)
     "x81_matryoshka_recall", "x84_rendezvous_rebalance",
     // round 12: x85's capped candidate generation — the thing to read
-    // is the shape between the band-pair key projection and the
-    // verify joins: ONE partial+final HashAggregate pair (the per-
-    // bucket min-id anchors) and one co-partitioned join back on
-    // (bp, k), in place of candidatesPaired's bucket self-join — the
+    // is the shape after the band-pair key projection: ONE
+    // partial+final HashAggregate pair (the per-bucket min-id anchors)
+    // and one co-partitioned join back on (bp, k), in place of
+    // Rule.Exact's bucket self-join — the
     // plan's join output is Σ(b−1) rows by construction, which is the
     // entire bounded-work claim in physical form. b26's forest-fed
     // maintenance — the star rounds run eagerly, so the printed plan

@@ -3,85 +3,49 @@ package graft
 import graft.ops.ConnectedComponents
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Min-label connected components on constructed graphs. */
+/** Star-contraction connected components on constructed graphs, against
+  * a plain-Scala union-find. */
 class ConnectedComponentsSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def run(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val sp = spark
-    import sp.implicits._
-    val got = ConnectedComponents.minLabel(nodes.toDF("id"), edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    releaseLabelSnapshots()
-    got
+  /** node -> min node id of its component. Union by smaller root keeps
+    * every root its component's minimum. */
+  private def unionFind(nodes: Iterable[Long], edges: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
   }
 
-  /** minLabel self-scopes, so its snapshot is released after the first
-    * consuming action — but the release rides the async listener bus;
-    * force-drop anything still pending so suites never interleave. */
-  private def releaseLabelSnapshots(): Unit =
-    TestSpark.releaseAllRdds()
+  private def runStars(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val sp = spark
+    import sp.implicits._
+    val got = ConnectedComponents.stars(nodes.toDF("id"), edges.toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    releaseAllRdds()
+    got
+  }
 
   test("chain + triangle + singletons resolve to component minima") {
     // chain 1-2-3-4 (diameter 3, needs multiple rounds), triangle 10-11-12,
     // singletons 20, 21
-    val got = run(Seq[Long](1, 2, 3, 4, 10, 11, 12, 20, 21),
+    val got = runStars(Seq[Long](1, 2, 3, 4, 10, 11, 12, 20, 21),
       Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 10L -> 11L, 11L -> 12L, 12L -> 10L))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 21L))
   }
 
-  test("1000-node path converges in O(log diameter) rounds via pointer jumping") {
-    val sp = spark
-    import sp.implicits._
-    val n = 1000
-    val nodes = (0L until n.toLong).toDF("id")
-    val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    val (df, rounds) = ConnectedComponents.minLabelCounted(nodes, edges)
-    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == n)
-    assert(got.values.forall(_ == 0L), "every node labels to the path minimum")
-    // pointer jumping reaches 2^(r-1) per round: 11 rounds to cover 999
-    // hops + 1 fixpoint-confirming round. Plain neighbor-min needs ~1000.
-    assert(rounds <= 13, s"expected O(log n) rounds, got $rounds")
-    releaseLabelSnapshots()
-  }
-
-  test("100k-node path (adversarial diameter): log2(d) rounds, bounded state") {
-    // The one 100 TB claim the small graphs above don't cover: a
-    // WORST-CASE diameter graph — a single path of 10^5 nodes
-    // (diameter 99,999; a real near-dup chain this long would mean a
-    // template corpus gone pathological). Plain neighbor-min would need
-    // ~10^5 rounds; pointer jumping must do it in ~log2(d).
-    val sp = spark
-    val n = 100000L
-    val nodes = sp.range(n).toDF("id")
-    val edges = sp.range(n - 1).selectExpr("id AS a", "id + 1 AS b")
-    val (df, rounds) = ConnectedComponents.minLabelCounted(nodes, edges)
-    val got = df.groupBy("lbl").count().collect()
-    assert(got.length == 1 && got.head.getLong(0) == 0L && got.head.getLong(1) == n,
-      "all 100k nodes label to the path minimum")
-    // reach is 2^(r-1) hops after r rounds: 18 rounds cover 99,999 hops,
-    // +1 fixpoint-confirming round; a couple of slack rounds for the
-    // min-label (not max-reach) propagation pattern.
-    assert(rounds <= 21, s"expected ~log2(99999)+1 = 18-19 rounds, got $rounds")
-    assert(rounds >= 10, s"suspiciously few rounds ($rounds) — is the graph wired?")
-    // Bounded state: the loop unpersists each superseded snapshot
-    // blocking-ly; after the consuming action only the final snapshot
-    // (released via the async bus) may linger.
-    releaseLabelSnapshots()
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (sp.sparkContext.getPersistentRDDs.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(sp.sparkContext.getPersistentRDDs.isEmpty,
-      s"persisted RDDs left after 100k-path CC: ${sp.sparkContext.getPersistentRDDs.size}")
-  }
-
-  test("minLabel leaves no persisted RDDs after its result materializes (library caller, no scope)") {
+  test("stars leaves no persisted RDDs after its result materializes (library caller, no scope)") {
     val sp = spark
     import sp.implicits._
     sp.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    val df = ConnectedComponents.minLabel(
+    val df = ConnectedComponents.stars(
       Seq[Long](1, 2, 3, 4).toDF("id"), Seq(1L -> 2L, 3L -> 4L).toDF("a", "b"))
     assert(df.count() == 4)
     // the scope's release fires on the async listener bus — poll, don't assume
@@ -93,26 +57,17 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("edge direction does not matter") {
-    val a = run(Seq[Long](1, 2, 3), Seq(3L -> 2L, 2L -> 1L))
+    val a = runStars(Seq[Long](1, 2, 3), Seq(3L -> 2L, 2L -> 1L))
     assert(a == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
-  private def runStars(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val sp = spark
-    import sp.implicits._
-    val got = ConnectedComponents.stars(nodes.toDF("id"), edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    releaseLabelSnapshots()
-    got
-  }
-
-  test("stars: chain + triangle + singletons + direction-blind, == minLabel") {
+  test("stars: chain + triangle + singletons + direction-blind == union-find") {
     val nodes = Seq[Long](1, 2, 3, 4, 10, 11, 12, 20, 21)
     val edges = Seq(2L -> 1L, 2L -> 3L, 4L -> 3L, 10L -> 11L, 11L -> 12L, 12L -> 10L)
     val got = runStars(nodes, edges)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 21L))
-    assert(got == run(nodes, edges))
+    assert(got == unionFind(nodes, edges))
   }
 
   test("stars: duplicate and self-loop edges are absorbed") {
@@ -136,10 +91,10 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert((0L until n).forall(got(_) == 0L))
     assert((n until 250L).forall(i => got(i) == i))
     assert(rounds <= 4, s"clique should collapse almost immediately, got $rounds rounds")
-    releaseLabelSnapshots()
+    releaseAllRdds()
   }
 
-  test("stars: 1000-node path converges and matches minLabel") {
+  test("stars: 1000-node path converges to the path minimum") {
     val sp = spark
     import sp.implicits._
     val n = 1000
@@ -150,20 +105,20 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got.size == n && got.values.forall(_ == 0L))
     // alternating star rounds halve path depth: O(log n) in practice
     assert(rounds <= 25, s"expected O(log n) star rounds on a path, got $rounds")
-    releaseLabelSnapshots()
+    releaseAllRdds()
   }
 
-  test("stars == minLabel on the sf0.001 near-dup graph, node for node") {
+  test("stars == union-find on the sf0.001 near-dup graph, node for node") {
     val sp = spark
     val pairs = SparkEntry.queries("l2_minhash_neardup")(sp, sf0001)
       .select("d1", "d2")
     val nodes = graft.core.Tables(sp, sf0001, "documents").select("doc_id")
-    val a = ConnectedComponents.minLabel(nodes, pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val a = unionFind(nodes.collect().map(_.getLong(0)),
+      pairs.collect().map(r => r.getLong(0) -> r.getLong(1)))
     val b = ConnectedComponents.stars(nodes, pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a.nonEmpty && a == b)
-    releaseLabelSnapshots()
+    releaseAllRdds()
     sp.catalog.clearCache()
   }
 
@@ -175,7 +130,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val inc = SparkEntry.queries("x80_incremental_clusters")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(full.nonEmpty && inc == full)
-    releaseLabelSnapshots()
+    releaseAllRdds()
     spark.catalog.clearCache()
   }
 

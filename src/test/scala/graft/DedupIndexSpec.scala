@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Tables
 import graft.llm.DedupIndex
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -464,6 +465,91 @@ class DedupIndexSpec extends AnyFunSuite {
       assert(rows(2) == at2 && rows(3) == at3)
       intercept[Exception](DedupIndex.loadForestAt(spark, path, 1).collect())
     } finally rmrf(path)
+  }
+
+  /** Boilerplate shared verbatim by a template family: member k is the
+    * template + "copy k", and all members agree on >= 15/16 lanes. */
+  private val template = "this page uses cookies to improve your experience by " +
+    "continuing to browse the site you agree to our use of cookies and our " +
+    "privacy policy all rights reserved terms of service apply "
+
+  test("flooded dedupBatch: every flagged doc has a >= 14/16 partner in the index (x24's contract)") {
+    val sp = spark
+    import sp.implicits._
+    // index: 40 family members flood their band-pair buckets past the
+    // cap. Batch: 3 more members, an unrelated doc, and a probe pair
+    // that shares a full band pair with the family (so it lands in the
+    // escalated bucket) and is 16/16 with itself but within 14/16 of
+    // no indexed doc — only a batch–batch chain link could flag it.
+    val probe = template.stripSuffix("service apply ") +
+      "whiskey lima kilo victor oscar uniform echo tango"
+    val idxDocs = (0 until 40).map(k => (k.toLong, "en", s"${template}copy $k"))
+    val batchDocs = Seq((100L, "en", probe), (101L, "en", probe + " alpha"),
+      (102L, "en", "an unrelated note about rivers mountains and the weather today")) ++
+      (40 until 43).map(k => (103L + k - 40, "en", s"${template}copy $k"))
+    val idx = DedupIndex.index(idxDocs.toDF("doc_id", "lang", "text")).cache()
+    val batch = batchDocs.toDF("doc_id", "lang", "text")
+    try {
+      val lanes = (DedupIndex.sigOf(idx).collect() ++
+        DedupIndex.sigOf(DedupIndex.index(batch)).collect())
+        .map(r => r.getLong(0) -> (1 to 16).map(r.getLong)).toMap
+      def agree(a: Long, b: Long) = (0 until 16).count(i => lanes(a)(i) == lanes(b)(i))
+      val near = batchDocs.map(_._1).filter(b => idxDocs.exists(d => agree(b, d._1) >= 14))
+      assert(near == Seq(103L, 104L, 105L))
+      // the fixture is live: the probe pair sits in an escalated bucket
+      val esc = graft.llm.MinHash.bandPairKeysSorted(DedupIndex.sigOf(idx))
+        .groupBy("bp", "k").count().filter(col("count") > graft.llm.MinHash.DefaultCap)
+      assert(graft.llm.MinHash.bandPairKeysSorted(
+        DedupIndex.sigOf(DedupIndex.index(batch)).filter(col("doc_id") <= 101L))
+        .join(esc, Seq("bp", "k")).select("doc_id").distinct().count() == 2)
+      assert(agree(100L, 101L) == 16)
+      val got = DedupIndex.dedupBatch(batch, idx).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(got == Seq(("en", 6L, 0L, near.size.toLong)))
+    } finally { idx.unpersist(false); spark.catalog.clearCache() }
+  }
+
+  /** `call` (given an artifact at version 1 — index and forest gen 1
+    * over the non-batch thirds of sf0.001 — and the batch third)
+    * leaves the session's persisted RDDs as it found them after its one
+    * collect: every deployed call scopes its caches. */
+  private def leavesNoPersistedRdds(call: (String, DataFrame) => Unit): Unit = {
+    val all = docs.select("doc_id", "lang", "text")
+    val isNew = col("doc_id") % 3 === 2
+    val path = java.nio.file.Files.createTempDirectory("graft_dedup_scope").toString
+    val sc = spark.sparkContext
+    def settled(): Set[Int] = {
+      // scopes release on the async listener bus — poll, don't assume
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (sc.getPersistentRDDs.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      sc.getPersistentRDDs.keySet.toSet
+    }
+    try {
+      DedupIndex.save(spark, DedupIndex.index(all.filter(!isNew)), path)
+      DedupIndex.saveForest(spark,
+        DedupIndex.clusterLabels(DedupIndex.load(spark, path)), path, gen = 1)
+      DedupIndex.snapshot(spark, path, 1, forestGen = Some(1))
+      spark.catalog.clearCache()
+      TestSpark.releaseAllRdds()
+      val before = settled()
+      call(path, all.filter(isNew))
+      assert(settled() == before, s"persisted RDDs left: ${sc.getPersistentRDDs.size}")
+    } finally { rmrf(path); spark.catalog.clearCache() }
+  }
+
+  test("dedupBatch leaves no persisted RDDs after one collect") {
+    leavesNoPersistedRdds((path, batch) =>
+      DedupIndex.dedupBatch(batch, DedupIndex.load(spark, path)).collect())
+  }
+
+  test("clusterLabels leaves no persisted RDDs after one collect") {
+    leavesNoPersistedRdds((path, _) =>
+      DedupIndex.clusterLabels(DedupIndex.load(spark, path)).collect())
+  }
+
+  test("maintainClusters leaves no persisted RDDs after one collect") {
+    leavesNoPersistedRdds((path, batch) =>
+      DedupIndex.maintainClusters(spark, path, 1, batch).collect())
   }
 
   test("b13/b14 artifact paths and in-plan x24 agree row for row") {

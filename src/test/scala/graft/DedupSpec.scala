@@ -1,6 +1,7 @@
 package graft
 
 import graft.llm.MinHash
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,91 @@ class DedupSpec extends AnyFunSuite {
     import sp.implicits._
     rows.toDF("doc_id", "text")
   }
+
+  private def pairSet(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def tripleSet(df: DataFrame): Set[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  private def lanesOf(sig: DataFrame): Map[Long, IndexedSeq[Long]] =
+    sig.collect().map(r => r.getLong(0) -> (1 to 16).map(r.getLong)).toMap
+
+  /** Plain-Scala restatement of the banded rule over collected lanes:
+    * per band-pair bucket, all pairs if it holds at most `cap` base
+    * docs, otherwise the anchor (min base id) star plus, with `chain`,
+    * successors in (mh0..mh15, doc_id) order; then a full 16-lane
+    * count, kept at >= `threshold`. `probe = None` is the symmetric
+    * rule over `base`; with a probe side only probe–base pairs count,
+    * probe end first, and an anchor that is a probe doc stars out to
+    * its whole bucket. */
+  private def bandedRef(lanes: Map[Long, IndexedSeq[Long]], base: Set[Long],
+      probe: Option[Set[Long]], rule: MinHash.Rule, threshold: Int): Set[(Long, Long, Long)] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val bySig = Ordering.by((d: Long) => (lanes(d), d))
+    def agree(a: Long, b: Long) = (0 until 16).count(i => lanes(a)(i) == lanes(b)(i)).toLong
+    def band(d: Long, b: Int) = (4 * b until 4 * b + 4).map(lanes(d))
+    val docs = base ++ probe.getOrElse(Set.empty)
+    val buckets = for {
+      i <- 0 until 4; j <- (i + 1) until 4
+      ms <- docs.groupBy(d => (band(d, i), band(d, j))).values
+    } yield ms.toSeq.sorted
+    val cand = buckets.flatMap { ms =>
+      val bs = ms.filter(base)
+      val ps = probe.fold(bs)(p => ms.filter(p))
+      val isProbe = probe.getOrElse(base)
+      val chainPairs =
+        if (!rule.chain) Nil
+        else {
+          val s = ms.sorted(bySig)
+          s.zip(s.tail).collect {
+            case (x, y) if probe.isEmpty => (x, y)
+            case (x, y) if isProbe(x) && base(y) => (x, y)
+            case (x, y) if isProbe(y) && base(x) => (y, x)
+          }
+        }
+      if (bs.isEmpty) Nil
+      else if (bs.size <= rule.cap)
+        for (x <- ps; y <- bs if (if (probe.isEmpty) x < y else x != y)) yield (x, y)
+      else {
+        val a = bs.head
+        val star =
+          if (probe.isEmpty) bs.tail.map(y => (a, y))
+          else ps.filter(_ != a).map(x => (x, a)) ++
+            (if (isProbe(a)) bs.tail.map(y => (a, y)) else Nil)
+        star ++ chainPairs
+      }
+    }
+    cand.map { case (x, y) => (x, y, agree(x, y)) }.filter(_._3 >= threshold).toSet
+  }
+
+  private val rules = Seq(
+    "exact" -> MinHash.Rule.Exact, "anchor" -> MinHash.Rule.Anchor,
+    "hybrid" -> MinHash.Rule(16, chain = false), "chain" -> MinHash.Rule(16, chain = true))
+
+  /** banded == [[bandedRef]] on every (shape, rule, threshold); a shape
+    * is its base and optional probe doc_id predicates over `sig`. */
+  private def assertBandedIsRef(sig: DataFrame,
+      shapes: Seq[(String, Column, Option[Column])], thresholds: Seq[Int]): Unit = {
+    val lanes = lanesOf(sig)
+    def ids(c: Column) = sig.filter(c).select("doc_id").collect().map(_.getLong(0)).toSet
+    for ((shape, baseC, probeC) <- shapes; (name, rule) <- rules; t <- thresholds) {
+      val got = tripleSet(MinHash.banded(MinHash.bandPairKeysSorted(sig.filter(baseC)),
+        probeC.map(c => MinHash.bandPairKeysSorted(sig.filter(c))), rule, t))
+      val want = bandedRef(lanes, ids(baseC), probeC.map(ids), rule, t)
+      assert(got == want, s"$shape/$name/t=$t: missing=${(want -- got).take(5)} " +
+        s"extra=${(got -- want).take(5)}")
+    }
+  }
+
+  /** The x87 drift-chain fixture: 100 docs share lanes 0..7 (one
+    * band-pair bucket far past the cap) and drift one window step per
+    * id on lanes 8..15, so consecutive ids agree 14/16 and nothing
+    * else reaches 14. */
+  private def chainSig(): DataFrame = spark.range(100).select(
+    col("id").as("doc_id") +: (0 until 16).map { i =>
+      (if (i < 8) lit(0L) else expr(s"(id + ${i - 8}) div 4")).as(s"mh$i")
+    }: _*)
 
   test("native shingle-set expression == explode + collect_set on real documents") {
     val docs = graft.core.Tables(spark, sf0001, "documents").limit(50)
@@ -100,8 +186,8 @@ class DedupSpec extends AnyFunSuite {
     val sig = MinHash.signatures(MinHash.shingles(docsDF(Seq(
       1L -> txt, 2L -> txt,
       3L -> "zzz yyy xxx www vvv uuu ttt sss rrr qqq ppp ooo nnn")), 5))
-    val paired = MinHash.candidatesPaired(sig).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val paired = pairSet(MinHash.banded(
+      MinHash.bandPairKeysSorted(sig), None, MinHash.Rule.Exact, 0))
     val single = MinHash.candidates(sig).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // identical docs agree on all 16 minhashes -> must survive the
@@ -163,55 +249,47 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("asymmetric hybrid: lossless at cap=infinity, escalated buckets star both ways") {
-    import org.apache.spark.sql.functions._
-    import graft.llm.MinHash
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // Lossless leg on the real corpus: with a cap no bucket reaches,
-    // the asymmetric hybrid IS the raw batch×all band join the deployed
-    // paths ran before round 13 — candidate sets must be identical.
+    // the asymmetric hybrid IS the raw batch×all band join — candidate
+    // sets must be identical.
     val docs = MinHash.docs(spark, sf0001)
     val sig = MinHash.signaturesFromSets(
       MinHash.shingleSets(docs, 5).filter(col("c") > 0)).cache()
+    val hybrid = (probe: DataFrame, base: DataFrame, cap: Int) => pairSet(
+      MinHash.banded(base, Some(probe), MinHash.Rule(cap, chain = false), 0))
     try {
-      val probe = MinHash.bandPairKeys(sig.filter(col("doc_id") % 4 === 3))
-      val base = MinHash.bandPairKeys(sig)
-      val hybrid = pairSet(
-        MinHash.candidatesHybridAsymFromKeys(probe, base, Int.MaxValue))
-      val raw = pairSet(probe.toDF("d1", "bp", "k")
-        .join(base.toDF("d2", "bp2", "k2"),
+      val probe = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") % 4 === 3))
+      val base = MinHash.bandPairKeysSorted(sig)
+      val raw = pairSet(probe.select("doc_id", "bp", "k").toDF("d1", "bp", "k")
+        .join(base.select("doc_id", "bp", "k").toDF("d2", "bp2", "k2"),
           col("bp") === col("bp2") && col("k") === col("k2") &&
             col("d1") =!= col("d2"))
         .select("d1", "d2").distinct())
-      assert(raw.nonEmpty && hybrid == raw)
+      assert(raw.nonEmpty && hybrid(probe, base, 1 << 30) == raw)
     } finally { sig.unpersist(false); spark.catalog.clearCache() }
     // Escalation legs on a planted flooded bucket: 20 identical
     // signatures, cap 4 — every band-pair bucket holds all 20 docs.
     val tiny = spark.range(20).select(
       col("id").as("doc_id") +: (0 until 16).map(i => lit(7L).as(s"mh$i")): _*)
-    val baseK = MinHash.bandPairKeys(tiny)
+    val baseK = MinHash.bandPairKeysSorted(tiny)
     // anchor (doc 0) NOT in the probe: each probe doc pairs with the
     // anchor only — one row per probe doc per bucket, never the bucket
-    val a = pairSet(MinHash.candidatesHybridAsymFromKeys(
-      MinHash.bandPairKeys(tiny.filter(col("doc_id").isin(5L, 7L))), baseK, 4))
+    val a = hybrid(MinHash.bandPairKeysSorted(tiny.filter(col("doc_id").isin(5L, 7L))), baseK, 4)
     assert(a == Set((5L, 0L), (7L, 0L)))
     // anchor IS a probe doc: it stars out to the WHOLE bucket (without
     // this leg a batch doc that is a flooded bucket's minimum id would
     // never be candidate-paired with the cluster it belongs to)
-    val b = pairSet(MinHash.candidatesHybridAsymFromKeys(
-      MinHash.bandPairKeys(tiny.filter(col("doc_id").isin(0L, 7L))), baseK, 4))
+    val b = hybrid(MinHash.bandPairKeysSorted(tiny.filter(col("doc_id").isin(0L, 7L))), baseK, 4)
     assert(b == (Set((7L, 0L)) ++ (1L to 19L).map(d => (0L, d))))
   }
 
   test("packed band-pair keys bucket exactly as the retired string keys") {
-    import org.apache.spark.sql.functions._
-    import graft.llm.MinHash
-    // Round 15: bandPairKeys/bandPairKeysSorted pack the 8 keyed lanes
+    // Round 15: bandPairKeysSorted packs the 8 keyed lanes
     // into 4 longs instead of the comma-joined decimal string. The
     // packing is injective (lanes < 2^31), so the partition of key
     // rows into (bp, k) buckets must be IDENTICAL to the string form's
     // — this is the parity oracle: the retired string key, inlined.
-    def stringKeys(s: org.apache.spark.sql.DataFrame) = {
+    def stringKeys(s: DataFrame) = {
       val withBk = s.select(col("doc_id") +: (0 until 4).map { b =>
         concat_ws(",", (0 until 4).map(i => col(s"mh${4 * b + i}")): _*).as(s"bk$b")
       }: _*)
@@ -231,72 +309,49 @@ class DedupSpec extends AnyFunSuite {
     try {
       // bucket partition parity: the multiset of (bp, sorted member
       // list) over buckets is representation-independent
-      def buckets(keys: org.apache.spark.sql.DataFrame) = keys
+      def buckets(keys: DataFrame) = keys
         .groupBy("bp", "k").agg(sort_array(collect_list("doc_id")).as("ms"))
         .select("bp", "ms").collect()
         .map(r => (r.getInt(0), r.getSeq[Long](1)))
         .groupBy(identity).view.mapValues(_.size).toMap
-      assert(buckets(MinHash.bandPairKeys(sig)) == buckets(stringKeys(sig)))
-      // and the sorted variant carries the same packed key
       assert(buckets(MinHash.bandPairKeysSorted(sig)
         .select("doc_id", "bp", "k")) == buckets(stringKeys(sig)))
       // end-to-end: the packed-key candidate join emits exactly the
       // pairs the STRING-keyed band join emits
-      def pairSet(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val viaString = pairSet(stringKeys(sig).toDF("d1", "bp", "k")
         .join(stringKeys(sig).toDF("d2", "bp2", "k2"),
           col("bp") === col("bp2") && col("k") === col("k2") &&
             col("d1") < col("d2"))
         .select("d1", "d2").distinct())
       assert(viaString.nonEmpty)
-      assert(pairSet(MinHash.candidatesPaired(sig)) == viaString)
+      assert(pairSet(MinHash.banded(MinHash.bandPairKeysSorted(sig), None,
+        MinHash.Rule.Exact, 0)) == viaString)
     } finally { sig.unpersist(false); spark.catalog.clearCache() }
   }
 
   test("chain escalation: SNM successor leg recovers what the anchor star loses") {
-    import org.apache.spark.sql.functions._
-    import graft.llm.MinHash
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the x87 drift-chain fixture: one flooded bucket, verified pairs
-    // form a chain no member of which (except doc 1) verifies against
-    // the min-id anchor
-    val sig = spark.range(100).select(
-      col("id").as("doc_id") +: (0 until 16).map { i =>
-        (if (i < 8) lit(0L) else expr(s"(id + ${i - 8}) div 4")).as(s"mh$i")
-      }: _*).cache()
+    val sig = chainSig().cache()
     val keys = MinHash.bandPairKeysSorted(sig).cache()
+    val near = (probe: Option[DataFrame], base: DataFrame, rule: MinHash.Rule) =>
+      pairSet(MinHash.banded(base, probe, rule, 14))
     try {
-      def verified(cand: org.apache.spark.sql.DataFrame) = pairSet(
-        MinHash.agreeAtLeast(cand, sig, sig, 14)).map {
-        case (a, b) => (a.min(b), a.max(b))
-      }
-      val truth = verified(MinHash.candidatesPaired(sig))
+      val truth = near(None, keys, MinHash.Rule.Exact)
       assert(truth == (0L to 98L).map(i => (i, i + 1)).toSet)
       // anchor-only escalation loses the chain; the SNM leg restores it
-      assert(verified(MinHash.candidatesHybridFromKeys(keys, 16)) == Set((0L, 1L)))
-      assert(verified(
-        MinHash.candidatesHybridChainFromKeys(keys, 16)) == truth)
-      // the carried r0..r3 sort lanes ARE the full-signature order:
-      // the chain leg must emit exactly the successor pairs of the
-      // (mh0..mh15, doc_id)-sorted bucket (here: consecutive ids)
-      val probe = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") === 50L))
-      val base = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") =!= 50L))
+      assert(near(None, keys, MinHash.Rule(16, chain = false)) == Set((0L, 1L)))
+      assert(near(None, keys, MinHash.Rule.Deployed) == truth)
       // asym form: a single probe doc mid-chain pairs with its sorted
       // neighbors (its true links), not just the useless anchor
-      val asym = pairSet(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainAsymFromKeys(probe, base, 16),
-        sig, sig, 14))
-      assert(asym == Set((50L, 49L), (50L, 51L)))
+      val probe = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") === 50L))
+      val base = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") =!= 50L))
+      assert(near(Some(probe), base, MinHash.Rule.Deployed) == Set((50L, 49L), (50L, 51L)))
       // lossless leg: with a cap no bucket reaches, the chain variant
       // IS the raw asymmetric band join (the chain leg never fires)
       val rawProbe = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") % 7 === 0))
-      val rawAll = keys
-      val hybrid = pairSet(MinHash.candidatesHybridChainAsymFromKeys(
-        rawProbe, rawAll, Int.MaxValue))
+      val hybrid = pairSet(MinHash.banded(keys, Some(rawProbe),
+        MinHash.Rule(1 << 30, chain = true), 0))
       val raw = pairSet(rawProbe.select("doc_id", "bp", "k").toDF("d1", "bp", "k")
-        .join(rawAll.select("doc_id", "bp", "k").toDF("d2", "bp2", "k2"),
+        .join(keys.select("doc_id", "bp", "k").toDF("d2", "bp2", "k2"),
           col("bp") === col("bp2") && col("k") === col("k2") &&
             col("d1") =!= col("d2"))
         .select("d1", "d2").distinct())
@@ -306,97 +361,56 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("fused in-bucket verify == candidates + agreeAtLeast (sym and asym)") {
-    import org.apache.spark.sql.functions._
-    import graft.llm.MinHash
-    // Round-15 law: every candidate pair forms inside a shared (bp, k)
-    // bucket whose packed key pins 8 lanes equal, so 8 + agreement of
-    // the carried complement quads IS the pair's full 16-lane
-    // agreement — the fused verify must reproduce the retired
-    // candidates→join-back→count composition bit for bit. Two
-    // corpora: the x87 drift-chain fixture (flooded bucket, chain
-    // recovered only by the SNM leg) and a REAL corpus with a planted
-    // template flood (all three escalation legs + ordinary buckets).
-    def pairSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val chainSig = spark.range(100).select(
-      col("id").as("doc_id") +: (0 until 16).map { i =>
-        (if (i < 8) lit(0L) else expr(s"(id + ${i - 8}) div 4")).as(s"mh$i")
-      }: _*).cache()
-    val chainKeys = MinHash.bandPairKeysSorted(chainSig).cache()
+  test("disjoint probe: batch–batch chain links never flag a probe doc (drift fixture)") {
+    // base = ids 0-39 ∪ 60-99, probe = ids 40-59, all in one escalated
+    // bucket of the x87 chain fixture. Only the two probe docs adjacent
+    // to a base doc in signature order have a >= 14/16 base partner;
+    // probe–probe successor links must not count (dedupBatch's shape).
+    val chain = chainSig().cache()
     try {
-      val refSym = pairSet(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainFromKeys(chainKeys, 16),
-        chainSig, chainSig, 14))
-      assert(refSym == (0L to 98L).map(i => (i, i + 1)).toSet)
-      assert(pairSet(
-        MinHash.verifiedHybridChainFromKeys(chainKeys, 16, 14)) == refSym)
-      val probe = MinHash.bandPairKeysSorted(
-        chainSig.filter(col("doc_id") % 5 === 0))
-      val refAsym = pairSet(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainAsymFromKeys(probe, chainKeys, 16),
-        chainSig, chainSig, 14))
-      assert(refAsym.nonEmpty)
-      // ordered comparison: the probe end must land in d1 both ways
-      assert(pairSet(MinHash.verifiedHybridChainAsymFromKeys(
-        probe, chainKeys, 16, 14)) == refAsym)
-      // uncapped all-pairs variants (minhashPairs / x80's legs):
-      // fused == candidates + agreeAtLeast, and matches is the true
-      // 16-lane agreement count
-      val refPaired = MinHash.agreeAtLeast(
-        MinHash.candidatesPaired(chainSig), chainSig, chainSig, 14)
-      assert(pairSet(MinHash.verifiedPairedFromKeys(chainKeys, 14)
-        .select("d1", "d2")) == pairSet(refPaired))
-      assert(MinHash.verifiedPairedFromKeys(chainKeys, 14)
-        .collect().forall(r => r.getLong(2) >= 14 && r.getLong(2) <= 16))
-      val refPA = pairSet(MinHash.agreeAtLeast(
-        probe.select("doc_id", "bp", "k").toDF("d1", "bp", "k")
-          .join(chainKeys.select("doc_id", "bp", "k").toDF("d2", "bp2", "k2"),
-            col("bp") === col("bp2") && col("k") === col("k2") &&
-              col("d1") =!= col("d2"))
-          .select("d1", "d2").distinct(),
-        chainSig, chainSig, 14))
-      assert(pairSet(MinHash.verifiedPairedAsymFromKeys(
-        probe, chainKeys, 14)) == refPA)
-    } finally {
-      chainSig.unpersist(false); chainKeys.unpersist(false)
-      spark.catalog.clearCache()
-    }
+      val inProbe = col("doc_id").between(40, 59)
+      val near = MinHash.banded(
+        MinHash.bandPairKeysSorted(chain.filter(!inProbe)),
+        Some(MinHash.bandPairKeysSorted(chain.filter(inProbe))), MinHash.Rule.Deployed, 14)
+        .select("d1").distinct().collect().map(_.getLong(0)).toSet
+      assert(near == Set(40L, 59L))
+    } finally { chain.unpersist(false); spark.catalog.clearCache() }
+  }
+
+  test("fused in-bucket verify == candidates + agreeAtLeast (sym and asym)") {
+    // MinHash.banded's in-bucket verify (8 pinned lanes + the carried
+    // complement quads) against the rule restated in plain Scala
+    // (bandedRef: candidates per bucket, then a full 16-lane count) —
+    // every rule, on the three caller shapes that run in production:
+    // symmetric (clusterLabels), probe ⊆ base (maintainClusters) and
+    // probe disjoint from base (dedupBatch).
+    val chain = chainSig().cache()
+    try {
+      val inProbe = col("doc_id").between(40, 59)
+      assertBandedIsRef(chain, Seq(
+        ("sym", lit(true), None),
+        ("asym-subset", lit(true), Some(inProbe)),
+        ("asym-disjoint", !inProbe, Some(inProbe))), Seq(0, 14))
+    } finally { chain.unpersist(false); spark.catalog.clearCache() }
+    // a REAL corpus with a planted template flood: all escalation legs
+    // plus ordinary buckets
     val corpus = MinHash.docs(spark, sf0001).select("doc_id", "text")
       .union(graft.llm.DedupQueries.templateCorpus(spark, 400, 2000)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
     val sig = MinHash.signaturesFromSets(
       MinHash.shingleSets(corpus, 5).filter(col("c") > 0)).cache()
-    val keys = MinHash.bandPairKeysSorted(sig).cache()
     try {
-      val refSym = pairSet(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainFromKeys(keys, 16), sig, sig, 14))
-      assert(refSym.size > 300, s"fixture degenerate: ${refSym.size}")
-      assert(pairSet(
-        MinHash.verifiedHybridChainFromKeys(keys, 16, 14)) == refSym)
-      // no-chain hybrid variant (x86's rule) on the same flooded corpus
-      assert(pairSet(MinHash.verifiedHybridFromKeys(keys, 16, 14)) ==
-        pairSet(MinHash.agreeAtLeast(
-          MinHash.candidatesHybridFromKeys(keys, 16), sig, sig, 14)))
-      // asym split: batch = planted half + a real third (probe ⊆ base,
-      // the maintainClusters shape)
       val isProbe = col("doc_id") % 3 === 0 || col("doc_id") >= 1000200L
-      val pkeys = MinHash.bandPairKeysSorted(sig.filter(isProbe))
-      val refAsym = pairSet(MinHash.agreeAtLeast(
-        MinHash.candidatesHybridChainAsymFromKeys(pkeys, keys, 16),
-        sig, sig, 14))
-      assert(refAsym.size > 300, s"asym fixture degenerate: ${refAsym.size}")
-      assert(pairSet(MinHash.verifiedHybridChainAsymFromKeys(
-        pkeys, keys, 16, 14)) == refAsym)
-    } finally {
-      sig.unpersist(false); keys.unpersist(false)
-      spark.catalog.clearCache()
-    }
+      assertBandedIsRef(sig, Seq(
+        ("sym", lit(true), None),
+        ("asym-subset", lit(true), Some(isProbe)),
+        ("asym-disjoint", !isProbe, Some(isProbe))), Seq(14))
+      assert(pairSet(MinHash.banded(MinHash.bandPairKeysSorted(sig), None,
+        MinHash.Rule.Deployed, 14)).size > 300, "fixture degenerate")
+    } finally { sig.unpersist(false); spark.catalog.clearCache() }
   }
 
   test("x86 hybrid escalation: lossless at cap=infinity, planted cluster recalled at cap=16") {
-    import org.apache.spark.sql.functions._
-    import graft.llm.MinHash
     // Equivalence leg: with a cap no bucket reaches, the hybrid rule
     // IS the all-pairs rule — candidate sets must be IDENTICAL, on a
     // corpus where the planted template cluster makes that set large
@@ -406,12 +420,10 @@ class DedupSpec extends AnyFunSuite {
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
     val sig = MinHash.signaturesFromSets(
       MinHash.shingleSets(corpus, 9).filter(col("c") > 0)).cache()
-    val keys = MinHash.bandPairKeys(sig).cache()
+    val keys = MinHash.bandPairKeysSorted(sig).cache()
     try {
-      def pairSet(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val hybrid = pairSet(MinHash.candidatesHybridFromKeys(keys, Int.MaxValue))
-      val paired = pairSet(MinHash.candidatesPaired(sig))
+      val hybrid = pairSet(MinHash.banded(keys, None, MinHash.Rule(1 << 30, chain = false), 0))
+      val paired = pairSet(MinHash.banded(keys, None, MinHash.Rule.Exact, 0))
       assert(hybrid.size > 400000, s"planted cluster missing: ${hybrid.size}")
       assert(hybrid == paired)
       // Escalation leg: at cap=16 the flooded buckets switch to anchor
@@ -561,15 +573,16 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("chain-rule laws: subset, cap=infinity equality, linear escalated volume, probe orientation (property)") {
-    // VERDICT r13 task 5 — scalacheck laws so future cap/chain edits
-    // cannot silently widen or lose candidates. Random corpora draw 16
-    // binary lanes per doc; a random subset additionally shares lanes
-    // 0..7, flooding one band-pair bucket past the tiny cap, so every
-    // iteration exercises both the all-pairs and the escalated legs.
+    // Scalacheck laws so future cap/chain edits cannot silently widen or
+    // lose candidates. Random corpora draw 16 binary lanes per doc; a
+    // random subset additionally shares lanes 0..7, flooding one
+    // band-pair bucket past the tiny cap, so every iteration exercises
+    // both the all-pairs and the escalated legs.
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val sp = spark
     import sp.implicits._
     val cap = 4
+    val chainRule = MinHash.Rule(cap, chain = true)
     val corpusGen: Gen[List[(Boolean, List[Long])]] = for {
       n <- Gen.choose(8, 24)
       rows <- Gen.listOfN(n, for {
@@ -577,10 +590,8 @@ class DedupSpec extends AnyFunSuite {
         lanes <- Gen.listOfN(16, Gen.choose(0L, 1L))
       } yield (flood, lanes))
     } yield rows
-    def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.collect().map { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1)); (a.min(b), a.max(b))
-      }.toSet
+    def canon(df: DataFrame): Set[(Long, Long)] =
+      pairSet(df).map { case (a, b) => (a.min(b), a.max(b)) }
     val prop = Prop.forAll(corpusGen) { rows =>
       val data = rows.zipWithIndex.map { case ((flood, lanes), id) =>
         (id.toLong,
@@ -590,10 +601,9 @@ class DedupSpec extends AnyFunSuite {
         col("doc_id") +: (0 until 16).map(i => col("lanes")(i).as(s"mh$i")): _*)
       val keys = MinHash.bandPairKeysSorted(sig).cache()
       try {
-        val paired = canon(MinHash.candidatesPaired(sig))
-        val chain = canon(MinHash.candidatesHybridChainFromKeys(keys, cap))
-        val chainInf = canon(
-          MinHash.candidatesHybridChainFromKeys(keys, Int.MaxValue))
+        val paired = canon(MinHash.banded(keys, None, MinHash.Rule.Exact, 0))
+        val chain = canon(MinHash.banded(keys, None, chainRule, 0))
+        val chainInf = canon(MinHash.banded(keys, None, MinHash.Rule(1 << 30, chain = true), 0))
         // law 3's bound: escalated buckets contribute at most 2(b-1)
         // candidates (anchor star + SNM successors), small ones C(b,2)
         val bound = keys.groupBy("bp", "k").count().collect()
@@ -601,25 +611,23 @@ class DedupSpec extends AnyFunSuite {
           .map(b => if (b <= cap) b * (b - 1) / 2 else 2 * (b - 1)).sum
         val probeIds = data.map(_._1).filter(_ % 3 == 0).toSet
         val pkeys = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") % 3 === 0))
-        val asym = MinHash.candidatesHybridChainAsymFromKeys(
-          pkeys, keys, cap).collect().map(r => (r.getLong(0), r.getLong(1)))
-        // round-15 law: the fused in-bucket verify reproduces the
-        // candidates → agreeAtLeast composition exactly, sym and asym
-        // (random 0/1 lanes exercise pass and fail at threshold 14)
-        def ordered(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-          df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val verSymOk = canon(MinHash.verifiedHybridChainFromKeys(keys, cap, 14)) ==
-          canon(MinHash.agreeAtLeast(
-            MinHash.candidatesHybridChainFromKeys(keys, cap), sig, sig, 14))
-        val verAsymOk = ordered(MinHash.verifiedHybridChainAsymFromKeys(
-          pkeys, keys, cap, 14)) ==
-          ordered(MinHash.agreeAtLeast(
-            MinHash.candidatesHybridChainAsymFromKeys(pkeys, keys, cap),
-            sig, sig, 14))
+        val asym = pairSet(MinHash.banded(keys, Some(pkeys), chainRule, 0))
+        // the verify at 14 against the plain-Scala rule, on the three
+        // caller shapes (random 0/1 lanes pass and fail the threshold)
+        val lanes = data.map { case (id, l) => id -> l.toIndexedSeq }.toMap
+        val all = lanes.keySet
+        val baseOnly = MinHash.bandPairKeysSorted(sig.filter(col("doc_id") % 3 =!= 0))
+        val verified = Seq(
+          (None, keys, all),
+          (Some(pkeys), keys, all),
+          (Some(pkeys), baseOnly, all -- probeIds)).forall { case (p, b, baseIds) =>
+            tripleSet(MinHash.banded(b, p, chainRule, 14)) ==
+              bandedRef(lanes, baseIds, p.map(_ => probeIds), chainRule, 14)
+          }
         (chain subsetOf paired) &&
           chainInf == paired &&
           chain.size <= bound &&
-          verSymOk && verAsymOk &&
+          verified &&
           asym.forall { case (d1, d2) =>
             probeIds(d1) && paired((d1.min(d2), d1.max(d2)))
           }

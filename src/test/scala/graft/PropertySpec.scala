@@ -40,7 +40,7 @@ class PropertySpec extends AnyFunSuite {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val oracle = nodes.map(i => i -> find(i.toInt).toLong).toMap
-      val (df, rounds) = graft.ops.ConnectedComponents.minLabelCounted(
+      val (df, rounds) = graft.ops.ConnectedComponents.starsCounted(
         nodes.toDF("id"), edges.toDF("a", "b"))
       val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // union-find parents compress toward minima by construction above

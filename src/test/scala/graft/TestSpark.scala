@@ -16,9 +16,10 @@ object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
-  /** Drop every persisted RDD — used by suites that call minLabel
-    * directly (outside a CacheScope), whose final label snapshot is
-    * otherwise retained for the caller. */
+  /** Drop every persisted RDD — the CC loop's final snapshot is
+    * released on the async listener bus after the first consuming
+    * action; suites force-drop anything still pending so they never
+    * interleave. */
   def releaseAllRdds(): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
 }
