@@ -144,13 +144,31 @@ private[graft] object Fs {
     }
   }
 
-  /** Marker file names directly under `dir` (empty when the ledger
-    * directory is absent) — the applied-batch ledger a compaction
-    * carries into the new generation. */
-  def listMarkers(spark: SparkSession, dir: String): Seq[String] = {
+  /** Names of the files directly under `dir`, sorted (empty when the
+    * directory is absent) — ONE listStatus, no existence probe: the
+    * applied-epoch ledger and the snapshot manifest directory. */
+  def listFileNames(spark: SparkSession, dir: String): Seq[String] = {
     val (f, p) = fs(spark, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).filter(_.isFile).map(_.getPath.getName).sorted.toSeq
+    try f.listStatus(p).filter(_.isFile).map(_.getPath.getName).sorted.toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
+  /** Write `lines` as one small UTF-8 text file (created, or replaced),
+    * from the driver — a snapshot manifest. */
+  def writeLines(spark: SparkSession, path: String, lines: Seq[String]): Unit = {
+    val (f, p) = fs(spark, path)
+    val out = f.create(p, true)
+    try out.write(lines.map(_ + "\n").mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The non-empty lines of a small text file — one driver-side read. */
+  def readLines(spark: SparkSession, path: String): Seq[String] = {
+    val (f, p) = fs(spark, path)
+    val in = f.open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      .split('\n').filter(_.nonEmpty).toSeq
+    finally in.close()
   }
 
   /** Names of the committed batch DIRECTORIES (`batch-{id}`) directly
@@ -170,24 +188,6 @@ private[graft] object Fs {
     else f.listStatus(p)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .map(_.getPath.getName).sorted.toSeq
-  }
-
-  /** Carry the applied-batch ledger of artifact generation `from` into
-    * generation `to` (ADVICE r9: compaction rewrites the committed
-    * batch DIRECTORIES away, so without the carried markers a
-    * streaming restart from a retained checkpoint could replay an old
-    * epoch into the new generation and double-apply it). The carried
-    * set is the `_applied/` markers ∪ the committed `batch-{id}`
-    * directory names under `{from}/{dataDir}` — the union also heals
-    * any batch that committed data but crashed before its marker.
-    * Bounded: one listing of each, one empty-file create per applied
-    * epoch. */
-  def copyAppliedLedger(spark: SparkSession, from: String, to: String,
-      dataDir: String): Unit = {
-    val markers = listMarkers(spark, s"$from/_applied")
-    val committed = listBatchDirs(spark, s"$from/$dataDir")
-    (markers ++ committed).distinct.sorted
-      .foreach(m => touch(spark, s"$to/_applied/$m"))
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {

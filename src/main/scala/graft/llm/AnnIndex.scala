@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.core.Cols._
-import graft.core.Snapshots
+import graft.core.{Fs, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -105,91 +105,42 @@ object AnnIndex {
     * code stays valid and a reload sees the union. */
   def append(spark: SparkSession, idx: Index, newVecs: DataFrame,
       path: String): Unit =
-    encode(newVecs, idx.coarse, idx.pq)
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("append").parquet(s"$path/codes.parquet")
+    coded(idx, newVecs).write.mode("append").parquet(s"$path/codes.parquet")
 
-  /** ATOMICALLY commit one micro-batch's coded vectors as a whole
-    * batch DIRECTORY: encode with the persisted codebooks, stage under
-    * a private `{path}/_staging/batch-{id}-{attempt}` directory (a
-    * crashed partial stage is invisible to readers; the replay stages
-    * its own attempt), then ONE atomic rename into
-    * `{path}/codes.parquet/batch-{id}`. The rename IS the
-    * commit; the committed directory's existence is durable evidence
-    * the batch applied (see [[appendIdempotent]]). */
+  /** Vectors coded with the index's codebooks, in the artifact's
+    * (cell, vec_id) write order. */
+  private def coded(idx: Index, vecs: DataFrame): DataFrame =
+    encode(vecs, idx.coarse, idx.pq).sortWithinPartitions("cell", "vec_id")
+
+  /** Commit one micro-batch's coded vectors as the atomic directory
+    * `codes.parquet/batch-{id}` ([[Snapshots.commitBatch]]). */
   def commitBatch(spark: SparkSession, idx: Index, batch: DataFrame,
-      path: String, batchId: Long): Unit = {
-    // Attempt-unique staging: two committers racing the SAME batch id
-    // (a zombie executor plus its replacement) must not write into one
-    // staging directory — they'd corrupt each other's in-flight job
-    // before either rename. Each attempt stages privately; the rename
-    // is the single arbiter (Fs.rename atomically refuses an existing
-    // destination and reclaims the loser's staged copy). A crashed
-    // attempt's orphan staging dir is hidden from every reader and
-    // reclaimed by rollback's `_staging` sweep.
-    val staging =
-      s"$path/_staging/batch-$batchId-${java.util.UUID.randomUUID().toString}"
-    encode(batch, idx.coarse, idx.pq)
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(staging)
-    graft.core.Fs.rename(spark, staging, s"$path/codes.parquet/batch-$batchId")
-  }
+      path: String, batchId: Long): Unit =
+    Snapshots.commitBatch(spark, coded(idx, batch), path, Layout, batchId)
 
-  /** IDEMPOTENT append for streaming ingestion: foreachBatch may
-    * re-deliver a micro-batch after a failure, and an unconditional
-    * append would double-code it (round-8 VERDICT Wrong #5). Two
-    * layers (ADVICE r9 — the old flat mode-append + marker-after had
-    * a crash window between the data commit and the marker, where a
-    * replay double-appended a completed-but-unmarked batch):
-    *   - the data commit is [[commitBatch]]'s staged ATOMIC rename, so
-    *     the replay check reads the committed directory itself;
-    *   - the `{path}/_applied/batch-{id}` marker is the LEDGER a
-    *     compaction carries into the new generation (where the batch
-    *     directories are rewritten away).
-    * A batch whose marker OR committed directory exists is skipped —
-    * a found-committed-but-unmarked batch heals its marker instead of
-    * re-appending. Exactly-once across committed batches;
-    * at-least-once only inside the invisible staging write. Returns
-    * whether the batch was applied by this call. */
+  /** Exactly-once append of a streamed micro-batch
+    * ([[Snapshots.appendIdempotent]]); returns whether it applied. */
   def appendIdempotent(spark: SparkSession, idx: Index, batch: DataFrame,
-      path: String, batchId: Long): Boolean = {
-    val marker = s"$path/_applied/batch-$batchId"
-    val committed = s"$path/codes.parquet/batch-$batchId"
-    if (graft.core.Fs.exists(spark, marker)) false
-    else if (graft.core.Fs.exists(spark, committed)) {
-      graft.core.Fs.touch(spark, marker) // heal the ledger
-      false
-    } else {
-      commitBatch(spark, idx, batch, path, batchId)
-      graft.core.Fs.touch(spark, marker)
-      true
-    }
-  }
+      path: String, batchId: Long): Boolean =
+    Snapshots.appendIdempotent(spark, coded(idx, batch), path, Layout, batchId)
 
-  /** DELETE vectors from the index (takedowns, dedup-then-reindex —
-    * round-8 VERDICT Missing #2: an index that can only grow). Deletes
-    * are TOMBSTONES — a `{path}/tombstones.parquet` artifact of
-    * vec_ids, appended per delete batch, never touching the codes
-    * files (rewriting a code artifact per takedown would be a full
-    * table write per delete; every lake-format delete — Delta, Iceberg
-    * — is a tombstone/delete-file for the same reason). [[load]]
-    * anti-joins the tombstone set out, so searches never see deleted
-    * vectors; [[compact]] physically drops them and starts the new
-    * generation with an empty tombstone set. `ids` must have a vec_id
-    * column; the write is one bounded batch. */
+  /** DELETE vectors (takedowns, dedup-then-reindex — round-8 VERDICT
+    * Missing #2: an index that can only grow) by tombstoning their
+    * vec_ids ([[Snapshots.delete]]): [[load]] masks them at once,
+    * [[compact]] drops them physically. `ids` must have a vec_id
+    * column. */
   def delete(spark: SparkSession, ids: DataFrame, path: String): Unit =
-    ids.select(col("vec_id"))
-      .write.mode("append").parquet(s"$path/tombstones.parquet")
+    Snapshots.delete(spark, ids, path, Layout)
 
   /** Persist the index. Codebooks are written as one tiny parquet
     * (deterministic single file, ordered rows); codes as a normal
     * distributed write sorted by (cell, vec_id). NOTE: mode is
     * overwrite — save REPLACES the artifact at `path`, so snapshot
     * manifests committed against the old files do not survive it. A
-    * rebuild that must preserve history lands in a NEW generation
-    * directory instead (compact's pointer-swap pattern); within one
-    * generation, every mutation (append/delete) is file-append-only,
-    * which is what keeps [[snapshot]]/[[loadAt]] sound. */
+    * rebuild lands in a NEW root instead (compact's pointer-swap
+    * pattern); within one root, every mutation (append/delete) is
+    * file-append-only, which is what keeps [[snapshot]]/[[loadAt]]
+    * sound. */
   def save(spark: SparkSession, idx: Index, path: String): Unit = {
     import spark.implicits._
     val cent =
@@ -213,27 +164,27 @@ object AnnIndex {
     * compacted artifact lands in a NEW directory (parquet cannot
     * overwrite a source mid-read); a deployment swaps the index
     * pointer, the two-generation pattern every OPTIMIZE pass uses.
-    * Codebooks are rewritten verbatim — compaction is a pure layout
-    * change, which is exactly what the b10 gate proves. */
+    * The new root carries the applied-epoch ledger and is committed as
+    * the version after the source's last ([[Snapshots.commitCompacted]]),
+    * so it serves [[versions]]/[[loadAt]] from the start. Codebooks are
+    * rewritten verbatim — compaction is a pure layout change, which is
+    * exactly what the b10 gate proves. */
   def compact(spark: SparkSession, from: String, to: String): Unit = {
     spark.read.parquet(s"$from/centroids.parquet")
       .coalesce(1).sortWithinPartitions("space", "cid")
       .write.mode("overwrite").parquet(s"$to/centroids.parquet")
     // bounded driver-side manifest read (portable: Hadoop FileSystem,
     // so the same code measures a local dir and an object-store prefix)
-    val bytes = graft.core.Fs.layoutBytes(spark, s"$from/codes.parquet")
-    val target = graft.core.Fs.packTarget(bytes)
-    // liveCodes: tombstoned rows are DROPPED here — compaction is where
-    // deletes become physical; the new generation has no tombstone
+    val bytes = Fs.layoutBytes(spark, s"$from/codes.parquet")
+    val target = Fs.packTarget(bytes)
+    // the live view: tombstoned rows are DROPPED here — compaction is
+    // where deletes become physical; the new root has no tombstone
     // artifact, so its reload sees exactly the surviving rows.
-    liveCodes(spark, from)
+    Snapshots.live(spark, from, Layout)
       .repartition(target, col("cell"))
       .sortWithinPartitions("cell", "vec_id")
       .write.mode("overwrite").parquet(s"$to/codes.parquet")
-    // ADVICE r9: carry the applied-epoch ledger so a streaming restart
-    // from a retained checkpoint cannot replay an old epoch into the
-    // compacted generation (whose committed batch dirs are gone).
-    graft.core.Fs.copyAppliedLedger(spark, from, to, "codes.parquet")
+    Snapshots.commitCompacted(spark, Some(from), to, Layout)
   }
 
   /** Compact into the CELL-PARTITIONED serve layout: same pure layout
@@ -258,12 +209,12 @@ object AnnIndex {
     spark.read.parquet(s"$from/centroids.parquet")
       .coalesce(1).sortWithinPartitions("space", "cid")
       .write.mode("overwrite").parquet(s"$to/centroids.parquet")
-    liveCodes(spark, from)
+    Snapshots.live(spark, from, Layout)
       .repartition(col("cell"))
       .sortWithinPartitions("cell", "vec_id")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$to/codes.parquet")
-    graft.core.Fs.copyAppliedLedger(spark, from, to, "codes.parquet")
+    Snapshots.commitCompacted(spark, Some(from), to, Layout)
   }
 
   /** MERGE two shard artifacts that share one published codebook
@@ -280,11 +231,12 @@ object AnnIndex {
     * applied to ITS rows during the merge — so a takedown broadcast
     * to every shard holds in the merged artifact no matter which
     * shard physically held the vector. The merged artifact is a fresh
-    * compacted generation (bin-packed, cell-clustered, tombstone-free)
-    * with NO applied-epoch ledger: the source shards' streaming epoch
-    * ids are per-pipeline counters that would collide in one ledger,
-    * so neither source stream may resume into the merge — exactly the
-    * new-generation pointer-swap contract compact already documents.
+    * compacted root (bin-packed, cell-clustered, tombstone-free),
+    * committed as version 0, with NO applied-epoch ledger: the source
+    * shards' streaming epoch ids are per-pipeline counters that would
+    * collide in one ledger, so neither source stream may resume into
+    * the merge — exactly the new-root pointer-swap contract compact
+    * already documents.
     * Cost: two bounded centroid reads + one disjointness semi-join +
     * one distributed rewrite of the union. */
   def mergeShards(spark: SparkSession, a: String, b: String, to: String): Unit = {
@@ -297,13 +249,13 @@ object AnnIndex {
     // all of it. Identity compares CANONICAL paths (ADVICE r11: a
     // trailing slash or relative spelling of a source must not slip
     // past a literal string check and be overwritten mid-read).
-    val toQ = graft.core.Fs.qualified(spark, to)
-    require(toQ != graft.core.Fs.qualified(spark, a) &&
-        toQ != graft.core.Fs.qualified(spark, b),
+    val toQ = Fs.qualified(spark, to)
+    require(toQ != Fs.qualified(spark, a) &&
+        toQ != Fs.qualified(spark, b),
       "mergeShards: destination must be a NEW generation directory, not a source")
     Seq("codes.parquet", "tombstones.parquet", "centroids.parquet",
       "_applied", "manifest").foreach { piece =>
-      require(!graft.core.Fs.exists(spark, s"$to/$piece"),
+      require(!Fs.exists(spark, s"$to/$piece"),
         s"mergeShards: $to already holds $piece — merge into a fresh directory")
     }
     def bookKey(path: String) =
@@ -312,8 +264,8 @@ object AnnIndex {
         .sortBy(t => (t._1, t._2)).toVector
     require(bookKey(a) == bookKey(b),
       s"mergeShards: codebooks differ between $a and $b — re-encode, don't merge")
-    val la = liveCodes(spark, a)
-    val lb = liveCodes(spark, b)
+    val la = Snapshots.live(spark, a, Layout)
+    val lb = Snapshots.live(spark, b, Layout)
     val clash = la.select("vec_id")
       .join(lb.select("vec_id"), "vec_id").limit(1).count()
     require(clash == 0L,
@@ -321,12 +273,13 @@ object AnnIndex {
     spark.read.parquet(s"$a/centroids.parquet")
       .coalesce(1).sortWithinPartitions("space", "cid")
       .write.mode("overwrite").parquet(s"$to/centroids.parquet")
-    val bytes = graft.core.Fs.layoutBytes(spark, s"$a/codes.parquet") +
-      graft.core.Fs.layoutBytes(spark, s"$b/codes.parquet")
+    val bytes = Fs.layoutBytes(spark, s"$a/codes.parquet") +
+      Fs.layoutBytes(spark, s"$b/codes.parquet")
     la.unionByName(lb)
-      .repartition(graft.core.Fs.packTarget(bytes), col("cell"))
+      .repartition(Fs.packTarget(bytes), col("cell"))
       .sortWithinPartitions("cell", "vec_id")
       .write.mode("overwrite").parquet(s"$to/codes.parquet")
+    Snapshots.commitCompacted(spark, None, to, Layout)
   }
 
   /** Load a cell-partitioned index generation ([[compactPartitioned]]).
@@ -350,28 +303,13 @@ object AnnIndex {
     * inference narrows it to int, and a cast above the scan would both
     * change the schema and defeat dynamic partition pruning — DPP keys
     * on the bare partition attribute). Shared by [[loadPartitioned]]
-    * and [[loadAt]]'s partitioned-generation branch. */
+    * and [[loadAt]]'s partitioned branch. */
   private def cellAsLong(inferred: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(inferred.map(f =>
       if (f.name == "cell")
         f.copy(dataType = org.apache.spark.sql.types.LongType)
       else f))
-
-  /** The codes artifact with tombstoned vec_ids filtered out — a
-    * left-anti join against the (bounded, id-only) tombstone set; a
-    * no-op scan when no delete has ever happened. RECURSIVE lookup so
-    * flat append files and atomically-committed `batch-{id}`
-    * directories ([[commitBatch]]) read as one union. */
-  private def liveCodes(spark: SparkSession, path: String): DataFrame = {
-    val codes = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$path/codes.parquet")
-    if (graft.core.Fs.exists(spark, s"$path/tombstones.parquet"))
-      codes.join(
-        broadcast(spark.read.parquet(s"$path/tombstones.parquet").distinct()),
-        Seq("vec_id"), "left_anti")
-    else codes
-  }
 
   /** Parse the (M+1) codebooks out of a centroids scan — one bounded
     * collect of (M+1)·K rows (the KMeans division of labor — driver
@@ -392,68 +330,42 @@ object AnnIndex {
     * distributed scan, with any tombstoned vec_ids anti-joined out. */
   def load(spark: SparkSession, path: String): Index = {
     val (coarse, pq) = codebooks(spark.read.parquet(s"$path/centroids.parquet"))
-    Index(coarse, pq, liveCodes(spark, path))
+    Index(coarse, pq, Snapshots.live(spark, path, Layout))
   }
 
-  /** This artifact's manifest coordinates for the shared versioned-
-    * snapshot layer ([[graft.core.Snapshots]] — extracted round 11 so
-    * DedupIndex shares the machinery instead of forking it): three
-    * data-file kinds, one per artifact directory. */
-  private val SnapshotDirs = Seq(
+  /** The artifact's coordinates in the shared lifecycle
+    * ([[graft.core.Snapshots]]): three data-file kinds, one per
+    * directory; batches commit into codes; tombstones key on vec_id. */
+  private val Layout = Snapshots.Layout(Seq(
     "centroids" -> "centroids.parquet",
     "codes" -> "codes.parquet",
-    "tombstones" -> "tombstones.parquet")
+    "tombstones" -> "tombstones.parquet"), data = "codes", id = "vec_id")
 
-  /** Record the artifact's CURRENT file sets as snapshot `version` — a
-    * manifest parquet of (kind, file) rows under `{path}/manifest/`,
-    * the Delta/Iceberg commit pattern applied to the index: every
-    * mutation here is append-only (append adds code files, delete adds
-    * tombstone files; save/compact write NEW directories), so a
-    * version's recorded files remain on disk untouched as later
-    * versions accumulate, and [[loadAt]] can serve any pinned snapshot
-    * — takedown audits ("what did the index serve last Tuesday"),
-    * reproducible retrieval runs, and safe rollback after a bad batch,
-    * none of which a directory-state read can answer once the
-    * directory has moved on. Paths are root-relative (b17 gates a
-    * physically relocated artifact serving its history) and the
-    * applied-epoch ledger is recorded alongside the data (ADVICE r10 —
-    * see [[graft.core.Snapshots.snapshot]]); reference anchor: the
-    * produce-once/consume-downstream trace-artifact contract
-    * (main.rs:17-25), here versioned. */
+  /** Record the artifact's CURRENT file sets as snapshot `version` —
+    * takedown audits ("what did the index serve last Tuesday"),
+    * reproducible retrieval runs and safe rollback after a bad batch,
+    * none of which a directory read can answer once the directory has
+    * moved on; reference anchor: the produce-once/consume-downstream
+    * trace-artifact contract (main.rs:17-25), here versioned. */
   def snapshot(spark: SparkSession, path: String, version: Int): Unit =
-    Snapshots.snapshot(spark, path, version, SnapshotDirs)
+    Snapshots.snapshot(spark, path, version, Layout)
 
-  /** The committed snapshot versions, ascending — one bounded listing;
-    * stray names ignored, in-flight snapshot writes not yet listed. */
   def versions(spark: SparkSession, path: String): Seq[Int] =
     Snapshots.versions(spark, path)
 
-  /** Load the index AS OF snapshot `version` — time travel. Every file
-    * set comes from the manifest, NOT the directory: codes added after
-    * the snapshot are invisible, and tombstones written after it do
-    * not mask (a v2 read serves a vector that v3 deleted — that is the
-    * point; b16 gates it). One bounded manifest collect (file names),
-    * then the same distributed scans as [[load]] over the pinned
-    * files. */
+  /** Load the index AS OF snapshot `version` — time travel: codes added
+    * after the snapshot are invisible, and tombstones written after it
+    * do not mask (b16 gates it). */
   def loadAt(spark: SparkSession, path: String, version: Int): Index = {
     val man = Snapshots.entries(spark, path, version)
-    // Manifests store root-relative paths; resolve against THIS root,
-    // so a relocated artifact serves its pinned history from wherever
-    // it lives now (legacy absolute entries pass through).
-    def files(kind: String): Seq[String] =
-      man.collect { case (k, file) if k == kind =>
-        Snapshots.resolve(path, file)
-      }
-    val (coarse, pq) = codebooks(spark.read.parquet(files("centroids"): _*))
-    val codeFiles = files("codes")
-    // A CELL-PARTITIONED generation ([[compactPartitioned]]) keeps the
-    // cell column in directory NAMES, not the data files; reading the
-    // manifest's explicit file list alone would lose it (ADVICE r10 —
-    // the first search then failed on the missing column). basePath
-    // re-anchors partition discovery at the artifact's codes root so
-    // the stored relative paths recover their cell values, with the
-    // partition column declared LONG (see [[cellAsLong]]).
-    val codes =
+    val (coarse, pq) = codebooks(
+      spark.read.parquet(Snapshots.files(path, man, "centroids"): _*))
+    val live = Snapshots.pinned(spark, path, man, Layout) { codeFiles =>
+      // A CELL-PARTITIONED root ([[compactPartitioned]]) keeps the cell
+      // column in directory NAMES, not the data files; reading the
+      // manifest's explicit file list alone would lose it (ADVICE r10).
+      // basePath re-anchors partition discovery at the codes root, with
+      // the partition column declared LONG (see [[cellAsLong]]).
       if (codeFiles.exists(_.contains("/cell="))) {
         val base = s"$path/codes.parquet"
         val inferred = spark.read.option("basePath", base)
@@ -462,69 +374,15 @@ object AnnIndex {
           .parquet(codeFiles: _*)
           .select("vec_id", "cell", "codes")
       } else spark.read.parquet(codeFiles: _*)
-    val tombs = files("tombstones")
-    val live =
-      if (tombs.isEmpty) codes
-      else codes.join(
-        broadcast(spark.read.parquet(tombs: _*).distinct()),
-        Seq("vec_id"), "left_anti")
+    }
     Index(coarse, pq, live)
   }
 
-  /** ROLL BACK the artifact to snapshot `toVersion` — the restore
-    * side of the snapshot layer (loadAt READS history; rollback makes
-    * a pinned version the directory's CURRENT state again — the
-    * recovery move after a bad batch: a mis-encoded append, an
-    * over-broad takedown). Physically: every data file not referenced
-    * by a manifest ≤ `toVersion` is deleted (files are compared by
-    * their root-relative names, the manifest's own coordinate
-    * system), newer manifests are dropped, emptied artifact dirs and
-    * committed-batch dirs disappear with their `_applied` markers
-    * (the rolled-back epochs SHOULD re-apply if a restarted stream
-    * re-delivers them — their data was deliberately removed; when the
-    * target manifest records the versioned applied ledger, the marker
-    * set is additionally restored to exactly its as-of state, covering
-    * flat-append epochs whose files leave no batch directory behind),
-    * and any
-    * `_staging` leftovers are reclaimed (staged-but-uncommitted work
-    * is replayable by definition). Append-only mutation is what makes
-    * this safe: a file referenced by v≤N was never rewritten
-    * afterward, so keeping exactly the referenced set restores the
-    * bit-exact v≤N state — b19 gates the restored directory read
-    * against the same oracle that gated the pinned read. Cost: one
-    * bounded manifest collect per retained version + one recursive
-    * listing + per-file deletes — tracks FILE COUNT, never data
-    * volume. */
   def rollback(spark: SparkSession, path: String, toVersion: Int): Unit =
-    Snapshots.rollback(spark, path, toVersion, SnapshotDirs.map(_._2))
+    Snapshots.rollback(spark, path, toVersion, Layout)
 
-  /** EXPIRE snapshot history older than the last `keepLast` versions —
-    * the retention/vacuum side of the snapshot layer (VERDICT r10 task
-    * 2: rollback forgets the FUTURE of a version; expire forgets the
-    * PAST). Time-travel history cannot be unbounded at 100 TB: every
-    * retained version pins its file set against physical reclamation,
-    * so a deployment sets a retention window exactly as Delta/Iceberg
-    * `VACUUM`/`expire_snapshots` do. Physically: the OLDEST
-    * `versions - keepLast` manifests are dropped, and any data file
-    * referenced by an expired manifest but by NO retained one —
-    * rollback's file-set subtraction generalized from "roll back to v"
-    * to "forget before v" — is deleted, with emptied batch dirs losing
-    * their `_applied` markers (the forgotten epochs' evidence goes
-    * with their history). The CURRENT state is untouched by
-    * construction: a file the directory still serves is either in a
-    * retained manifest (kept) or in no manifest at all (post-snapshot
-    * appends — never in the expired-referenced set). Under this
-    * artifact's append-only mutations newer manifests are supersets of
-    * older ones, so the exclusive set is empty and expire reclaims
-    * only manifest history; the subtraction is what makes expire SAFE
-    * on histories with out-of-band removals (foreign writers, partial
-    * restores, rewrite-style OPTIMIZE passes), and AnnIndexSpec pins
-    * both behaviors. Cost: one bounded manifest collect per version —
-    * tracks file count, never data volume. No `_staging` sweep: expire
-    * may run beside a live writer whose staged work is in flight. */
   def expire(spark: SparkSession, path: String, keepLast: Int): Unit =
-    Snapshots.expire(spark, path, keepLast,
-      SnapshotDirs.map(_._1).toSet, SnapshotDirs.map(_._2))
+    Snapshots.expire(spark, path, keepLast, Layout)
 
   /** x33's cell-pruned reconstruction-cosine top-5 search, run
     * entirely from index artifacts: the database side is the CODED

@@ -359,8 +359,8 @@ object CurationQueries {
     // the v1 base: post-snapshot rows must be invisible and
     // post-snapshot tombstones must NOT mask (the audit point — the
     // pinned answer differs from the live directory's on both counts).
-    // SCALE SHAPE: one bounded manifest collect, then b13's exact
-    // serving plan over the pinned file set.
+    // SCALE SHAPE: one manifest file read on the driver, then b13's
+    // exact serving plan over the pinned file set.
     Q(
       "b23_dedup_index_pinned_read", baseOnlyDedupSql
     ) { (spark, dir) =>
@@ -391,7 +391,8 @@ object CurationQueries {
     // rows (unreferenced by v1's manifest), removes the tombstone
     // artifact outright (v1 recorded none), and the DIRECTORY read —
     // load, not loadAt — must then give the v1 base-only answer
-    // bit-exactly. Cost tracks file count, never data volume.
+    // bit-exactly. Cost tracks file count, never data volume: rollback
+    // reads manifest files and deletes files, running no Spark job.
     Q(
       "b24_dedup_index_rollback", baseOnlyDedupSql
     ) { (spark, dir) =>

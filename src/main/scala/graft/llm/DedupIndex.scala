@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, Fs, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -116,7 +116,7 @@ object DedupIndex {
     * batch before any data write. */
   def append(spark: SparkSession, rows: DataFrame, path: String): Unit = {
     val guarded =
-      if (!graft.core.Fs.exists(spark, s"$path/rows.parquet")) rows
+      if (!Fs.exists(spark, s"$path/rows.parquet")) rows
       else rows.unionByName(disjointGuard(
         spark.read.option("recursiveFileLookup", "true")
           .parquet(s"$path/rows.parquet"),
@@ -125,95 +125,33 @@ object DedupIndex {
       .write.mode("append").parquet(s"$path/rows.parquet")
   }
 
-  /** ATOMICALLY commit one batch's index rows as a whole batch
-    * DIRECTORY: stage under a private `{path}/_staging/batch-{id}-
-    * {attempt}` directory (a crashed partial stage is invisible to
-    * readers; the replay stages its own attempt), then ONE atomic rename into
-    * `{path}/rows.parquet/batch-{id}`. The rename IS the commit: a
-    * reader never sees a torn append, and the committed directory's
-    * existence is durable evidence the batch applied — which is what
-    * makes [[appendIdempotent]] safe against a crash BETWEEN the data
-    * commit and the marker write (ADVICE r9: the old flat
-    * mode-append + marker-after left exactly that window, where a
-    * replay double-indexed a completed-but-unmarked batch). */
+  /** Commit one batch's index rows as the atomic directory
+    * `rows.parquet/batch-{id}` ([[Snapshots.commitBatch]]). */
   def commitBatch(spark: SparkSession, rows: DataFrame, path: String,
-      batchId: Long): Unit = {
-    // Attempt-unique staging (AnnIndex.commitBatch's rationale): racing
-    // committers of one batch id stage privately; Fs.rename's atomic
-    // refuse-existing-destination is the single arbiter, and the loser's
-    // staged copy is reclaimed by the rename itself.
-    val staging =
-      s"$path/_staging/batch-$batchId-${java.util.UUID.randomUUID().toString}"
-    rows.sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(staging)
-    graft.core.Fs.rename(spark, staging, s"$path/rows.parquet/batch-$batchId")
-  }
+      batchId: Long): Unit =
+    Snapshots.commitBatch(spark, rows.sortWithinPartitions("doc_id"), path,
+      Layout, batchId)
 
-  /** IDEMPOTENT append for streaming ingestion — AnnIndex's contract
-    * transplanted: foreachBatch may re-deliver a micro-batch after a
-    * failure, and an unconditional append would double-index it
-    * (duplicate index rows would double-count band-key candidates and,
-    * worse, make the artifact's doc_id set a multiset). Two layers:
-    *   - the data commit is [[commitBatch]]'s staged ATOMIC rename, so
-    *     a replay checks the committed directory itself — there is no
-    *     window where the data is applied but undetectable;
-    *   - the `{path}/_applied/batch-{id}` marker is the LEDGER a
-    *     compaction carries into the new generation (where the batch
-    *     directories themselves are rewritten away). A batch whose
-    *     marker OR committed directory exists is skipped — and a
-    *     found-committed-but-unmarked batch (crash in the old window)
-    *     heals its missing marker instead of re-appending.
-    * Exactly-once across committed batches, at-least-once only INSIDE
-    * the invisible staging write. Returns whether the batch was
-    * applied by this call. */
+  /** Exactly-once append of a streamed batch
+    * ([[Snapshots.appendIdempotent]]) — a replay would double-count
+    * band-key candidates and make the doc_id set a multiset. Returns
+    * whether this call applied the batch. */
   def appendIdempotent(spark: SparkSession, rows: DataFrame, path: String,
-      batchId: Long): Boolean = {
-    val marker = s"$path/_applied/batch-$batchId"
-    val committed = s"$path/rows.parquet/batch-$batchId"
-    if (graft.core.Fs.exists(spark, marker)) false
-    else if (graft.core.Fs.exists(spark, committed)) {
-      graft.core.Fs.touch(spark, marker) // heal the ledger
-      false
-    } else {
-      commitBatch(spark, rows, path, batchId)
-      graft.core.Fs.touch(spark, marker)
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    Snapshots.appendIdempotent(spark, rows.sortWithinPartitions("doc_id"),
+      path, Layout, batchId)
 
-  /** DELETE documents from the index (takedowns, de-listed sources,
-    * re-crawled URLs whose old text must stop suppressing future
-    * near-duplicates — VERDICT r10 task 1: an index that can only
-    * grow keeps serving dedup evidence for documents the corpus no
-    * longer contains). Deletes are TOMBSTONES — AnnIndex.delete's
-    * contract transplanted: a `{path}/tombstones.parquet` artifact of
-    * doc_ids, appended per delete batch, never touching the rows files
-    * (a per-takedown rewrite of the rows artifact is a full table
-    * write; every lake-format delete is a delete-file for the same
-    * reason). [[load]] anti-joins the tombstone set out, so a deleted
-    * document stops matching incoming batches the moment the tombstone
-    * lands; [[compact]] makes the delete physical and starts the new
-    * generation tombstone-free. `ids` must have a doc_id column; the
-    * write is one bounded batch. */
+  /** DELETE documents by tombstoning their doc_ids
+    * ([[Snapshots.delete]]) — takedowns, de-listed sources, re-crawled
+    * URLs whose old text must stop suppressing future near-duplicates
+    * (VERDICT r10 task 1). [[load]] masks them at once, [[compact]]
+    * drops them physically. `ids` must have a doc_id column. */
   def delete(spark: SparkSession, ids: DataFrame, path: String): Unit =
-    ids.select(col("doc_id"))
-      .write.mode("append").parquet(s"$path/tombstones.parquet")
+    Snapshots.delete(spark, ids, path, Layout)
 
-  /** Load the full index — a RECURSIVE file lookup, so flat base/append
-    * files and atomically-committed batch directories read as one
-    * union (no partition inference: batch directories are commit
-    * units, not partition keys) — with any tombstoned doc_ids
-    * anti-joined out (a broadcast of bare ids, bounded by deletes; a
-    * no-op scan when no delete has ever happened). */
-  def load(spark: SparkSession, path: String): DataFrame = {
-    val rows = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$path/rows.parquet")
-    if (graft.core.Fs.exists(spark, s"$path/tombstones.parquet"))
-      rows.join(
-        broadcast(spark.read.parquet(s"$path/tombstones.parquet").distinct()),
-        Seq("doc_id"), "left_anti")
-    else rows
-  }
+  /** Load the full index at its CURRENT state ([[Snapshots.live]]). */
+  def load(spark: SparkSession, path: String): DataFrame =
+    Snapshots.live(spark, path, Layout)
 
   /** Compact an index whose rows artifact has accumulated append
     * fragments (b14/s15 leave the base write plus one file set per
@@ -223,126 +161,82 @@ object DedupIndex {
     * measured-bytes bin-packing, shared via Fs.packTarget) sorted by
     * doc_id within each file, landing in a NEW directory (parquet
     * cannot overwrite a source mid-read; pointer-swap deployment,
-    * AnnIndex.compact's pattern). A pure layout change: same rows,
-    * same signatures — DedupIndexSpec pins file count, ordering, and
-    * row identity. No gated bench row: the answer-invisibility of a
-    * layout rewrite is already hash-gated twice (b6 on tables, b10 on
-    * the ANN index); this is the same contract on a third artifact,
-    * spec-gated. */
+    * AnnIndex.compact's pattern). The new root is servable at once: it
+    * carries the source's served forest generation and applied-epoch
+    * ledger and is committed as the version after the source's last,
+    * so [[loadAt]], [[loadForestAt]] and [[maintainClusters]] run on
+    * it. A pure layout change: same rows, same signatures, same
+    * forest — DedupIndexSpec pins file count, ordering, row identity
+    * and the served history. No gated bench row: the
+    * answer-invisibility of a layout rewrite is already hash-gated
+    * twice (b6 on tables, b10 on the ANN index); this is the same
+    * contract on a third artifact, spec-gated. */
   def compact(spark: SparkSession, from: String, to: String): Unit = {
-    val bytes = graft.core.Fs.layoutBytes(spark, s"$from/rows.parquet")
-    val target = graft.core.Fs.packTarget(bytes)
+    val bytes = Fs.layoutBytes(spark, s"$from/rows.parquet")
+    val target = Fs.packTarget(bytes)
     // load is the MASKED view: tombstoned rows are DROPPED here —
-    // compaction is where deletes become physical; the new generation
+    // compaction is where deletes become physical; the new root
     // has no tombstone artifact, so its reload sees exactly the
     // surviving rows (AnnIndex.compact's contract).
     load(spark, from)
       .repartition(target)
       .sortWithinPartitions("doc_id")
       .write.mode("overwrite").parquet(s"$to/rows.parquet")
-    // ADVICE r9: without the carried ledger, a streaming restart from a
-    // retained checkpoint could replay an old epoch into the compacted
-    // generation (whose batch directories were rewritten away) and
-    // double-index it.
-    graft.core.Fs.copyAppliedLedger(spark, from, to, "rows.parquet")
+    // the served forest generation moves with the rows, keeping its number
+    val gen = versions(spark, from).lastOption.flatMap { v =>
+      val man = Snapshots.entries(spark, from, v)
+      servedGen(man).map { g =>
+        saveForest(spark, forestFromEntries(spark, from, v, man), to, g)
+        g
+      }
+    }
+    Snapshots.commitCompacted(spark, Some(from), to, Layout, gen)
   }
 
-  /** This artifact's manifest coordinates for the shared versioned-
-    * snapshot layer ([[graft.core.Snapshots]]): three data-file kinds —
-    * the signature rows, the id-only tombstones, and the cluster label
-    * FOREST generations ([[saveForest]]). */
-  private val SnapshotDirs = Seq(
+  /** The artifact's coordinates in the shared lifecycle
+    * ([[graft.core.Snapshots]]): the signature rows (where batches
+    * commit), the id-only tombstones (keyed on doc_id), and the cluster
+    * label forest, whose manifests record only the SERVED generation
+    * ([[saveForest]]). */
+  private val Layout = Snapshots.Layout(Seq(
     "rows" -> "rows.parquet",
     "tombstones" -> "tombstones.parquet",
-    "forest" -> "forest.parquet")
+    "forest" -> "forest.parquet"), data = "rows", id = "doc_id",
+    gens = Some("forest"))
 
-  /** Record the artifact's CURRENT file sets as snapshot `version` —
-    * AnnIndex.snapshot's contract on the dedup artifact, same shared
-    * machinery: every mutation here is append-only (save/compact write
-    * NEW directories; append/commitBatch add row files; delete adds
-    * tombstone files), so a version's recorded files stay on disk
-    * untouched as later versions accumulate and [[loadAt]] can serve
-    * any pinned state. Why a DEDUP index needs time travel: dedup
-    * decisions are part of a training run's provenance — "which
-    * documents did yesterday's ingest suppress, against which index
-    * state" must be answerable after the index has grown and absorbed
-    * takedowns (a reproducibility/audit demand, not a serving one).
-    * Root-relative paths + the applied-epoch ledger sentinel, per
-    * [[graft.core.Snapshots.snapshot]]. */
+  /** Record the artifact's CURRENT file sets as snapshot `version`.
+    * Why a DEDUP index needs time travel: dedup decisions are part of a
+    * training run's provenance — "which documents did yesterday's
+    * ingest suppress, against which index state" must be answerable
+    * after the index has grown and absorbed takedowns. `forestGen`
+    * names the generation this snapshot SERVES — a caller that just
+    * ran saveForest(gen) passes it (ADVICE r13); None carries the
+    * previous manifest's served gen forward. */
   def snapshot(spark: SparkSession, path: String, version: Int,
       forestGen: Option[Int] = None): Unit =
-    graft.core.Snapshots.snapshot(spark, path, version, SnapshotDirs,
-      // forest gens are SERVE-STATE, not history: [[loadForestAt]] only
-      // ever reads a manifest's latest generation, so recording the
-      // superseded ones would pin them in every future manifest and
-      // defeat retention — expire could never vacuum an old gen while
-      // any newer snapshot existed (VERDICT r12 task 4). Older gens
-      // stay reachable exactly as long as a RETAINED manifest records
-      // them as its own latest — the as-of contract b27/b29 pin.
-      // `forestGen` names the generation this snapshot SERVES — a
-      // caller that just ran saveForest(gen) passes it (ADVICE r13:
-      // inferring newest-non-empty could promote an abandoned gen);
-      // None carries the previous manifest's served gen forward.
-      latestGenOnly = Set("forest"),
-      pinnedGens = forestGen.map("forest" -> _).toMap)
+    Snapshots.snapshot(spark, path, version, Layout, forestGen)
 
-  /** The committed snapshot versions, ascending. */
   def versions(spark: SparkSession, path: String): Seq[Int] =
-    graft.core.Snapshots.versions(spark, path)
+    Snapshots.versions(spark, path)
 
-  /** Load the index AS OF snapshot `version` — time travel. File sets
-    * come from the manifest, NOT the directory: rows appended after the
-    * snapshot are invisible, and tombstones written after it do NOT
-    * mask (a v1 read serves dedup evidence for a document v2 deleted —
-    * that is the audit point; b23 gates it against a base-only
-    * oracle while the directory holds a later generation with appends
-    * AND deletes). One bounded manifest collect, then the same
-    * distributed scans as [[load]] over the pinned files. */
+  /** Load the index AS OF snapshot `version` — time travel: rows
+    * appended after the snapshot are invisible, and tombstones written
+    * after it do NOT mask (a v1 read serves dedup evidence for a
+    * document v2 deleted — that is the audit point; b23 gates it). */
   def loadAt(spark: SparkSession, path: String, version: Int): DataFrame =
-    loadFromEntries(spark, path,
-      graft.core.Snapshots.entries(spark, path, version))
+    pinnedRows(spark, path, Snapshots.entries(spark, path, version))
 
-  /** [[loadAt]] over an ALREADY-COLLECTED manifest — callers that need
-    * both the pinned rows and the pinned forest of one version
-    * ([[maintainClustersImpl]]) collect the manifest once and feed
-    * both views from it (round 15, guide §1.2 fewer jobs: the old
-    * shape collected the same manifest parquet twice per maintain). */
-  private def loadFromEntries(spark: SparkSession, path: String,
-      man: Seq[(String, String)]): DataFrame = {
-    def files(kind: String): Seq[String] =
-      man.collect { case (k, file) if k == kind =>
-        graft.core.Snapshots.resolve(path, file)
-      }
-    val rows = spark.read.parquet(files("rows"): _*)
-    val tombs = files("tombstones")
-    if (tombs.isEmpty) rows
-    else rows.join(
-      broadcast(spark.read.parquet(tombs: _*).distinct()),
-      Seq("doc_id"), "left_anti")
-  }
+  /** [[loadAt]] over an already-read manifest, so [[maintainClustersImpl]]
+    * feeds the pinned rows and the pinned forest from one read. */
+  private def pinnedRows(spark: SparkSession, path: String,
+      man: Seq[(String, String)]): DataFrame =
+    Snapshots.pinned(spark, path, man, Layout)(fs => spark.read.parquet(fs: _*))
 
-  /** ROLL BACK the artifact to snapshot `toVersion` — the recovery
-    * move after a bad ingest (a mis-parsed crawl slice whose garbage
-    * signatures suppress nothing or everything, an over-broad
-    * takedown): every row/tombstone file not referenced by a manifest
-    * ≤ `toVersion` is deleted, newer manifests drop, the applied-epoch
-    * ledger is restored to its as-of state, and rolled-back epochs
-    * re-apply if a restarted stream re-delivers them. Shared contract
-    * and rationale: [[graft.core.Snapshots.rollback]]; b24 gates the
-    * restored directory read against the same base-only oracle that
-    * gates the pinned read. */
   def rollback(spark: SparkSession, path: String, toVersion: Int): Unit =
-    graft.core.Snapshots.rollback(spark, path, toVersion, SnapshotDirs.map(_._2))
+    Snapshots.rollback(spark, path, toVersion, Layout)
 
-  /** EXPIRE snapshot history older than the last `keepLast` versions —
-    * retention/vacuum ([[graft.core.Snapshots.expire]]): drops the
-    * oldest manifests and reclaims files referenced by no retained
-    * one; the current state is untouched by construction. Spec-gated
-    * (DedupIndexSpec): the behavior is b22's, hash-gated there on the
-    * ANN artifact through the same shared code path. */
   def expire(spark: SparkSession, path: String, keepLast: Int): Unit =
-    graft.core.Snapshots.expire(spark, path, keepLast,
-      SnapshotDirs.map(_._1).toSet, SnapshotDirs.map(_._2))
+    Snapshots.expire(spark, path, keepLast, Layout)
 
   /** The (doc_id, mh0..mh15) signature view of loaded index rows —
     * docs too short to shingle (NULL lanes) dropped, exactly the
@@ -402,7 +296,7 @@ object DedupIndex {
   def saveForest(spark: SparkSession, labels: DataFrame, path: String,
       gen: Int): Unit = {
     val genDir = s"$path/forest.parquet/gen-$gen"
-    require(!graft.core.Fs.exists(spark, genDir),
+    require(!Fs.exists(spark, genDir),
       s"saveForest: $genDir already exists — generations are append-only " +
         "commit units; use a fresh gen number (a crashed run's stage is " +
         "invisible and needs no cleanup before retrying it)")
@@ -412,34 +306,28 @@ object DedupIndex {
     labels.select(col(idCol).as("id"), col(lblCol).as("lbl"))
       .sortWithinPartitions("id")
       .write.mode("overwrite").parquet(staging)
-    graft.core.Fs.rename(spark, staging, genDir)
+    Fs.rename(spark, staging, genDir)
   }
 
   private val ForestGen = """forest\.parquet/gen-(\d+)/.*""".r
 
-  /** Load the label forest AS OF snapshot `version`: of the forest
-    * generations that manifest records, the LATEST one — older gens
-    * stay pinned only because earlier manifests reference them. One
-    * bounded manifest collect + one pruned scan of that gen's files. */
-  def loadForestAt(spark: SparkSession, path: String, version: Int): DataFrame =
-    forestFromEntries(spark, path, version,
-      graft.core.Snapshots.entries(spark, path, version))
+  /** The forest generation a manifest serves: the LATEST one it records
+    * (older gens stay pinned only because earlier manifests reference
+    * them). */
+  private def servedGen(man: Seq[(String, String)]): Option[Int] =
+    man.collect { case ("forest", ForestGen(g)) => g.toInt }.maxOption
 
-  /** [[loadForestAt]] over an already-collected manifest — see
-    * [[loadFromEntries]]. */
+  /** Load the label forest AS OF snapshot `version` — its served
+    * generation. One manifest read + one pruned scan of that gen. */
+  def loadForestAt(spark: SparkSession, path: String, version: Int): DataFrame =
+    forestFromEntries(spark, path, version, Snapshots.entries(spark, path, version))
+
   private def forestFromEntries(spark: SparkSession, path: String,
       version: Int, man: Seq[(String, String)]): DataFrame = {
-    val forest = man.collect { case ("forest", f) => f }
-    val gens = forest.flatMap {
-      case ForestGen(g) => Some(g.toInt)
-      case _ => None
-    }
-    require(gens.nonEmpty, s"snapshot v$version at $path records no forest generation")
-    val latest = gens.max
-    val files = forest
-      .filter(_.contains(s"forest.parquet/gen-$latest/"))
-      .map(f => graft.core.Snapshots.resolve(path, f))
-    spark.read.parquet(files: _*)
+    val gen = servedGen(man)
+    require(gen.isDefined, s"snapshot v$version at $path records no forest generation")
+    spark.read.parquet(Snapshots.files(path, man, "forest")
+      .filter(_.contains(s"forest.parquet/gen-${gen.get}/")): _*)
   }
 
   /** MAINTAIN cluster labels from the persisted state — the deployed
@@ -494,12 +382,9 @@ object DedupIndex {
 
   private def maintainClustersImpl(spark: SparkSession, path: String,
       version: Int, rawBSig: DataFrame, batchIds: DataFrame): DataFrame = CacheScope.scoped {
-    // ONE manifest collect feeds both the pinned rows and the pinned
-    // forest (round 15, guide §1.2: the old shape ran loadAt and
-    // loadForestAt as two collects of the same manifest parquet — one
-    // redundant Spark job + manifest read per maintain call)
-    val man = graft.core.Snapshots.entries(spark, path, version)
-    val idx = loadFromEntries(spark, path, man)
+    // ONE manifest read feeds both the pinned rows and the pinned forest
+    val man = Snapshots.entries(spark, path, version)
+    val idx = pinnedRows(spark, path, man)
     val iSig = sigOf(idx)
     val bSig = CacheScope.cacheEager(
       rawBSig.unionByName(

@@ -730,8 +730,10 @@ object DedupQueries {
     // forest path is exercised for real — v1 keeps serving gen-1
     // forever while the directory holds gen-2 (DedupIndexSpec pins
     // that pairing). SCALE SHAPE: every day pays batch-linear work
-    // plus two pruned artifact scans; no day ever re-pairs a previous
-    // day's corpus — the 100 TB crawl cadence, end to end.
+    // plus two pruned artifact scans, fed by one driver-side manifest
+    // file read; snapshots write one small manifest file, no Spark
+    // job; no day ever re-pairs a previous day's corpus — the 100 TB
+    // crawl cadence, end to end.
     Q(
       "b27_forest_daily_chain", clusterOracleSql
     ) { (spark, dir) =>
@@ -924,8 +926,8 @@ object DedupQueries {
     // directory (2 → 1), not asserted; DedupIndexSpec adds the
     // pinned-read side (a retained version serves its as-of forest
     // bit-exactly after the vacuum, the expired one refuses). SCALE
-    // SHAPE: expire is manifest-arithmetic plus per-file deletes —
-    // file-count work, never data reads; the daily loop's storage now
+    // SHAPE: expire is driver-side manifest file reads plus per-file
+    // deletes — file-count work, no Spark job, never data reads; the daily loop's storage now
     // stays bounded instead of accreting one forest per day forever.
     Q(
       "b29_forest_retention",

@@ -41,15 +41,6 @@ object KMeans {
   val K = 16
   val Iters = 3
 
-  /** In-order scala dot — same fold order as the native DotProduct
-    * expression and DuckDB's list_dot_product. */
-  private def dotRef(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
   /** Nearest-centroid cell id for a vector column — the native
     * NearestCells expression: the codebook rides the plan as a
     * REFERENCE ARRAY and the argmin is a primitive loop inside

@@ -784,11 +784,12 @@ object SimilarityQueries {
     // ("what did retrieval serve before the delete batch?"),
     // bit-reproducible evaluation runs against a pinned index, and
     // rollback after a bad append — each just a loadAt at the right
-    // version. SCALE SHAPE: a snapshot commit is one bounded
-    // listStatus + a file-count-sized manifest write; loadAt adds one
-    // bounded manifest collect (file NAMES, never data) before the
-    // same distributed pinned-file scans b7's serve path runs — cost
-    // tracks manifest length, not the corpus, at any scale.
+    // version. SCALE SHAPE: a snapshot commit is one bounded listing
+    // + one small driver-written manifest file committed by rename —
+    // no Spark job; loadAt adds one manifest file read (file NAMES,
+    // never data) before the same distributed pinned-file scans b7's
+    // serve path runs — cost tracks manifest length, not the corpus,
+    // at any scale.
     Q(
       "b16_index_time_travel", ivfPqAppendSql
     ) { (spark, dir) =>
@@ -825,8 +826,8 @@ object SimilarityQueries {
     // full pre-delete corpus bit-for-bit. SCALE SHAPE: the move is one
     // directory rename (metadata-only on HDFS; a manifest pointer
     // update on object stores) — cost independent of artifact size —
-    // and the pinned read is b16's: one bounded manifest collect, then
-    // b7's distributed serve scans.
+    // and the pinned read is b16's: one manifest file read, then b7's
+    // distributed serve scans.
     Q(
       "b17_index_relocate", ivfPqAppendSql
     ) { (spark, dir) =>
@@ -901,9 +902,9 @@ object SimilarityQueries {
     // loadAt) serves exactly the v2 state, gated against b8's
     // VERBATIM oracle. Append-only mutation is why file-set
     // subtraction restores bit-exact state: nothing v2 referenced was
-    // ever rewritten. SCALE SHAPE: one bounded manifest collect per
+    // ever rewritten. SCALE SHAPE: one manifest file read per
     // retained version + one recursive listing + per-file deletes —
-    // tracks file count, never data volume; the junk batch's cost in
+    // no Spark job, tracks file count, never data volume; the junk batch's cost in
     // this row is the encode+append itself (corpus-linear, same as
     // b8), and the rollback undoes it in metadata time.
     Q(
@@ -946,8 +947,8 @@ object SimilarityQueries {
     // supersets — so this row also proves expire deletes NO data file
     // a retained version needs (AnnIndexSpec pins the file-level
     // contract, including the subtraction actually firing on a
-    // history with out-of-band removals). SCALE SHAPE: one bounded
-    // manifest collect per version + per-file deletes — tracks
+    // history with out-of-band removals). SCALE SHAPE: one manifest
+    // file read per version + per-file deletes — no Spark job, tracks
     // manifest length, never data volume.
     Q(
       "b22_index_expire", ivfPqAppendSql

@@ -123,6 +123,22 @@ class AnnIndexSpec extends AnyFunSuite {
       loaded.coarse.zip(l2.coarse).foreach { case (x, y) =>
         assert(java.util.Arrays.equals(x, y))
       }
+      // the new root lands committed: the source had no history, so it
+      // is version 0, and its pinned read is the current state
+      assert(AnnIndex.versions(spark, path2) == Seq(0))
+      val at0 = AnnIndex.loadAt(spark, path2, 0).codes.orderBy("vec_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+      assert(at0.sameElements(b))
+      // with source history, the new root continues its numbering
+      AnnIndex.snapshot(spark, path, 4)
+      val path3 = s"$path2-next"
+      try {
+        AnnIndex.compact(spark, path, path3)
+        assert(AnnIndex.versions(spark, path3) == Seq(5))
+        val at5 = AnnIndex.loadAt(spark, path3, 5).codes.orderBy("vec_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+        assert(at5.sameElements(a))
+      } finally graft.core.Fs.delete(spark, path3)
       // clustering contract: within every compacted file, rows are
       // sorted by (cell, vec_id) — the row-group locality a
       // cell-pruned search exploits
@@ -287,8 +303,9 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.append(spark, loaded, all.filter(col("vec_id") >= half), path)
       AnnIndex.snapshot(spark, path, 2)
       // stored paths are artifact-root-relative, never absolute URIs
-      val stored = spark.read.parquet(s"$path/manifest/v00002.parquet")
-        .select("file").collect().map(_.getString(0))
+      val stored = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"$path/manifest/v00002.tsv"))
+        .toArray(new Array[String](0)).map(_.split("\t", 2)(1))
       assert(stored.nonEmpty)
       assert(stored.forall(f => !f.startsWith("/") && !f.contains(":/")))
       val before = AnnIndex.loadAt(spark, path, 2).codes
@@ -313,14 +330,24 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.save(spark, built, path)
       AnnIndex.snapshot(spark, path, 1)
       AnnIndex.snapshot(spark, path, 2)
-      // a stray non-numeric name must not throw (old code: toInt NFE)
+      // stray names must not throw (old code: toInt NFE) nor count: a
+      // non-numeric version, a near-miss suffix, a pattern-named
+      // DIRECTORY, and an unrelated file
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(s"$path/manifest/vNOTES.tsv"))
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(s"$path/manifest/v00003.tsv.bak"))
       java.nio.file.Files.createDirectory(
-        java.nio.file.Paths.get(s"$path/manifest/vNOTES.parquet"))
+        java.nio.file.Paths.get(s"$path/manifest/v00004.tsv"))
       java.nio.file.Files.createFile(
         java.nio.file.Paths.get(s"$path/manifest/README.txt"))
-      // an in-flight snapshot (still carrying _temporary) is not committed
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$path/manifest/v00009.parquet/_temporary"))
+      // an in-flight snapshot is a staged manifest file, not yet renamed
+      // into manifest/: not committed, and reclaimed by rollback
+      val staged = s"$path/_staging/manifest-v00009-inflight"
+      graft.core.Fs.writeLines(spark, staged, Seq("codes\tcodes.parquet/x.parquet"))
+      assert(AnnIndex.versions(spark, path) == Seq(1, 2))
+      AnnIndex.rollback(spark, path, 2)
+      assert(!graft.core.Fs.exists(spark, staged))
       assert(AnnIndex.versions(spark, path) == Seq(1, 2))
     } finally rmDir(path)
   }
@@ -336,6 +363,7 @@ class AnnIndexSpec extends AnyFunSuite {
       val loaded = AnnIndex.load(spark, path)
       AnnIndex.append(spark, loaded, all.filter(col("vec_id") >= half), path)
       AnnIndex.compactPartitioned(spark, path, path2)
+      assert(AnnIndex.versions(spark, path2) == Seq(0))
       // physical layout: one cell=N directory per occupied coarse cell
       val dirs = new java.io.File(s"$path2/codes.parquet").listFiles()
         .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
@@ -556,7 +584,8 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.expire(spark, path, keepLast = 2)
       // v1 is forgotten; v2/v3 remain
       assert(AnnIndex.versions(spark, path) == Seq(2, 3))
-      assert(!graft.core.Fs.exists(spark, f"$path/manifest/v${1}%05d.parquet"))
+      assert(!graft.core.Fs.exists(spark, s"$path/manifest/v00001.tsv"))
+      assert(graft.core.Fs.exists(spark, s"$path/manifest/v00002.tsv"))
       intercept[Exception] { AnnIndex.loadAt(spark, path, 1).codes.count() }
       // append-only history: v1's files are all in v2/v3's supersets, so
       // NO data file may be reclaimed — retained pinned reads and the
@@ -710,7 +739,7 @@ class AnnIndexSpec extends AnyFunSuite {
           AnnIndex.mergeShards(spark, pa, pb, pStale)
         }
         graft.core.Fs.delete(spark, s"$pStale/_applied")
-        graft.core.Fs.touch(spark, s"$pStale/manifest/v00001.parquet")
+        graft.core.Fs.touch(spark, s"$pStale/manifest/v00001.tsv")
         intercept[IllegalArgumentException] {
           AnnIndex.mergeShards(spark, pa, pb, pStale)
         }
@@ -727,6 +756,10 @@ class AnnIndexSpec extends AnyFunSuite {
       val wantIds = all.filter(col("vec_id") % 10 =!= 3)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       assert(mergedIds == wantIds)
+      // the merged root lands committed as version 0, serving the merge
+      assert(AnnIndex.versions(spark, pm) == Seq(0))
+      assert(AnnIndex.loadAt(spark, pm, 0).codes.select("vec_id").collect()
+        .map(_.getLong(0)).toSet == wantIds)
       // sharding-independence: the merged search equals the
       // single-pipeline artifact's (same codebooks, same survivors)
       AnnIndex.save(spark, built.copy(codes = AnnIndex.encode(

@@ -93,6 +93,45 @@ class DedupIndexSpec extends AnyFunSuite {
     } finally { rmrf(path); rmrf(path2) }
   }
 
+  test("compaction lands a servable root: versions, loadAt, loadForestAt, maintainClusters") {
+    val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_cph").toString
+    val path2 = java.nio.file.Files.createTempDirectory("graft_dedupidx_cph2").toString
+    try {
+      // a history: base + forest gen 1 (v1), an idempotent batch + its
+      // forest gen 2 (v2), a takedown snapshotted with the forest carried (v3)
+      DedupIndex.save(spark,
+        DedupIndex.index(docs.filter(col("doc_id") % 3 === 0)), path)
+      DedupIndex.saveForest(spark,
+        DedupIndex.clusterLabels(DedupIndex.load(spark, path)), path, gen = 1)
+      DedupIndex.snapshot(spark, path, 1, forestGen = Some(1))
+      assert(DedupIndex.appendIdempotent(spark,
+        DedupIndex.index(docs.filter(col("doc_id") % 3 === 1)), path, 4L))
+      DedupIndex.saveForest(spark,
+        DedupIndex.clusterLabels(DedupIndex.load(spark, path)), path, gen = 2)
+      DedupIndex.snapshot(spark, path, 2, forestGen = Some(2))
+      DedupIndex.delete(spark,
+        docs.filter(col("doc_id") % 7 === 0).select("doc_id"), path)
+      DedupIndex.snapshot(spark, path, 3)
+      val latest = DedupIndex.versions(spark, path).last
+      DedupIndex.compact(spark, path, path2)
+      // the new root continues the source's numbering
+      assert(DedupIndex.versions(spark, path2) == Seq(latest + 1))
+      val v = DedupIndex.versions(spark, path2).last
+      def sorted(df: DataFrame) = df.orderBy(df.columns.head).collect().toSeq
+      val from = sorted(DedupIndex.load(spark, path))
+      assert(from.nonEmpty && sorted(DedupIndex.loadAt(spark, path2, v)) == from)
+      assert(sorted(DedupIndex.loadForestAt(spark, path2, v)) ==
+        sorted(DedupIndex.loadForestAt(spark, path, latest)))
+      val batch = docs.filter(col("doc_id") % 3 === 2)
+      val want = sorted(DedupIndex.maintainClusters(spark, path, latest, batch))
+      assert(want.nonEmpty &&
+        sorted(DedupIndex.maintainClusters(spark, path2, v, batch)) == want)
+      // the carried gen keeps its number and the carried ledger its epoch
+      assert(graft.core.Fs.exists(spark, s"$path2/forest.parquet/gen-2"))
+      assert(graft.core.Fs.exists(spark, s"$path2/_applied/batch-4"))
+    } finally { rmrf(path); rmrf(path2); spark.catalog.clearCache() }
+  }
+
   test("docs too short to shingle keep NULL lanes, never near-dup") {
     import spark.implicits._
     val tiny = Seq((1L, "en", "abc"), (2L, "en", "abc"),

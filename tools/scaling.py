@@ -276,11 +276,12 @@ COMMENTARY = """\
   sf0.1 vs 1.2 s for the group pass). b15 writes and reads the full
   events table through Avro — the row IS the format round trip, so
   it tracks table volume like b9. b16 is b8's append lifecycle plus
-  three snapshot commits (each one bounded listStatus + a
-  file-count-sized manifest write) and a delete batch; the pinned
-  loadAt search is b7's serve shape with one bounded manifest
-  collect in front — the snapshot layer's cost tracks FILE COUNT,
-  never data volume, so the row rides the b8 curve.
+  three snapshot commits (each one bounded listing + one small
+  driver-written manifest file committed by rename, no Spark job)
+  and a delete batch; the pinned loadAt search is b7's serve shape
+  with one manifest file read in front — the snapshot layer's cost
+  tracks FILE COUNT, never data volume, so the row rides the b8
+  curve.
 - **Round-10 rows (b17, b18, b19, s16).** b17 is b16's snapshot chain
   plus ONE directory rename (metadata-only at any artifact size) and
   the same pinned-at-v2 serve — the row rides b16's curve; what it
@@ -300,9 +301,9 @@ COMMENTARY = """\
   (between data commit and marker), which is the contract under
   test, not a cost term. b19 is b8's lifecycle plus a junk append (a
   second corpus-linear encode term — the row's data cost) and the
-  rollback itself, which is pure metadata: one manifest collect per
-  retained version, one recursive listing, per-file deletes — tracks
-  file count at any data volume.
+  rollback itself, which is pure metadata: one manifest file read
+  per retained version, one recursive listing, per-file deletes, no
+  Spark job — tracks file count at any data volume.
 - **Round-10b rows (x76, x77, s17).** x76's sketch build is one token
   scan where the groupBy(i, bucket) partial-agg state is CAPPED at
   4,096 counters per task and the exchange carries <= 4,096 rows per
@@ -354,8 +355,8 @@ COMMENTARY = """\
   b14's plan), so both rows track b14's curve with a layout- or
   broadcast-sized increment. b23/b24 are the snapshot layer on the
   dedup artifact (shared core.Snapshots): manifest operations are
-  bounded by FILE COUNT — snapshot is a listing + one tiny parquet
-  write, loadAt a bounded collect + the same pruned scans as load,
+  bounded by FILE COUNT — snapshot is a listing + one small manifest
+  file, loadAt one file read + the same pruned scans as load,
   rollback a per-file delete sweep — so both rows are b13's serving
   cost plus metadata-time overhead at every sf; the junk-append
   encode in b24 is the same linear term as b14's append. x79 is x3's
@@ -468,8 +469,8 @@ COMMENTARY = """\
   regardless of sf; its gated volume audit (6,028 deployed-rule vs
   2,191,168 raw pre-distinct ingest join rows at the gate scale) is
   the same claim in exact counts. b29 (8.74/8.20/12.98/20.37, 1.57x)
-  is b27 plus the retention vacuum: expire's cost is manifest
-  arithmetic + per-file deletes, invisible next to the maintenance
+  is b27 plus the retention vacuum: expire's cost is manifest file
+  reads + per-file deletes, invisible next to the maintenance
   days, and the 2 -> 1 generation reclaim it gates is sf-independent.
   x87 (2.73/2.15/2.38/2.90) and x88 (2.61/1.93/2.23/2.43) are
   sf-INVARIANT by construction — one fixed 100-doc signature-level
