@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Portable layout/artifact filesystem access for the maintenance
-  * operators (b6 compaction, AnnIndex compact/delete/append markers).
+  * operators (b6 compaction, the artifact commit log of
+  * [[Snapshots]]).
   *
   * These paths previously went through `java.io.File`, which only works
   * on the local filesystem and NPEs (listFiles returns null) when the
@@ -35,11 +36,9 @@ private[graft] object Fs {
 
   /** Total bytes of the data files under `dir` (one bounded RECURSIVE
     * listing — a manifest-scale walk, never a data read). Recursion
-    * matters because artifacts are no longer always flat: streaming
-    * idempotent appends commit whole batch DIRECTORIES by atomic
-    * rename ([[rename]]), and the cell-partitioned serve layout nests
-    * files under partition dirs — a flat listStatus would measure both
-    * as zero bytes and compaction would bin-pack to one file. Hidden
+    * matters because the cell-partitioned serve layout nests files
+    * under partition dirs — a flat listStatus would measure them as
+    * zero bytes and compaction would bin-pack to one file. Hidden
     * entries are excluded at every depth. Fails loudly if the layout
     * is absent. */
   def layoutBytes(spark: SparkSession, dir: String, suffix: String = ".parquet"): Long = {
@@ -62,70 +61,20 @@ private[graft] object Fs {
   def packTarget(bytes: Long, targetBytes: Long = 4L << 20): Int =
     math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
 
-  /** The data files under `dir` (one bounded RECURSIVE listing),
-    * hidden/marker entries (`_…`, `.…`) excluded at every depth,
-    * sorted for determinism. This is the listing a snapshot manifest
-    * records: parquet mutations only ever ADD files (append), COMMIT
-    * whole batch directories by atomic rename (idempotent streaming
-    * appends), or write NEW directories (save/compact generations), so
-    * a recorded file list stays readable for as long as nothing
-    * overwrites the artifact in place — the append-only invariant
-    * every lake-format manifest (Delta/Iceberg) rests on. Recursion is
-    * what lets a snapshot taken after a streamed batch commit record
-    * that batch's files. */
-  def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val (f, p) = fs(spark, dir)
-    require(f.exists(p), s"artifact path does not exist: $dir")
-    val rootQ = f.makeQualified(p).toString
-    val it = f.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && !hiddenBelowRoot(rootQ, s.getPath))
-        buf += s.getPath.toString
-    }
-    buf.sorted.toSeq
-  }
-
-  /** Relativize a (qualified) file path against an artifact root — the
-    * form a snapshot manifest STORES, so a pinned version survives the
-    * artifact directory being relocated (the compact pointer-swap
-    * pattern moves generations; an absolute manifest breaks on the
-    * first move — ADVICE r9). Fails loudly if the file is not under
-    * the root. */
-  def relativize(spark: SparkSession, root: String, file: String): String = {
-    val (f, p) = fs(spark, root)
-    val rootQ = f.makeQualified(p).toString
-    val fileQ = f.makeQualified(new Path(file)).toString
-    require(fileQ.startsWith(rootQ + "/"),
-      s"file is not under the artifact root: $file vs $root")
-    fileQ.stripPrefix(rootQ + "/")
-  }
-
   /** ATOMIC directory/file rename — the commit primitive of the
-    * idempotent streaming appends: a batch is staged under a hidden
-    * directory and made visible by ONE rename, so a reader (or a
-    * replay) either sees the whole committed batch or none of it —
-    * never a torn append. HDFS and local-FS renames are atomic; on an
-    * object store the staged-rename pattern degrades to copy+delete,
-    * which is why real lake formats commit through a manifest — the
-    * snapshot layer here is that manifest when object-store atomicity
-    * matters.
+    * artifact log: a unit is staged under a hidden directory and moved
+    * into place by one rename, and a log entry is committed by one
+    * rename onto its number. Returns whether this call moved `from`.
     *
-    * An EXISTING destination means a concurrent (or replayed) commit
-    * of the same batch already won the race — this call then deletes
-    * its own staged source and returns, and the destination is left
-    * UNTOUCHED. The refusal must be atomic with the rename itself:
-    * `FileSystem.rename` onto an existing directory (HDFS legacy
-    * semantics, and RawLocalFileSystem's java.io fallback) moves the
-    * source INTO it — `codes.parquet/batch-N/batch-N` — which the
-    * recursive readers would silently double-count (ADVICE r10). So
-    * the rename goes through `FileContext` with `Options.Rename.NONE`,
-    * which atomically refuses an existing destination instead of
-    * nesting; the loser's staged copy is bit-identical replayable work
-    * (the staging write is overwrite-mode), so reclaiming it loses
-    * nothing. */
-  def rename(spark: SparkSession, from: String, to: String): Unit = {
+    * An EXISTING destination means a concurrent commit already took the
+    * name — this call then deletes its own staged source and returns
+    * false, and the destination is left UNTOUCHED. The refusal must be
+    * atomic with the rename itself: `FileSystem.rename` onto an existing
+    * directory (HDFS legacy semantics, and RawLocalFileSystem's java.io
+    * fallback) moves the source INTO it (ADVICE r10). So the rename goes
+    * through `FileContext` with `Options.Rename.NONE`, which atomically
+    * refuses an existing destination instead of nesting. */
+  def rename(spark: SparkSession, from: String, to: String): Boolean = {
     val (f, src) = fs(spark, from)
     val dst = new Path(to)
     if (dst.getParent != null) f.mkdirs(dst.getParent)
@@ -133,20 +82,23 @@ private[graft] object Fs {
       f.getUri, spark.sparkContext.hadoopConfiguration)
     val srcQ = f.makeQualified(src)
     val dstQ = f.makeQualified(dst)
-    try fc.rename(srcQ, dstQ, org.apache.hadoop.fs.Options.Rename.NONE)
-    catch {
+    try {
+      fc.rename(srcQ, dstQ, org.apache.hadoop.fs.Options.Rename.NONE)
+      true
+    } catch {
       case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException |
           _: java.nio.file.FileAlreadyExistsException |
           _: java.io.IOException) =>
         // Only swallow the lost-race case: the destination must exist.
         if (!f.exists(dstQ)) throw e
         f.delete(srcQ, true)
+        false
     }
   }
 
   /** Names of the files directly under `dir`, sorted (empty when the
     * directory is absent) — ONE listStatus, no existence probe: the
-    * applied-epoch ledger and the snapshot manifest directory. */
+    * artifact log and the snapshot manifest directory. */
   def listFileNames(spark: SparkSession, dir: String): Seq[String] = {
     val (f, p) = fs(spark, dir)
     try f.listStatus(p).filter(_.isFile).map(_.getPath.getName).sorted.toSeq
@@ -154,7 +106,7 @@ private[graft] object Fs {
   }
 
   /** Write `lines` as one small UTF-8 text file (created, or replaced),
-    * from the driver — a snapshot manifest. */
+    * from the driver — a log entry or a snapshot tag. */
   def writeLines(spark: SparkSession, path: String, lines: Seq[String]): Unit = {
     val (f, p) = fs(spark, path)
     val out = f.create(p, true)
@@ -171,17 +123,8 @@ private[graft] object Fs {
     finally in.close()
   }
 
-  /** Names of the committed batch DIRECTORIES (`batch-{id}`) directly
-    * under an artifact data dir (empty when absent) — the other half
-    * of the applied-batch evidence: a batch that committed its data
-    * (atomic rename) but crashed before its marker is still visible
-    * here, so ledger carries can heal it. */
-  def listBatchDirs(spark: SparkSession, dir: String): Seq[String] =
-    listPrefixedDirs(spark, dir, "batch-")
-
   /** Immediate subdirectories of `dir` whose name carries `prefix` —
-    * the commit-unit naming shared by atomic batch directories
-    * (`batch-{id}`) and forest generations (`gen-{n}`). */
+    * e.g. the `gen-{n}` forest units b29 counts. */
   def listPrefixedDirs(spark: SparkSession, dir: String, prefix: String): Seq[String] = {
     val (f, p) = fs(spark, dir)
     if (!f.exists(p)) Seq.empty
@@ -220,27 +163,5 @@ private[graft] object Fs {
   def delete(spark: SparkSession, path: String): Unit = {
     val (f, p) = fs(spark, path)
     if (f.exists(p)) { f.delete(p, true); () }
-  }
-
-  /** Create an empty marker file (parents included) — the applied-batch
-    * ledger entry idempotent streaming appends use. Returns false if
-    * the marker already existed (create is atomic per-path on HDFS and
-    * the local FS; on S3 the read-check in [[exists]] carries the
-    * guard, which is the standard foreachBatch-idempotence trade). */
-  def touch(spark: SparkSession, path: String): Boolean = {
-    val (f, p) = fs(spark, path)
-    if (f.exists(p)) false
-    else
-      try {
-        f.create(p, false).close()
-        true
-      } catch {
-        // Lost a marker race: create(overwrite = false) is atomic
-        // per-path, so a concurrent committer of the same epoch beat
-        // this one to the ledger entry — the outcome ("marker exists")
-        // is identical either way.
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-            _: java.nio.file.FileAlreadyExistsException => false
-      }
   }
 }

@@ -4,6 +4,7 @@ import graft.core.Cols._
 import graft.core.{Fs, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Persisted IVF-PQ index — the build-once / search-many split the
   * in-plan search family (x33/x37/x47) deliberately fuses for
@@ -23,12 +24,14 @@ import org.apache.spark.sql.functions._
   * Artifact layout (the trace-artifact contract of the reference —
   * main.rs:17-25 produces a JSON trace once, downstream consumes it;
   * here the artifact is the index, the consumer is every future
-  * search):
-  *   {path}/centroids.parquet  (space, cid, cv)   space 0 = coarse,
-  *                                                1..M = PQ subspaces
-  *   {path}/codes.parquet      (vec_id, cell, codes)  sorted by
-  *                             (cell, vec_id) so each cell's codes
-  *                             are contiguous row-group runs
+  * search), as units named by the head of [[graft.core.Snapshots]]'
+  * commit log:
+  *   centroids.parquet/  (space, cid, cv)   space 0 = coarse,
+  *                                          1..M = PQ subspaces
+  *   codes.parquet/      (vec_id, cell, codes)  sorted by (cell,
+  *                       vec_id) so each cell's codes are contiguous
+  *                       row-group runs
+  *   tombstones.parquet/ (vec_id)
   *
   * Doubles round-trip parquet bit-exactly (and these centroids are
   * dyadic rationals by KMeans' fixed-point update), so a search over
@@ -38,9 +41,9 @@ import org.apache.spark.sql.functions._
   * stays ~sqrt(n) and a cell-pruned search stays sublinear as the
   * corpus grows (round-8 VERDICT task 1). For directory-level pruning
   * once K reaches the thousands, [[compactPartitioned]] rewrites a
-  * generation into one `cell=N/` partition dir per coarse cell and
-  * [[loadPartitioned]] serves it through a dynamic-partition-pruned
-  * scan (gated as b18); below that scale, per-cell directories of
+  * generation into one `cell=N/` partition dir per coarse cell, which
+  * [[load]] serves through a dynamic-partition-pruned scan (gated as
+  * b18); below that scale, per-cell directories of
   * tiny files would just re-create the small-file problem b6 compacts
   * away, so the flat layout's row-group locality from the
   * (cell, vec_id) sort stays the default.
@@ -99,21 +102,21 @@ object AnnIndex {
 
   /** Incremental index update: code `newVecs` with the PERSISTED
     * index's codebooks (no retraining — the production pattern for
-    * growing an IVF-PQ index between rebuilds) and append them to the
-    * codes artifact. Cost = one linear scan of the new batch + the
-    * append write; the codebooks are untouched, so every existing
-    * code stays valid and a reload sees the union. */
+    * growing an IVF-PQ index between rebuilds) and commit them as a new
+    * codes unit. Cost = one linear scan of the new batch + the unit
+    * write; the codebooks are untouched, so every existing code stays
+    * valid and a reload sees the union. */
   def append(spark: SparkSession, idx: Index, newVecs: DataFrame,
       path: String): Unit =
-    coded(idx, newVecs).write.mode("append").parquet(s"$path/codes.parquet")
+    Snapshots.append(spark, coded(idx, newVecs), path, Layout, "codes", "append")
 
   /** Vectors coded with the index's codebooks, in the artifact's
     * (cell, vec_id) write order. */
   private def coded(idx: Index, vecs: DataFrame): DataFrame =
     encode(vecs, idx.coarse, idx.pq).sortWithinPartitions("cell", "vec_id")
 
-  /** Commit one micro-batch's coded vectors as the atomic directory
-    * `codes.parquet/batch-{id}` ([[Snapshots.commitBatch]]). */
+  /** Commit one micro-batch's coded vectors with its ledger line
+    * ([[Snapshots.commitBatch]]). */
   def commitBatch(spark: SparkSession, idx: Index, batch: DataFrame,
       path: String, batchId: Long): Unit =
     Snapshots.commitBatch(spark, coded(idx, batch), path, Layout, batchId)
@@ -132,60 +135,55 @@ object AnnIndex {
   def delete(spark: SparkSession, ids: DataFrame, path: String): Unit =
     Snapshots.delete(spark, ids, path, Layout)
 
-  /** Persist the index. Codebooks are written as one tiny parquet
-    * (deterministic single file, ordered rows); codes as a normal
-    * distributed write sorted by (cell, vec_id). NOTE: mode is
-    * overwrite — save REPLACES the artifact at `path`, so snapshot
-    * manifests committed against the old files do not survive it. A
-    * rebuild lands in a NEW root instead (compact's pointer-swap
-    * pattern); within one root, every mutation (append/delete) is
-    * file-append-only, which is what keeps [[snapshot]]/[[loadAt]]
-    * sound. */
+  /** Persist the index as the artifact's whole current state: the
+    * codebooks as one tiny unit (deterministic single file, ordered
+    * rows), the codes as a normal distributed write sorted by (cell,
+    * vec_id). Snapshot tags of an earlier state keep serving it. */
   def save(spark: SparkSession, idx: Index, path: String): Unit = {
     import spark.implicits._
     val cent =
       idx.coarse.zipWithIndex.map { case (c, j) => (0, j, c.toSeq) } ++
         (0 until M).flatMap(m =>
           idx.pq(m).zipWithIndex.map { case (c, j) => (m + 1, j, c.toSeq) })
-    cent.toDF("space", "cid", "cv")
-      .coalesce(1).sortWithinPartitions("space", "cid")
-      .write.mode("overwrite").parquet(s"$path/centroids.parquet")
-    idx.codes
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(s"$path/codes.parquet")
+    val units = Seq(
+      Snapshots.stage(spark, path, Layout, "centroids", Snapshots.unitName("save"),
+        cent.toDF("space", "cid", "cv").coalesce(1).sortWithinPartitions("space", "cid")),
+      Snapshots.stage(spark, path, Layout, "codes", Snapshots.unitName("save"),
+        idx.codes.sortWithinPartitions("cell", "vec_id")))
+    Snapshots.commit(spark, path)(_ => units)
   }
 
-  /** Compact an index whose codes artifact has accumulated append
-    * fragments (b8/s14 leave the base write plus one file set per
-    * appended batch): rewrite the codes into ceil(bytes/4MiB) files
-    * (b6's measured-bytes bin-packing) hash-clustered by cell and
-    * sorted (cell, vec_id) — restoring the locality appends erode, so
-    * a cell-pruned search reads contiguous row-group runs again. The
-    * compacted artifact lands in a NEW directory (parquet cannot
-    * overwrite a source mid-read); a deployment swaps the index
-    * pointer, the two-generation pattern every OPTIMIZE pass uses.
-    * The new root carries the applied-epoch ledger and is committed as
-    * the version after the source's last ([[Snapshots.commitCompacted]]),
-    * so it serves [[versions]]/[[loadAt]] from the start. Codebooks are
-    * rewritten verbatim — compaction is a pure layout change, which is
-    * exactly what the b10 gate proves. */
+  /** Compact an index whose codes have accumulated append units (b8/s14
+    * leave the base unit plus one unit per appended batch): rewrite the
+    * live codes into ONE unit of ceil(bytes/4MiB) files (b6's
+    * measured-bytes bin-packing) hash-clustered by cell and sorted
+    * (cell, vec_id) — restoring the locality appends erode, so a
+    * cell-pruned search reads contiguous row-group runs again.
+    * Tombstoned rows are dropped: compaction is where deletes become
+    * physical. `to == from` compacts in place and keeps every tag
+    * servable until [[expire]] reclaims the fragments; another `to`
+    * lands a new root (the pointer-swap pattern every OPTIMIZE pass
+    * uses) with the codebooks copied verbatim and the applied-epoch
+    * ledger carried. The result is tagged as the version after the
+    * source's last ([[Snapshots.commitCompacted]]). A pure layout
+    * change, which is exactly what the b10 gate proves. */
   def compact(spark: SparkSession, from: String, to: String): Unit = {
-    spark.read.parquet(s"$from/centroids.parquet")
-      .coalesce(1).sortWithinPartitions("space", "cid")
-      .write.mode("overwrite").parquet(s"$to/centroids.parquet")
-    // bounded driver-side manifest read (portable: Hadoop FileSystem,
-    // so the same code measures a local dir and an object-store prefix)
-    val bytes = Fs.layoutBytes(spark, s"$from/codes.parquet")
-    val target = Fs.packTarget(bytes)
-    // the live view: tombstoned rows are DROPPED here — compaction is
-    // where deletes become physical; the new root has no tombstone
-    // artifact, so its reload sees exactly the surviving rows.
-    Snapshots.live(spark, from, Layout)
-      .repartition(target, col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(s"$to/codes.parquet")
-    Snapshots.commitCompacted(spark, Some(from), to, Layout)
+    val head = Snapshots.current(spark, from)
+    val bytes = Snapshots.units(head, "codes").map(u => Fs.layoutBytes(spark, s"$from/$u")).sum
+    val packed = Snapshots.stage(spark, to, Layout, "codes", Snapshots.unitName("packed"),
+      Snapshots.rows(spark, from, Layout, head)
+        .repartition(Fs.packTarget(bytes), col("cell"))
+        .sortWithinPartitions("cell", "vec_id"))
+    Snapshots.commitCompacted(spark, Some(from), to, Layout, head, Seq(packed))(
+      Seq(copyCodebooks(spark, from, head, to)))
   }
+
+  /** Stage `from`'s codebooks verbatim as a centroids unit of `to`. */
+  private def copyCodebooks(spark: SparkSession, from: String,
+      head: Snapshots.Entries, to: String): (String, String) =
+    Snapshots.stage(spark, to, Layout, "centroids", Snapshots.unitName("copy"),
+      Snapshots.scan(spark, from, Layout, "centroids", head)
+        .coalesce(1).sortWithinPartitions("space", "cid"))
 
   /** Compact into the CELL-PARTITIONED serve layout: same pure layout
     * change as [[compact]] (tombstones dropped, codebooks verbatim,
@@ -206,15 +204,13 @@ object AnnIndex {
     * the compaction TARGET rather than the default save shape for
     * exactly that reason. */
   def compactPartitioned(spark: SparkSession, from: String, to: String): Unit = {
-    spark.read.parquet(s"$from/centroids.parquet")
-      .coalesce(1).sortWithinPartitions("space", "cid")
-      .write.mode("overwrite").parquet(s"$to/centroids.parquet")
-    Snapshots.live(spark, from, Layout)
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$to/codes.parquet")
-    Snapshots.commitCompacted(spark, Some(from), to, Layout)
+    val head = Snapshots.current(spark, from)
+    val cells = Snapshots.stage(spark, to, Layout, "codes", Snapshots.unitName("cells"),
+      Snapshots.rows(spark, from, Layout, head)
+        .repartition(col("cell"))
+        .sortWithinPartitions("cell", "vec_id"), partitionBy = Seq("cell"))
+    Snapshots.commitCompacted(spark, Some(from), to, Layout, head, Seq(cells))(
+      Seq(copyCodebooks(spark, from, head, to)))
   }
 
   /** MERGE two shard artifacts that share one published codebook
@@ -232,123 +228,117 @@ object AnnIndex {
     * to every shard holds in the merged artifact no matter which
     * shard physically held the vector. The merged artifact is a fresh
     * compacted root (bin-packed, cell-clustered, tombstone-free),
-    * committed as version 0, with NO applied-epoch ledger: the source
+    * tagged as version 0, with NO applied-epoch ledger: the source
     * shards' streaming epoch ids are per-pipeline counters that would
     * collide in one ledger, so neither source stream may resume into
     * the merge — exactly the new-root pointer-swap contract compact
     * already documents.
-    * Cost: two bounded centroid reads + one disjointness semi-join +
-    * one distributed rewrite of the union. */
+    * Cost: two bounded driver-side codebook reads + one disjointness
+    * semi-join + one distributed rewrite of the union. */
   def mergeShards(spark: SparkSession, a: String, b: String, to: String): Unit = {
-    // a parquet source cannot be overwritten mid-read (compact's
-    // contract), and a dirty destination would leave a STALE artifact
-    // piece next to the fresh codes: a tombstone set masks rows the
-    // merge never deleted, a leftover `_applied/batch-N` ledger makes a
-    // later appendIdempotent silently SKIP epoch N (data loss), and a
-    // stale `manifest/` lets loadAt resolve a bogus snapshot. Refuse
-    // all of it. Identity compares CANONICAL paths (ADVICE r11: a
-    // trailing slash or relative spelling of a source must not slip
-    // past a literal string check and be overwritten mid-read).
+    // a source must not be rewritten mid-read, and a dirty destination
+    // would leave a STALE artifact piece next to the fresh codes: a
+    // stale `_log` head serves units the merge never wrote (its ledger
+    // makes a later appendIdempotent silently SKIP an epoch — data
+    // loss), and a stale `manifest/` lets loadAt resolve a bogus
+    // snapshot. Refuse all of it. Identity compares CANONICAL paths
+    // (ADVICE r11: a trailing slash or relative spelling of a source
+    // must not slip past a literal string check).
     val toQ = Fs.qualified(spark, to)
     require(toQ != Fs.qualified(spark, a) &&
         toQ != Fs.qualified(spark, b),
       "mergeShards: destination must be a NEW generation directory, not a source")
     Seq("codes.parquet", "tombstones.parquet", "centroids.parquet",
-      "_applied", "manifest").foreach { piece =>
+      "_log", "manifest").foreach { piece =>
       require(!Fs.exists(spark, s"$to/$piece"),
         s"mergeShards: $to already holds $piece — merge into a fresh directory")
     }
-    def bookKey(path: String) =
-      spark.read.parquet(s"$path/centroids.parquet").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toVector))
-        .sortBy(t => (t._1, t._2)).toVector
-    require(bookKey(a) == bookKey(b),
+    val (ha, hb) = (Snapshots.current(spark, a), Snapshots.current(spark, b))
+    def bookKey(path: String, head: Snapshots.Entries) = {
+      val (coarse, pq) = codebooks(spark, path, head)
+      (coarse.map(_.toVector), pq.map(_.map(_.toVector)))
+    }
+    require(bookKey(a, ha) == bookKey(b, hb),
       s"mergeShards: codebooks differ between $a and $b — re-encode, don't merge")
-    val la = Snapshots.live(spark, a, Layout)
-    val lb = Snapshots.live(spark, b, Layout)
+    val la = Snapshots.rows(spark, a, Layout, ha)
+    val lb = Snapshots.rows(spark, b, Layout, hb)
     val clash = la.select("vec_id")
       .join(lb.select("vec_id"), "vec_id").limit(1).count()
     require(clash == 0L,
       s"mergeShards: shards share vec_ids — the id space must be partitioned")
-    spark.read.parquet(s"$a/centroids.parquet")
-      .coalesce(1).sortWithinPartitions("space", "cid")
-      .write.mode("overwrite").parquet(s"$to/centroids.parquet")
-    val bytes = Fs.layoutBytes(spark, s"$a/codes.parquet") +
-      Fs.layoutBytes(spark, s"$b/codes.parquet")
-    la.unionByName(lb)
-      .repartition(Fs.packTarget(bytes), col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(s"$to/codes.parquet")
-    Snapshots.commitCompacted(spark, None, to, Layout)
+    val bytes = Seq((a, ha), (b, hb)).flatMap { case (p, h) =>
+      Snapshots.units(h, "codes").map(u => Fs.layoutBytes(spark, s"$p/$u"))
+    }.sum
+    val packed = Snapshots.stage(spark, to, Layout, "codes", Snapshots.unitName("packed"),
+      la.unionByName(lb)
+        .repartition(Fs.packTarget(bytes), col("cell"))
+        .sortWithinPartitions("cell", "vec_id"))
+    Snapshots.commitCompacted(spark, None, to, Layout, Nil, Seq(packed))(
+      Seq(copyCodebooks(spark, a, ha, to)))
   }
 
-  /** Load a cell-partitioned index generation ([[compactPartitioned]]).
-    * The partition column is declared LONG in the read schema (not
-    * left to directory-name type inference, which would narrow it to
-    * int and force a cast above the scan — a cast that would both
-    * change the schema and defeat dynamic partition pruning, since DPP
-    * keys on the bare partition attribute). The returned codes frame
-    * has the standard (vec_id, cell, codes) shape, so every consumer —
-    * searchTop5 included — is layout-blind. */
-  def loadPartitioned(spark: SparkSession, path: String): Index = {
-    val (coarse, pq) = codebooks(spark.read.parquet(s"$path/centroids.parquet"))
-    val inferred = spark.read.parquet(s"$path/codes.parquet").schema
-    val codes = spark.read.schema(cellAsLong(inferred))
-      .parquet(s"$path/codes.parquet")
-      .select("vec_id", "cell", "codes")
-    Index(coarse, pq, codes)
-  }
-
-  /** Widen an inferred `cell` partition column to LONG (directory-name
-    * inference narrows it to int, and a cast above the scan would both
-    * change the schema and defeat dynamic partition pruning — DPP keys
-    * on the bare partition attribute). Shared by [[loadPartitioned]]
-    * and [[loadAt]]'s partitioned branch. */
-  private def cellAsLong(inferred: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(inferred.map(f =>
-      if (f.name == "cell")
-        f.copy(dataType = org.apache.spark.sql.types.LongType)
-      else f))
-
-  /** Parse the (M+1) codebooks out of a centroids scan — one bounded
-    * collect of (M+1)·K rows (the KMeans division of labor — driver
-    * traffic scales with the codebook, never the corpus). */
-  private def codebooks(centroids: DataFrame)
+  /** The (M+1) codebooks of the centroids unit `es` names, read on the
+    * driver straight from its parquet files — (M+1)·K rows, the KMeans
+    * division of labor: driver traffic scales with the codebook, never
+    * the corpus, and no Spark job runs. */
+  private def codebooks(spark: SparkSession, path: String, es: Snapshots.Entries)
       : (IndexedSeq[Array[Double]], IndexedSeq[IndexedSeq[Array[Double]]]) = {
-    val cent = centroids
-      .orderBy("space", "cid")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cent = Snapshots.units(es, "centroids").flatMap { u =>
+      Fs.listFileNames(spark, s"$path/$u").filter(_.endsWith(".parquet")).flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          new org.apache.hadoop.fs.Path(s"$path/$u/$f")).withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+          val cv = g.getGroup("cv", 0)
+          (g.getInteger("space", 0), g.getInteger("cid", 0),
+            Array.tabulate(cv.getFieldRepetitionCount(0))(i => cv.getGroup(0, i).getDouble(0, 0)))
+        }.toVector
+        finally reader.close()
+      }
+    }
     val bySpace = cent.groupBy(_._1)
     def book(space: Int): IndexedSeq[Array[Double]] =
       bySpace(space).sortBy(_._2).map(_._3).toIndexedSeq
     (book(0), (1 to M).map(book))
   }
 
-  /** Load a persisted index at its CURRENT state: codes stay a
-    * distributed scan, with any tombstoned vec_ids anti-joined out. */
-  def load(spark: SparkSession, path: String): Index = {
-    val (coarse, pq) = codebooks(spark.read.parquet(s"$path/centroids.parquet"))
-    Index(coarse, pq, Snapshots.live(spark, path, Layout))
+  /** The index entries `es` serve: their codebooks and their live codes
+    * — a distributed scan with any tombstoned vec_ids anti-joined out,
+    * the cell of a `cells-` unit typed LONG as in the flat ones (a cast
+    * above the scan would defeat dynamic partition pruning, which keys
+    * on the bare partition attribute). */
+  private def index(spark: SparkSession, path: String, es: Snapshots.Entries): Index = {
+    val (coarse, pq) = codebooks(spark, path, es)
+    Index(coarse, pq, Snapshots.rows(spark, path, Layout, es))
   }
 
-  /** The artifact's coordinates in the shared lifecycle
-    * ([[graft.core.Snapshots]]): three data-file kinds, one per
-    * directory; batches commit into codes; tombstones key on vec_id. */
-  private val Layout = Snapshots.Layout(Seq(
-    "centroids" -> "centroids.parquet",
-    "codes" -> "codes.parquet",
-    "tombstones" -> "tombstones.parquet"), data = "codes", id = "vec_id")
+  /** Load a persisted index at its CURRENT state, whichever layout its
+    * units have. */
+  def load(spark: SparkSession, path: String): Index =
+    index(spark, path, Snapshots.current(spark, path))
 
-  /** Record the artifact's CURRENT file sets as snapshot `version` —
-    * takedown audits ("what did the index serve last Tuesday"),
-    * reproducible retrieval runs and safe rollback after a bad batch,
-    * none of which a directory read can answer once the directory has
-    * moved on; reference anchor: the produce-once/consume-downstream
-    * trace-artifact contract (main.rs:17-25), here versioned. */
+  /** [[load]] of a cell-partitioned generation ([[compactPartitioned]]). */
+  def loadPartitioned(spark: SparkSession, path: String): Index = load(spark, path)
+
+  /** The artifact's coordinates in the shared lifecycle
+    * ([[graft.core.Snapshots]]): codebooks and codes (where batches
+    * commit), tombstones keyed on vec_id. */
+  private val Layout = Snapshots.Layout(Map(
+    "centroids" -> StructType(Seq(StructField("space", IntegerType),
+      StructField("cid", IntegerType), StructField("cv", ArrayType(DoubleType)))),
+    "codes" -> StructType(Seq(StructField("vec_id", LongType),
+      StructField("cell", LongType), StructField("codes", ArrayType(LongType))))),
+    data = "codes", id = "vec_id")
+
+  /** Tag the head as snapshot `version` — takedown audits ("what did
+    * the index serve last Tuesday"), reproducible retrieval runs and
+    * safe rollback after a bad batch, none of which the current state
+    * can answer once it has moved on; reference anchor: the
+    * produce-once/consume-downstream trace-artifact contract
+    * (main.rs:17-25), here versioned. */
   def snapshot(spark: SparkSession, path: String, version: Int): Unit =
-    Snapshots.snapshot(spark, path, version, Layout)
+    Snapshots.snapshot(spark, path, version)
 
   def versions(spark: SparkSession, path: String): Seq[Int] =
     Snapshots.versions(spark, path)
@@ -356,33 +346,14 @@ object AnnIndex {
   /** Load the index AS OF snapshot `version` — time travel: codes added
     * after the snapshot are invisible, and tombstones written after it
     * do not mask (b16 gates it). */
-  def loadAt(spark: SparkSession, path: String, version: Int): Index = {
-    val man = Snapshots.entries(spark, path, version)
-    val (coarse, pq) = codebooks(
-      spark.read.parquet(Snapshots.files(path, man, "centroids"): _*))
-    val live = Snapshots.pinned(spark, path, man, Layout) { codeFiles =>
-      // A CELL-PARTITIONED root ([[compactPartitioned]]) keeps the cell
-      // column in directory NAMES, not the data files; reading the
-      // manifest's explicit file list alone would lose it (ADVICE r10).
-      // basePath re-anchors partition discovery at the codes root, with
-      // the partition column declared LONG (see [[cellAsLong]]).
-      if (codeFiles.exists(_.contains("/cell="))) {
-        val base = s"$path/codes.parquet"
-        val inferred = spark.read.option("basePath", base)
-          .parquet(codeFiles: _*).schema
-        spark.read.option("basePath", base).schema(cellAsLong(inferred))
-          .parquet(codeFiles: _*)
-          .select("vec_id", "cell", "codes")
-      } else spark.read.parquet(codeFiles: _*)
-    }
-    Index(coarse, pq, live)
-  }
+  def loadAt(spark: SparkSession, path: String, version: Int): Index =
+    index(spark, path, Snapshots.entries(spark, path, version))
 
   def rollback(spark: SparkSession, path: String, toVersion: Int): Unit =
     Snapshots.rollback(spark, path, toVersion, Layout)
 
   def expire(spark: SparkSession, path: String, keepLast: Int): Unit =
-    Snapshots.expire(spark, path, keepLast, Layout)
+    Snapshots.expire(spark, path, keepLast)
 
   /** x33's cell-pruned reconstruction-cosine top-5 search, run
     * entirely from index artifacts: the database side is the CODED

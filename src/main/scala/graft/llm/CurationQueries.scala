@@ -285,12 +285,12 @@ object CurationQueries {
     // yesterday's batch appended, then every indexed doc_id % 5 = 4 is
     // DELETED (takedowns / de-listed sources whose old text must stop
     // suppressing future near-duplicates) and the artifact COMPACTED —
-    // deletes are a bounded id-only tombstone artifact appended next
-    // to the rows (the Delta/Iceberg delete-file pattern: a
-    // per-takedown rewrite of a 100 GB signature artifact is a full
-    // table write), and compaction is where they become physical: the
-    // new generation holds exactly the surviving rows, tombstone-free,
-    // with the `_applied/` epoch ledger still carried. The gate is
+    // deletes are a bounded id-only tombstone unit committed next to
+    // the rows (the Delta/Iceberg delete-file pattern: a per-takedown
+    // rewrite of a 100 GB signature artifact is a full table write),
+    // and compaction is where they become physical: the new root's
+    // head names exactly one packed rows unit, tombstone-free, with the
+    // applied-epoch ledger carried. The gate is
     // x24's dedup restated over the SURVIVING index — batch docs whose
     // only near partner was deleted stop counting (answer-visible at
     // every tested scale by the modulus choice), which is precisely
@@ -322,7 +322,7 @@ object CurationQueries {
     // pass, when deleted documents must already have stopped matching
     // but the rows artifact still physically holds them. DedupIndex
     // .load anti-joins the (bounded, id-only, broadcast) tombstone set
-    // out of the recursive rows scan, so the incoming batch dedups
+    // out of the scan of the head's rows units, so the incoming batch dedups
     // against exactly the surviving signatures. The gate is b20's
     // VERBATIM oracle: masked-before-compact and physical-after-
     // compact must be the same answer — the two halves of the
@@ -358,9 +358,9 @@ object CurationQueries {
     // against loadAt(v1). The gate is x24's dedup restated over ONLY
     // the v1 base: post-snapshot rows must be invisible and
     // post-snapshot tombstones must NOT mask (the audit point — the
-    // pinned answer differs from the live directory's on both counts).
-    // SCALE SHAPE: one manifest file read on the driver, then b13's
-    // exact serving plan over the pinned file set.
+    // pinned answer differs from the live head's on both counts).
+    // SCALE SHAPE: one tag file read on the driver, then b13's exact
+    // serving plan over the pinned units.
     Q(
       "b23_dedup_index_pinned_read", baseOnlyDedupSql
     ) { (spark, dir) =>
@@ -387,12 +387,12 @@ object CurationQueries {
     // un-rolled-back, every batch doc exact-dups its own index row, so
     // n_exact_dup saturates to n_new; (b) an over-broad takedown
     // tombstoning every even doc_id — served masked, half the base's
-    // dedup evidence vanishes. rollback(v1) physically deletes the junk
-    // rows (unreferenced by v1's manifest), removes the tombstone
-    // artifact outright (v1 recorded none), and the DIRECTORY read —
-    // load, not loadAt — must then give the v1 base-only answer
-    // bit-exactly. Cost tracks file count, never data volume: rollback
-    // reads manifest files and deletes files, running no Spark job.
+    // dedup evidence vanishes. rollback(v1) commits v1's tag as the
+    // head, deletes the junk unit and the tombstone unit (no retained
+    // tag names them), and the CURRENT read — load, not loadAt — must
+    // then give the v1 base-only answer bit-exactly. Cost tracks unit
+    // count, never data volume: rollback reads tag files and deletes
+    // units, running no Spark job.
     Q(
       "b24_dedup_index_rollback", baseOnlyDedupSql
     ) { (spark, dir) =>
@@ -416,14 +416,14 @@ object CurationQueries {
     // as index rows; today's batch dedups against the union). The
     // % 4 = 2 slice lands as parquet files consumed by a file-source
     // stream whose foreachBatch indexes each micro-batch (one linear
-    // text scan of the BATCH) and appends idempotently (a staged
-    // atomic directory commit since round 10); with
-    // maxFilesPerTrigger=1 the run really executes multiple micro-batch
-    // appends, and it is REPLAY-BEARING exactly like s14: an injected
-    // post-commit crash after epoch 1's commit+marker forces the
-    // restarted query (same checkpoint, so the WAL re-issues the same
-    // epoch id) to re-deliver that micro-batch, which the skip (marker
-    // or committed directory) must refuse. A doubled append would be INVISIBLE to the
+    // text scan of the BATCH) and appends idempotently (one unit and
+    // its ledger line in one log commit); with maxFilesPerTrigger=1 the
+    // run really executes multiple micro-batch appends, and it is
+    // REPLAY-BEARING exactly like s14: an injected post-commit crash
+    // after epoch 1's log commit forces the restarted query (same
+    // checkpoint, so the WAL re-issues the same epoch id) to re-deliver
+    // that micro-batch, which the head's ledger must refuse. A doubled
+    // append would be INVISIBLE to the
     // x24-shaped counts (near ids are DISTINCT, n_new counts the
     // batch), so this row's oracle extends x24's with the artifact's
     // ROW COUNT (n_indexed, restated as the % 4 <> 3 corpus count) —
@@ -469,7 +469,7 @@ object CurationQueries {
       }
       try {
         run(injectCrash = true)   // crashes after epoch 1's append
-        run(injectCrash = false)  // engine replays epoch 1; marker skips it
+        run(injectCrash = false)  // engine replays epoch 1; the ledger skips it
       } finally {
         graft.streaming.TempWork.delete(in)
         graft.streaming.TempWork.delete(ckpt)
@@ -480,26 +480,22 @@ object CurationQueries {
         .orderBy("lang")
     },
 
-    // S16 — the OTHER crash window, gated: s15 proves a replay is
-    // skipped when the crash lands AFTER append+marker both committed;
-    // this row proves the window ADVICE r9 flagged — a crash BETWEEN
-    // the batch's data commit and its marker write. Epoch 1's
-    // foreachBatch performs ONLY the atomic data commit
-    // (DedupIndex.commitBatch: staged write + one directory rename)
-    // and then dies, so the artifact holds a committed-but-UNMARKED
-    // batch; the restarted query (same checkpoint — the WAL re-issues
-    // the same epoch id) re-delivers that micro-batch, and
-    // appendIdempotent must skip it off the committed directory's own
-    // existence (healing the missing marker), because no marker exists
-    // to skip on. Under the old flat-append design this replay
-    // DOUBLE-INDEXED the batch — n_indexed would count the % 4 = 2
-    // slice twice and fail the hash gate; under staged-rename commits
-    // the directory IS the evidence and the gate holds. Same extended
-    // x24 oracle as s15 (dedup columns + the artifact row count) —
-    // the two rows differ only in where the injected crash lands,
-    // which is exactly the point. SCALE SHAPE: s15's (batch-linear
-    // indexing + micro-batch commit floor); the atomic rename adds a
-    // metadata-only operation per batch.
+    // S16 — the bare-commit crash, gated: s15 crashes after
+    // appendIdempotent returns; here epoch 1's foreachBatch performs
+    // ONLY DedupIndex.commitBatch (stage the unit, one log commit that
+    // names it together with its ledger line) and then dies, and the
+    // restarted query (same checkpoint — the WAL re-issues the same
+    // epoch id) re-delivers that micro-batch through appendIdempotent.
+    // Because data and ledger land in one rename, no state exists where
+    // the batch is committed but its ledger line is not: the replay is
+    // skipped off the head's ledger, and a crash before that rename
+    // leaves only an invisible unit, so the replay applies the batch
+    // once. A double-indexed batch would count the % 4 = 2 slice twice
+    // in n_indexed and fail the hash gate. Same extended x24 oracle as
+    // s15 (dedup columns + the artifact row count) — the two rows
+    // differ only in which call the crash follows. SCALE SHAPE: s15's
+    // (batch-linear indexing + micro-batch commit floor); the commit
+    // adds two metadata-only renames per batch.
     Q(
       "s16_stream_commit_replay", snapshotDedupSql(
         ",\nix AS (SELECT CAST(count(*) AS BIGINT) AS n_indexed " +
@@ -526,12 +522,11 @@ object CurationQueries {
           .foreachBatch { (batch: DataFrame, epochId: Long) =>
             if (injectCrash && epochId == 1 &&
               crashed.compareAndSet(false, true)) {
-              // data commits atomically; the marker never lands — the
-              // exact ADVICE-r9 crash window
+              // the bare commit lands, then the query dies
               DedupIndex.commitBatch(batch.sparkSession,
                 DedupIndex.index(batch), path, epochId)
               throw new RuntimeException(
-                "injected crash between data commit and marker (s16)")
+                "injected crash after the bare commit (s16)")
             } else {
               DedupIndex.appendIdempotent(batch.sparkSession,
                 DedupIndex.index(batch), path, epochId)
@@ -546,8 +541,8 @@ object CurationQueries {
         } finally if (q.isActive) q.stop()
       }
       try {
-        run(injectCrash = true)   // epoch 1: data committed, marker lost
-        run(injectCrash = false)  // replay: skipped off the committed dir
+        run(injectCrash = true)   // epoch 1: committed, then the query dies
+        run(injectCrash = false)  // replay: skipped off the head's ledger
       } finally {
         graft.streaming.TempWork.delete(in)
         graft.streaming.TempWork.delete(ckpt)

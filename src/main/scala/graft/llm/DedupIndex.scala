@@ -3,6 +3,7 @@ package graft.llm
 import graft.core.{CacheScope, Fs, Snapshots}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Persisted dedup index — the signature/hash artifact x24's comment
   * promises ("the base side at 100 TB is a signature/hash index, not a
@@ -11,8 +12,10 @@ import org.apache.spark.sql.functions._
   * persisted once, and every future ingest batch checks against the
   * LOADED artifact without recomputing a single corpus signature.
   *
-  * One parquet artifact, `{path}/rows.parquet`, one row per indexed
-  * document:
+  * The artifact lives in [[graft.core.Snapshots]]' commit log: its
+  * head names the `rows.parquet/` units (one row per indexed document),
+  * the `tombstones.parquet/` units and the served `forest.parquet/gen-N`
+  * unit. A rows row is:
   *   doc_id   BIGINT   — the indexed document
   *   h        STRING   — sha-256 of the text (exact-dup key)
   *   mh0..mh15 BIGINT  — the 16 MinHash lanes (near-dup evidence;
@@ -30,8 +33,8 @@ import org.apache.spark.sql.functions._
   * in-plan x24 computation — exactly what the b13/b14 gates prove
   * against x24's verbatim oracle.
   *
-  * Growth follows AnnIndex.append's contract: new batches' index rows
-  * append as new parquet files; no existing row is ever rewritten
+  * Growth follows AnnIndex.append's contract: each batch's index rows
+  * commit as a new unit; no existing row is ever rewritten
   * (MinHash seeds are fixed literals, so there is no "retraining" to
   * invalidate old signatures — unlike the ANN index's codebooks, this
   * index never needs a rebuild, only compaction of append fragments).
@@ -59,9 +62,13 @@ object DedupIndex {
         (0 until 16).map(i => col("sigs").getItem(i).as(s"mh$i")): _*)
   }
 
-  def save(spark: SparkSession, rows: DataFrame, path: String): Unit =
-    rows.sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$path/rows.parquet")
+  /** Commit `rows` as the artifact's whole current state (one rows
+    * unit); snapshot tags of an earlier state keep serving it. */
+  def save(spark: SparkSession, rows: DataFrame, path: String): Unit = {
+    val unit = Snapshots.stage(spark, path, Layout, "rows", Snapshots.unitName("save"),
+      rows.sortWithinPartitions("doc_id"))
+    Snapshots.commit(spark, path)(_ => Seq(unit))
+  }
 
   /** Zero-row guard branch enforcing the id-disjoint ingest contract
     * INSIDE a job the caller already runs (VERDICT r13 task 1: round
@@ -99,34 +106,33 @@ object DedupIndex {
   }
 
   /** Append a new slice's index rows — the incremental form: cost is
-    * one linear scan of the new slice plus its append write; existing
-    * artifact files are untouched and a reload sees the union.
+    * one linear scan of the new slice plus its unit write; existing
+    * units are untouched and a reload sees the union.
     * REFUSES a batch whose doc_ids are already indexed (VERDICT r12
     * task 3): a colliding append would make the artifact's id set a
     * multiset — duplicate band keys double-count candidates and
     * [[maintainClusters]] would silently mislabel. The guard is
-    * [[disjointGuard]] riding the append WRITE itself (VERDICT r13
-    * task 1 folded away the separate limit(1) job): against the RAW
-    * row set, so tombstoned ids stay refused too — the tombstone would
-    * mask the re-added row as well (ids are never reused; a re-crawled
-    * doc gets a new id). A tripped guard fails the write job before
-    * its commit, so no partial append becomes visible. Streaming
-    * replays never reach this check: they go through
-    * [[appendIdempotent]], whose epoch ledger skips a re-delivered
-    * batch before any data write. */
+    * [[disjointGuard]] riding the unit's staged WRITE itself (VERDICT
+    * r13 task 1 folded away the separate limit(1) job): against the
+    * head's RAW rows, so tombstoned ids stay refused too — the tombstone
+    * would mask the re-added row as well (ids are never reused; a
+    * re-crawled doc gets a new id). A tripped guard fails the staged
+    * write, so nothing is committed. Streaming replays never reach
+    * this check: they go through [[appendIdempotent]], whose ledger
+    * skips a re-delivered batch before any data write. */
   def append(spark: SparkSession, rows: DataFrame, path: String): Unit = {
+    val head = Snapshots.current(spark, path)
     val guarded =
-      if (!Fs.exists(spark, s"$path/rows.parquet")) rows
+      if (Snapshots.units(head, "rows").isEmpty) rows
       else rows.unionByName(disjointGuard(
-        spark.read.option("recursiveFileLookup", "true")
-          .parquet(s"$path/rows.parquet"),
-        rows, "append", rows))
-    guarded.sortWithinPartitions("doc_id")
-      .write.mode("append").parquet(s"$path/rows.parquet")
+        Snapshots.scan(spark, path, Layout, "rows", head), rows, "append", rows))
+    Snapshots.append(spark, guarded.sortWithinPartitions("doc_id"), path, Layout,
+      "rows", "append")
   }
 
-  /** Commit one batch's index rows as the atomic directory
-    * `rows.parquet/batch-{id}` ([[Snapshots.commitBatch]]). */
+  /** Commit one batch's index rows with its ledger line
+    * ([[Snapshots.commitBatch]]); a batch the ledger already holds
+    * commits nothing. */
   def commitBatch(spark: SparkSession, rows: DataFrame, path: String,
       batchId: Long): Unit =
     Snapshots.commitBatch(spark, rows.sortWithinPartitions("doc_id"), path,
@@ -153,68 +159,61 @@ object DedupIndex {
   def load(spark: SparkSession, path: String): DataFrame =
     Snapshots.live(spark, path, Layout)
 
-  /** Compact an index whose rows artifact has accumulated append
-    * fragments (b14/s15 leave the base write plus one file set per
-    * appended batch — a crawl pipeline appending daily accumulates
-    * exactly the small-file fragmentation b6 compacts on tables).
-    * Rewrites the rows into ceil(bytes/4MiB) files (the b6/AnnIndex
-    * measured-bytes bin-packing, shared via Fs.packTarget) sorted by
-    * doc_id within each file, landing in a NEW directory (parquet
-    * cannot overwrite a source mid-read; pointer-swap deployment,
-    * AnnIndex.compact's pattern). The new root is servable at once: it
-    * carries the source's served forest generation and applied-epoch
-    * ledger and is committed as the version after the source's last,
-    * so [[loadAt]], [[loadForestAt]] and [[maintainClusters]] run on
-    * it. A pure layout change: same rows, same signatures, same
-    * forest — DedupIndexSpec pins file count, ordering, row identity
-    * and the served history. No gated bench row: the
-    * answer-invisibility of a layout rewrite is already hash-gated
-    * twice (b6 on tables, b10 on the ANN index); this is the same
-    * contract on a third artifact, spec-gated. */
+  /** Compact an index whose rows have accumulated append units
+    * (b14/s15 leave the base unit plus one unit per appended batch — a
+    * crawl pipeline appending daily accumulates exactly the small-file
+    * fragmentation b6 compacts on tables). Rewrites the live rows into
+    * ONE unit of ceil(bytes/4MiB) files (the b6/AnnIndex measured-bytes
+    * bin-packing, shared via Fs.packTarget) sorted by doc_id within
+    * each file; tombstoned rows are dropped, so deletes become physical
+    * here. `to == from` compacts in place: the packed unit replaces the
+    * rows and tombstone units in the head, the served forest and the
+    * ledger stay, and every tag keeps serving until [[expire]] reclaims
+    * the fragments. Another `to` lands a new root that carries the
+    * served forest generation (same number) and the ledger. Either way
+    * the result is tagged as the version after the source's last
+    * ([[Snapshots.commitCompacted]]), so [[loadAt]], [[loadForestAt]]
+    * and [[maintainClusters]] run on it. A pure layout change:
+    * DedupIndexSpec pins file count, ordering, row identity and the
+    * served history. No gated bench row: the answer-invisibility of a
+    * layout rewrite is already hash-gated twice (b6 on tables, b10 on
+    * the ANN index); this is the same contract on a third artifact. */
   def compact(spark: SparkSession, from: String, to: String): Unit = {
-    val bytes = Fs.layoutBytes(spark, s"$from/rows.parquet")
-    val target = Fs.packTarget(bytes)
-    // load is the MASKED view: tombstoned rows are DROPPED here —
-    // compaction is where deletes become physical; the new root
-    // has no tombstone artifact, so its reload sees exactly the
-    // surviving rows (AnnIndex.compact's contract).
-    load(spark, from)
-      .repartition(target)
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$to/rows.parquet")
-    // the served forest generation moves with the rows, keeping its number
-    val gen = versions(spark, from).lastOption.flatMap { v =>
-      val man = Snapshots.entries(spark, from, v)
-      servedGen(man).map { g =>
-        saveForest(spark, forestFromEntries(spark, from, v, man), to, g)
-        g
-      }
-    }
-    Snapshots.commitCompacted(spark, Some(from), to, Layout, gen)
+    val head = Snapshots.current(spark, from)
+    val bytes = Snapshots.units(head, "rows").map(u => Fs.layoutBytes(spark, s"$from/$u")).sum
+    val packed = Snapshots.stage(spark, to, Layout, "rows", Snapshots.unitName("packed"),
+      Snapshots.rows(spark, from, Layout, head)
+        .repartition(Fs.packTarget(bytes))
+        .sortWithinPartitions("doc_id"))
+    Snapshots.commitCompacted(spark, Some(from), to, Layout, head, Seq(packed))(
+      servedGen(head).toSeq.map { g =>
+        forestUnit(spark, Snapshots.scan(spark, from, Layout, "forest", head), to, g)
+      })
   }
 
   /** The artifact's coordinates in the shared lifecycle
     * ([[graft.core.Snapshots]]): the signature rows (where batches
-    * commit), the id-only tombstones (keyed on doc_id), and the cluster
-    * label forest, whose manifests record only the SERVED generation
-    * ([[saveForest]]). */
-  private val Layout = Snapshots.Layout(Seq(
-    "rows" -> "rows.parquet",
-    "tombstones" -> "tombstones.parquet",
-    "forest" -> "forest.parquet"), data = "rows", id = "doc_id",
-    gens = Some("forest"))
+    * commit), the cluster label forest, and the id-only tombstones
+    * keyed on doc_id. */
+  private val Layout = Snapshots.Layout(Map(
+    "rows" -> StructType(StructField("doc_id", LongType) +: StructField("h", StringType) +:
+      (0 until 16).map(i => StructField(s"mh$i", LongType))),
+    "forest" -> StructType(Seq(StructField("id", LongType), StructField("lbl", LongType)))),
+    data = "rows", id = "doc_id")
 
-  /** Record the artifact's CURRENT file sets as snapshot `version`.
-    * Why a DEDUP index needs time travel: dedup decisions are part of a
-    * training run's provenance — "which documents did yesterday's
-    * ingest suppress, against which index state" must be answerable
-    * after the index has grown and absorbed takedowns. `forestGen`
-    * names the generation this snapshot SERVES — a caller that just
-    * ran saveForest(gen) passes it (ADVICE r13); None carries the
-    * previous manifest's served gen forward. */
+  /** Tag the head as snapshot `version`. Why a DEDUP index needs time
+    * travel: dedup decisions are part of a training run's provenance —
+    * "which documents did yesterday's ingest suppress, against which
+    * index state" must be answerable after the index has grown and
+    * absorbed takedowns. `forestGen`, when given, must be the
+    * generation the head serves — the last [[saveForest]] — so a caller
+    * that names the gen it just wrote cannot tag another one. */
   def snapshot(spark: SparkSession, path: String, version: Int,
       forestGen: Option[Int] = None): Unit =
-    Snapshots.snapshot(spark, path, version, Layout, forestGen)
+    Snapshots.snapshot(spark, path, version, es => forestGen.foreach { g =>
+      require(servedGen(es).contains(g), s"snapshot: the head at $path serves " +
+        s"forest ${servedGen(es).fold("none")(n => s"gen-$n")}, not gen-$g")
+    })
 
   def versions(spark: SparkSession, path: String): Seq[Int] =
     Snapshots.versions(spark, path)
@@ -224,19 +223,13 @@ object DedupIndex {
     * after it do NOT mask (a v1 read serves dedup evidence for a
     * document v2 deleted — that is the audit point; b23 gates it). */
   def loadAt(spark: SparkSession, path: String, version: Int): DataFrame =
-    pinnedRows(spark, path, Snapshots.entries(spark, path, version))
-
-  /** [[loadAt]] over an already-read manifest, so [[maintainClustersImpl]]
-    * feeds the pinned rows and the pinned forest from one read. */
-  private def pinnedRows(spark: SparkSession, path: String,
-      man: Seq[(String, String)]): DataFrame =
-    Snapshots.pinned(spark, path, man, Layout)(fs => spark.read.parquet(fs: _*))
+    Snapshots.rows(spark, path, Layout, Snapshots.entries(spark, path, version))
 
   def rollback(spark: SparkSession, path: String, toVersion: Int): Unit =
     Snapshots.rollback(spark, path, toVersion, Layout)
 
   def expire(spark: SparkSession, path: String, keepLast: Int): Unit =
-    Snapshots.expire(spark, path, keepLast, Layout)
+    Snapshots.expire(spark, path, keepLast)
 
   /** The (doc_id, mh0..mh15) signature view of loaded index rows —
     * docs too short to shingle (NULL lanes) dropped, exactly the
@@ -274,60 +267,50 @@ object DedupIndex {
     graft.ops.ConnectedComponents.stars(idx.select("doc_id"), pairs)
   }
 
-  /** Persist cluster labels as forest GENERATION `gen` —
+  /** Persist cluster labels as forest GENERATION `gen` — the unit
     * `{path}/forest.parquet/gen-{gen}/`, one (id, lbl) row per indexed
-    * doc (n rows: the label forest, never the quadratic pair set).
-    * Generations are the append-only discipline the shared snapshot
-    * layer requires: a maintenance run writes a NEW gen directory and
-    * the next [[snapshot]] records it; files of older generations are
-    * never rewritten, so every pinned manifest keeps serving its as-of
-    * forest ([[loadForestAt]] reads a version's LATEST recorded gen).
-    * Fresh gen numbers are ENFORCED, not asked for (ADVICE r12): a
-    * reused gen would silently rewrite files of a supposedly
-    * append-only generation out from under every pinned manifest that
-    * references it. The write is STAGED under `_staging` and committed
-    * by one atomic rename into the gen directory (ADVICE r13: a direct
-    * write could crash mid-job-commit and leave a gen dir with visible
-    * partial data files that reads as a complete generation) — the
-    * same discipline as [[commitBatch]], and the rename's
-    * refuse-existing-destination is what makes the freshness contract
-    * race-safe: a crashed run leaves only invisible staging, a racing
-    * duplicate gen loses the rename. */
+    * doc (n rows: the label forest, never the quadratic pair set) — and
+    * commit it as the forest the head serves, replacing the previous
+    * generation there. Older generations are never rewritten, so every
+    * tag keeps serving its as-of forest ([[loadForestAt]]). Fresh gen
+    * numbers are ENFORCED, not asked for (ADVICE r12): a reused gen
+    * would rewrite a unit out from under every tag that names it. The
+    * write is staged and renamed into place, and the rename's
+    * refuse-existing-destination makes the freshness contract
+    * race-safe: a racing duplicate gen loses the rename, and a crashed
+    * run leaves a generation no head serves. */
   def saveForest(spark: SparkSession, labels: DataFrame, path: String,
       gen: Int): Unit = {
-    val genDir = s"$path/forest.parquet/gen-$gen"
-    require(!Fs.exists(spark, genDir),
-      s"saveForest: $genDir already exists — generations are append-only " +
-        "commit units; use a fresh gen number (a crashed run's stage is " +
-        "invisible and needs no cleanup before retrying it)")
-    val staging =
-      s"$path/_staging/forest-gen-$gen-${java.util.UUID.randomUUID().toString}"
-    val Array(idCol, lblCol) = labels.columns.take(2)
-    labels.select(col(idCol).as("id"), col(lblCol).as("lbl"))
-      .sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(staging)
-    Fs.rename(spark, staging, genDir)
+    val unit = forestUnit(spark, labels, path, gen)
+    Snapshots.commit(spark, path)(_.filterNot(_._1 == "forest") :+ unit)
   }
 
-  private val ForestGen = """forest\.parquet/gen-(\d+)/.*""".r
+  /** Stage `labels` (id and label columns first) as the forest unit `gen-{gen}`. */
+  private def forestUnit(spark: SparkSession, labels: DataFrame, path: String,
+      gen: Int): (String, String) = {
+    require(!Fs.exists(spark, s"$path/forest.parquet/gen-$gen"),
+      s"saveForest: $path/forest.parquet/gen-$gen already exists — generations " +
+        "are immutable units; use a fresh gen number")
+    val Array(idCol, lblCol) = labels.columns.take(2)
+    Snapshots.stage(spark, path, Layout, "forest", s"gen-$gen",
+      labels.select(col(idCol).as("id"), col(lblCol).as("lbl")).sortWithinPartitions("id"))
+  }
 
-  /** The forest generation a manifest serves: the LATEST one it records
-    * (older gens stay pinned only because earlier manifests reference
-    * them). */
-  private def servedGen(man: Seq[(String, String)]): Option[Int] =
-    man.collect { case ("forest", ForestGen(g)) => g.toInt }.maxOption
+  private val ForestGen = """forest\.parquet/gen-(\d+)""".r
+
+  /** The forest generation entries `es` serve. */
+  private def servedGen(es: Snapshots.Entries): Option[Int] =
+    es.collectFirst { case ("forest", ForestGen(g)) => g.toInt }
 
   /** Load the label forest AS OF snapshot `version` — its served
-    * generation. One manifest read + one pruned scan of that gen. */
+    * generation. One tag read + one scan of that unit. */
   def loadForestAt(spark: SparkSession, path: String, version: Int): DataFrame =
-    forestFromEntries(spark, path, version, Snapshots.entries(spark, path, version))
+    forestOf(spark, path, version, Snapshots.entries(spark, path, version))
 
-  private def forestFromEntries(spark: SparkSession, path: String,
-      version: Int, man: Seq[(String, String)]): DataFrame = {
-    val gen = servedGen(man)
-    require(gen.isDefined, s"snapshot v$version at $path records no forest generation")
-    spark.read.parquet(Snapshots.files(path, man, "forest")
-      .filter(_.contains(s"forest.parquet/gen-${gen.get}/")): _*)
+  private def forestOf(spark: SparkSession, path: String, version: Int,
+      es: Snapshots.Entries): DataFrame = {
+    require(servedGen(es).isDefined, s"snapshot v$version at $path records no forest generation")
+    Snapshots.scan(spark, path, Layout, "forest", es)
   }
 
   /** MAINTAIN cluster labels from the persisted state — the deployed
@@ -382,9 +365,9 @@ object DedupIndex {
 
   private def maintainClustersImpl(spark: SparkSession, path: String,
       version: Int, rawBSig: DataFrame, batchIds: DataFrame): DataFrame = CacheScope.scoped {
-    // ONE manifest read feeds both the pinned rows and the pinned forest
+    // ONE tag read feeds both the pinned rows and the pinned forest
     val man = Snapshots.entries(spark, path, version)
-    val idx = pinnedRows(spark, path, man)
+    val idx = Snapshots.rows(spark, path, Layout, man)
     val iSig = sigOf(idx)
     val bSig = CacheScope.cacheEager(
       rawBSig.unionByName(
@@ -396,7 +379,7 @@ object DedupIndex {
     val batchPairs = MinHash.banded(MinHash.bandPairKeysSorted(allSig),
       Some(MinHash.bandPairKeysSorted(bSig)), MinHash.Rule.Deployed, 14)
       .select("d1", "d2")
-    val forest = forestFromEntries(spark, path, version, man)
+    val forest = forestOf(spark, path, version, man)
     graft.ops.ConnectedComponents.stars(
       idx.select("doc_id").unionByName(batchIds.select("doc_id")),
       forest.filter(col("id") =!= col("lbl"))

@@ -686,8 +686,8 @@ object DedupQueries {
     // != 2), resolves its clusters FROM THE ARTIFACT's signature lanes
     // (DedupIndex.clusterLabels — old text read once, at indexing),
     // persists the (id, lbl) forest as generation 1 and snapshots —
-    // the forest is n rows through core.Snapshots' manifest layer,
-    // never the quadratic pair set. The INGEST then calls
+    // the forest is an n-row unit in core.Snapshots' commit log, never
+    // the quadratic pair set. The INGEST then calls
     // DedupIndex.maintainClusters: batch text scanned once for its
     // signatures, asymmetric banding against the pinned index lanes,
     // star loop over (loaded forest ∪ batch pairs). The gate is x12's
@@ -719,19 +719,19 @@ object DedupQueries {
     // maintenance output is not a report, it is the NEXT state. Day 0
     // indexes a third of the corpus and persists forest gen-1 /
     // snapshot v1; day 1 maintains labels for its batch FROM v1, then
-    // commits its own evolution — batch index rows APPENDED (one
-    // linear scan, no old file rewritten), the maintained labels
-    // persisted as forest gen-2, snapshot v2 recorded; day 2 maintains
-    // from v2 — whose manifest now pins gen-2 as the latest forest and
+    // commits its own evolution — batch index rows APPENDED as a new
+    // unit (one linear scan, no old file rewritten), the maintained
+    // labels committed as forest gen-2, snapshot v2 tagged; day 2
+    // maintains from v2 — whose manifest names gen-2 as its forest and
     // the grown row set — and its answer gates against x12's VERBATIM
     // full-corpus oracle. What this adds over b26: the maintain loop
     // COMPOSES (day 2 trusts a forest that was itself produced by
     // maintenance, not by a full resolve), and the multi-generation
     // forest path is exercised for real — v1 keeps serving gen-1
-    // forever while the directory holds gen-2 (DedupIndexSpec pins
-    // that pairing). SCALE SHAPE: every day pays batch-linear work
-    // plus two pruned artifact scans, fed by one driver-side manifest
-    // file read; snapshots write one small manifest file, no Spark
+    // forever while the head serves gen-2 (DedupIndexSpec pins that
+    // pairing). SCALE SHAPE: every day pays batch-linear work plus two
+    // pruned artifact scans, fed by one driver-side manifest file read;
+    // snapshots copy the head to one small manifest file, no Spark
     // job; no day ever re-pairs a previous day's corpus — the 100 TB
     // crawl cadence, end to end.
     Q(
@@ -916,9 +916,9 @@ object DedupQueries {
     // can be VACUUMED without breaking the loop. Day 0 and day 1 run
     // b27's shape (index thirds, forest gen-1/gen-2, snapshots v1/v2),
     // then Snapshots.expire(keepLast = 1) drops v1 — and with it the
-    // gen-1 forest files no retained manifest records (snapshots
-    // record only the generation they SERVE — recording superseded
-    // gens would pin them forever and make retention a no-op). Day 2
+    // gen-1 forest unit neither the head nor a retained manifest names
+    // (a head names only the generation it SERVES, so a superseded
+    // gen is pinned by the tags that served it and no others). Day 2
     // then maintains from the vacuumed artifact's only surviving
     // version, and its answer still gates against x12's VERBATIM
     // full-corpus oracle — the serve proof. The reclaim proof rides as
@@ -926,8 +926,8 @@ object DedupQueries {
     // directory (2 → 1), not asserted; DedupIndexSpec adds the
     // pinned-read side (a retained version serves its as-of forest
     // bit-exactly after the vacuum, the expired one refuses). SCALE
-    // SHAPE: expire is driver-side manifest file reads plus per-file
-    // deletes — file-count work, no Spark job, never data reads; the daily loop's storage now
+    // SHAPE: expire is driver-side manifest file reads plus per-unit
+    // deletes — unit-count work, no Spark job, never data reads; the daily loop's storage now
     // stays bounded instead of accreting one forest per day forever.
     Q(
       "b29_forest_retention",

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * array row-locally (char-code array + O(n) rolling fold per
   * position; no explode) and `signaturesFromSets` derives the 16
   * signature columns as array folds over it. The explode-based
-  * `shingles`/`signatures` pair remains for consumers that need
-  * shingle ROWS (e.g. MlLsh feature vectors) and computes identical
-  * bits. Candidate generation is classic LSH banding — 4 bands x 4
+  * `shingles`/`signatures` pair computes identical bits and is kept
+  * as the readable reference DedupSpec checks the fast path against.
+  * Candidate generation is classic LSH banding — 4 bands x 4
   * rows — so the self-join runs on small band buckets, never on the
   * full doc x doc cross product. A pair with >= 14/16 matching
   * minhashes always shares a full band (pigeonhole: 2 mismatches break

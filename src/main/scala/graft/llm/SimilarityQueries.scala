@@ -585,25 +585,23 @@ object SimilarityQueries {
       def stream = ss.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", "1").parquet(in)
       // REPLAY-BEARING (round-8 VERDICT task 4): the append is the
-      // IDEMPOTENT form (AnnIndex.appendIdempotent — since round 10 a
-      // STAGED ATOMIC COMMIT: the batch lands as one renamed
-      // `batch-{id}` directory, with the per-epoch marker as the
-      // compaction-surviving ledger), and this run PROVES it by
+      // IDEMPOTENT form (AnnIndex.appendIdempotent: the batch's unit
+      // and its `applied` ledger line land in ONE log commit, and the
+      // ledger survives compaction), and this run PROVES it by
       // really crashing and replaying through the engine: foreachBatch
-      // throws an injected failure AFTER epoch 1's commit+marker
+      // throws an injected failure AFTER epoch 1's log commit
       // completed but BEFORE returning, so the engine never records
       // that epoch; the restarted query (SAME checkpoint — epoch ids
       // are stable because they come from the WAL offset log, which
       // is also why a fresh-checkpoint "replay" would be unsound to
       // skip on) re-delivers the SAME micro-batch with the SAME epoch
-      // id, the skip fires (marker or committed directory — either is
-      // durable evidence), and the search hash-matches the batch
-      // oracle. An unconditional append would double-code the
+      // id, the ledger skip fires, and the search hash-matches the
+      // batch oracle. An unconditional append would double-code the
       // replayed batch and fail the gate (duplicate candidates shift
-      // the top-5 ranks). A crash INSIDE the staging write leaves an
-      // invisible partial stage the replay overwrites — at-least-once
-      // within staging, exactly-once across committed batches; the
-      // crash BETWEEN commit and marker is s16's gated scenario.
+      // the top-5 ranks). A crash before the log commit leaves only an
+      // invisible unit, and the replay applies the batch once —
+      // exactly-once across committed batches; s16 gates the crash
+      // right after a bare commit.
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
       def run(injectCrash: Boolean): Unit = {
         val q = stream.writeStream
@@ -623,7 +621,7 @@ object SimilarityQueries {
       }
       try {
         run(injectCrash = true)   // crashes after epoch 1's append
-        run(injectCrash = false)  // engine replays epoch 1; marker skips it
+        run(injectCrash = false)  // engine replays epoch 1; the ledger skips it
       } finally {
         graft.streaming.TempWork.delete(in)
         graft.streaming.TempWork.delete(ckpt)
@@ -765,29 +763,29 @@ object SimilarityQueries {
     },
 
     // B16 — SNAPSHOT-PINNED READS (time travel): the b-family's
-    // lifecycle mutations (append/delete/compact) are all append-only
-    // at the FILE level — new code files, new tombstone files, new
-    // generation directories; nothing rewrites in place — which is
-    // exactly the invariant that makes versioned manifests free
-    // (Delta/Iceberg's core move). AnnIndex.snapshot commits the
-    // artifact's current file sets as a numbered manifest after each
-    // mutation; AnnIndex.loadAt reads the index AS OF a version —
-    // code files added later are invisible, tombstones written later
-    // do not mask. The chain here: build+save on the first half
+    // lifecycle mutations (append/delete/compact) each commit a new
+    // immutable unit — code units, tombstone units, packed units;
+    // nothing rewrites in place — which is exactly the invariant that
+    // makes versioned manifests free (Delta/Iceberg's core move).
+    // AnnIndex.snapshot tags the log's head (the units the artifact
+    // serves) as a numbered manifest after each mutation;
+    // AnnIndex.loadAt reads the index AS OF a version — code units
+    // added later are invisible, tombstones written later do not
+    // mask. The chain here: build+save on the first half
     // (v1), append the second half (v2), tombstone every
     // vec_id % 10 = 3 (v3) — and then the gated search reads the
     // index PINNED AT v2. The oracle is b8's VERBATIM append oracle:
     // the v2 read must serve the full pre-delete corpus, deleted ids
     // and all, even though the artifact's CURRENT state (b12's gated
     // masked serve) no longer would. That is the capability a
-    // directory read structurally cannot provide: takedown audits
+    // current-state read structurally cannot provide: takedown audits
     // ("what did retrieval serve before the delete batch?"),
     // bit-reproducible evaluation runs against a pinned index, and
     // rollback after a bad append — each just a loadAt at the right
-    // version. SCALE SHAPE: a snapshot commit is one bounded listing
-    // + one small driver-written manifest file committed by rename —
-    // no Spark job; loadAt adds one manifest file read (file NAMES,
-    // never data) before the same distributed pinned-file scans b7's
+    // version. SCALE SHAPE: a snapshot is the head file copied to a
+    // small driver-written manifest committed by rename — no listing,
+    // no Spark job; loadAt adds one manifest file read (unit NAMES,
+    // never data) before the same distributed pinned-unit scans b7's
     // serve path runs — cost tracks manifest length, not the corpus,
     // at any scale.
     Q(
@@ -852,7 +850,8 @@ object SimilarityQueries {
     // B18 — the CELL-PARTITIONED serve layout: b8's grown artifact
     // compacted into one `cell=N/` partition directory per coarse cell
     // (AnnIndex.compactPartitioned) and searched through
-    // loadPartitioned — the "production variant" the AnnIndex header
+    // loadPartitioned (load over a head whose codes unit is
+    // cell-partitioned) — the "production variant" the AnnIndex header
     // promises for large K. Against the flat layout a cell-pruned
     // search still opens every file and relies on row-group skipping;
     // against this one Spark plans DYNAMIC PARTITION PRUNING — the
@@ -895,16 +894,16 @@ object SimilarityQueries {
     // under shifted vec_ids; its duplicate codes land in the same
     // cells and visibly corrupt every top-5 through sim ties) AND an
     // over-broad tombstone delete — snapshotted as v3. rollback(2)
-    // physically deletes every data file no manifest ≤ v2 references
-    // (files compared in the manifest's own root-relative
-    // coordinates), drops the v3 manifest, and removes the emptied
-    // tombstone artifact — after which a plain DIRECTORY load (NOT
-    // loadAt) serves exactly the v2 state, gated against b8's
-    // VERBATIM oracle. Append-only mutation is why file-set
-    // subtraction restores bit-exact state: nothing v2 referenced was
-    // ever rewritten. SCALE SHAPE: one manifest file read per
-    // retained version + one recursive listing + per-file deletes —
-    // no Spark job, tracks file count, never data volume; the junk batch's cost in
+    // commits v2's manifest as the log's head, drops the v3 manifest,
+    // and deletes the units only the replaced head and v3 named (the
+    // junk codes unit and the tombstone unit, with the emptied
+    // tombstone directory) — after which a plain CURRENT load (NOT
+    // loadAt) serves exactly the v2 state, gated against b8's VERBATIM
+    // oracle. Immutable units are why unit-set subtraction restores
+    // bit-exact state: nothing v2 referenced was ever rewritten. SCALE
+    // SHAPE: one manifest file read per tag + one log commit +
+    // per-unit deletes — no listing, no Spark job, tracks unit count,
+    // never data volume; the junk batch's cost in
     // this row is the encode+append itself (corpus-linear, same as
     // b8), and the rollback undoes it in metadata time.
     Q(
@@ -926,30 +925,30 @@ object SimilarityQueries {
       AnnIndex.delete(spark, e.filter(col("vec_id") % 10 === 3), path)
       AnnIndex.snapshot(spark, path, 3)
       AnnIndex.rollback(spark, path, 2)
-      // a plain directory read must now BE the v2 state
+      // a plain current read must now BE the v2 state
       AnnIndex.searchTop5(AnnIndex.load(spark, path), e, 20)
     },
 
     // B22 — SNAPSHOT RETENTION (vacuum): rollback forgets the FUTURE
     // of a version; expire forgets the PAST. Unbounded time-travel
     // history is untenable at 100 TB — every retained version pins its
-    // file set against reclamation — so a deployment expires all but
+    // units against reclamation — so a deployment expires all but
     // the last N versions, exactly Delta VACUUM / Iceberg
     // expire_snapshots. The chain is b16's (build+save v1, append v2,
     // delete v3), then expire(keepLast = 2): v1's manifest is dropped
     // — loadAt(1) is gone for good — while the gated search reads the
     // index PINNED AT THE RETAINED v2 against b8's VERBATIM append
     // oracle: expiring history must be invisible to every retained
-    // pinned read AND to the current state. File reclamation is
-    // rollback's file-set subtraction generalized ("referenced by an
-    // expired manifest and no retained one"); under append-only
-    // mutation that exclusive set is empty — newer manifests are
-    // supersets — so this row also proves expire deletes NO data file
-    // a retained version needs (AnnIndexSpec pins the file-level
-    // contract, including the subtraction actually firing on a
-    // history with out-of-band removals). SCALE SHAPE: one manifest
-    // file read per version + per-file deletes — no Spark job, tracks
-    // manifest length, never data volume.
+    // pinned read AND to the current state. Unit reclamation is
+    // rollback's unit-set subtraction generalized ("named by an
+    // expired manifest and neither the head nor a retained one"); in
+    // this append-only chain that exclusive set is empty — newer
+    // manifests are supersets — so this row also proves expire deletes
+    // NO unit a retained version needs (AnnIndexSpec pins the
+    // unit-level contract, including the subtraction actually firing
+    // after a rebuild and after an in-place compaction). SCALE SHAPE:
+    // one manifest file read per version + per-unit deletes — no Spark
+    // job, tracks manifest length, never data volume.
     Q(
       "b22_index_expire", ivfPqAppendSql
     ) { (spark, dir) =>

@@ -91,8 +91,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val built = AnnIndex.build(all.filter(col("vec_id") < half))
     val path = java.nio.file.Files.createTempDirectory("graft_annidx_cpa").toString
     val path2 = java.nio.file.Files.createTempDirectory("graft_annidx_cpb").toString
-    def parquetFiles(p: String) = new java.io.File(s"$p/codes.parquet")
-      .listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    def parquetFiles(p: String) = TestSpark.parquetFiles(s"$p/codes.parquet")
     def rm(p: String): Unit = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
       try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
@@ -158,6 +157,60 @@ class AnnIndexSpec extends AnyFunSuite {
     finally s.close()
   }
 
+  test("in-place compaction keeps every tag servable; expire reclaims the fragments") {
+    val all = vecs
+    val half = all.count() / 2
+    val built = AnnIndex.build(all.filter(col("vec_id") < half))
+    val path = java.nio.file.Files.createTempDirectory("graft_annidx_cip").toString
+    def codes(i: AnnIndex.Index) = i.codes.orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSeq
+    try {
+      AnnIndex.save(spark, built, path)
+      AnnIndex.snapshot(spark, path, 1)
+      AnnIndex.append(spark, built, all.filter(col("vec_id") >= half), path)
+      AnnIndex.delete(spark, all.filter(col("vec_id") % 10 === 3), path)
+      AnnIndex.snapshot(spark, path, 2)
+      val at1 = codes(AnnIndex.loadAt(spark, path, 1))
+      val live = codes(AnnIndex.load(spark, path))
+      val head = graft.core.Snapshots.current(spark, path)
+      val fragments = graft.core.Snapshots.units(head, "codes") ++
+        graft.core.Snapshots.units(head, "tombstones")
+      AnnIndex.compact(spark, path, path)
+      assert(AnnIndex.versions(spark, path) == Seq(1, 2, 3))
+      assert(at1.nonEmpty && codes(AnnIndex.loadAt(spark, path, 1)) == at1)
+      assert(codes(AnnIndex.load(spark, path)) == live)
+      assert(graft.core.Snapshots.units(graft.core.Snapshots.current(spark, path), "codes").length == 1)
+      // the codebooks stay one unit, shared by every tag
+      assert(TestSpark.unitDirs(s"$path/centroids.parquet", "").length == 1)
+      AnnIndex.expire(spark, path, keepLast = 1)
+      assert(fragments.length == 3 &&
+        fragments.forall(u => !graft.core.Fs.exists(spark, s"$path/$u")))
+      assert(codes(AnnIndex.load(spark, path)) == live)
+      assert(codes(AnnIndex.loadAt(spark, path, 3)) == live)
+    } finally rmDir(path)
+  }
+
+  test("rollback across an in-place compaction restores the pinned version") {
+    val all = vecs
+    val half = all.count() / 2
+    val built = AnnIndex.build(all.filter(col("vec_id") < half))
+    val path = java.nio.file.Files.createTempDirectory("graft_annidx_cir").toString
+    try {
+      AnnIndex.save(spark, built, path)
+      AnnIndex.snapshot(spark, path, 1)
+      assert(AnnIndex.appendIdempotent(spark, built, all.filter(col("vec_id") >= half), path, 6L))
+      AnnIndex.snapshot(spark, path, 2)
+      AnnIndex.compact(spark, path, path)
+      AnnIndex.rollback(spark, path, 1)
+      assert(AnnIndex.versions(spark, path) == Seq(1))
+      assert(AnnIndex.load(spark, path).codes.count() == half)
+      assert(TestSpark.unitDirs(s"$path/codes.parquet", "").length == 1)
+      // epoch 6 was rolled away with its data, so it re-applies
+      assert(AnnIndex.appendIdempotent(spark, built, all.filter(col("vec_id") >= half), path, 6L))
+      assert(AnnIndex.load(spark, path).codes.count() == all.count())
+    } finally rmDir(path)
+  }
+
   test("delete: masked load == physical compaction; tombstoned rows are gone") {
     val all = vecs
     val built = AnnIndex.build(all)
@@ -178,8 +231,8 @@ class AnnIndexSpec extends AnyFunSuite {
       val compacted = AnnIndex.load(spark, path2).codes.orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
       assert(masked.sameElements(compacted))
-      val raw = spark.read.parquet(s"$path2/codes.parquet")
-        .select("vec_id").collect().map(_.getLong(0))
+      val raw = spark.read.option("recursiveFileLookup", "true")
+        .parquet(s"$path2/codes.parquet").select("vec_id").collect().map(_.getLong(0))
       assert(raw.length == masked.length && raw.forall(_ % 10 != 3))
       // the new generation starts tombstone-free
       assert(!graft.core.Fs.exists(spark, s"$path2/tombstones.parquet"))
@@ -246,7 +299,7 @@ class AnnIndexSpec extends AnyFunSuite {
     } finally { rmDir(path) }
   }
 
-  test("a batch committed without its marker is skipped on replay (ADVICE r9)") {
+  test("a batch committed by commitBatch carries its ledger line: replay skipped") {
     val all = vecs
     val half = all.count() / 2
     val built = AnnIndex.build(all.filter(col("vec_id") < half))
@@ -255,16 +308,15 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.save(spark, built, path)
       val loaded = AnnIndex.load(spark, path)
       val batch = all.filter(col("vec_id") >= half)
-      // simulate the crash window: data commit lands, marker never does
+      // the bare data commit: the batch's unit and its ledger line land
+      // in the same log commit
       AnnIndex.commitBatch(spark, loaded, batch, path, 3L)
-      assert(!graft.core.Fs.exists(spark, s"$path/_applied/batch-3"))
+      assert(graft.core.Snapshots.current(spark, path).contains(("applied", "batch-3")))
       val once = AnnIndex.load(spark, path).codes.count()
       assert(once == all.count())
-      // engine replays epoch 3: the committed directory is the evidence;
-      // the replay is skipped and the missing marker heals
+      // engine replays epoch 3: skipped off the head's ledger
       assert(!AnnIndex.appendIdempotent(spark, loaded, batch, path, 3L))
       assert(AnnIndex.load(spark, path).codes.count() == once)
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-3"))
     } finally rmDir(path)
   }
 
@@ -280,9 +332,8 @@ class AnnIndexSpec extends AnyFunSuite {
       val batch = all.filter(col("vec_id") >= half)
       assert(AnnIndex.appendIdempotent(spark, loaded, batch, path, 5L))
       AnnIndex.compact(spark, path, path2)
-      // the new generation remembers epoch 5 although its batch dir is
+      // the new generation remembers epoch 5 although its batch unit is
       // rewritten away — a checkpoint-replayed epoch must not re-append
-      assert(graft.core.Fs.exists(spark, s"$path2/_applied/batch-5"))
       val n = AnnIndex.load(spark, path2).codes.count()
       assert(!AnnIndex.appendIdempotent(spark, loaded, batch, path2, 5L))
       assert(AnnIndex.load(spark, path2).codes.count() == n)
@@ -364,9 +415,10 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.append(spark, loaded, all.filter(col("vec_id") >= half), path)
       AnnIndex.compactPartitioned(spark, path, path2)
       assert(AnnIndex.versions(spark, path2) == Seq(0))
-      // physical layout: one cell=N directory per occupied coarse cell
-      val dirs = new java.io.File(s"$path2/codes.parquet").listFiles()
-        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
+      // physical layout: one cell=N directory per occupied coarse cell,
+      // inside the one `cells-` unit
+      val Seq(unit) = TestSpark.unitDirs(s"$path2/codes.parquet", "cells-")
+      val dirs = TestSpark.unitDirs(s"$path2/codes.parquet/$unit", "cell=")
       val occupied = AnnIndex.load(spark, path).codes
         .select("cell").distinct().count()
       assert(dirs.length == occupied)
@@ -421,7 +473,7 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(cur.length == n && cur.sameElements(v2))
       // physical assertions: junk ids gone from the raw artifact,
       // tombstone artifact gone, v3 manifest gone, staging reclaimed,
-      // the v2 committed batch dir and its marker retained
+      // the v2 batch unit and its ledger line retained
       val raw = spark.read.option("recursiveFileLookup", "true")
         .parquet(s"$path/codes.parquet").select("vec_id").collect()
         .map(_.getLong(0))
@@ -429,8 +481,9 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(!graft.core.Fs.exists(spark, s"$path/tombstones.parquet"))
       assert(AnnIndex.versions(spark, path) == Seq(1, 2))
       assert(!graft.core.Fs.exists(spark, s"$path/_staging"))
-      assert(graft.core.Fs.exists(spark, s"$path/codes.parquet/batch-11"))
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-11"))
+      assert(TestSpark.unitDirs(s"$path/codes.parquet", "batch-11-").length == 1)
+      assert(!AnnIndex.appendIdempotent(spark, loaded,
+        all.filter(col("vec_id") >= half), path, 11L))
     } finally rmDir(path)
   }
 
@@ -447,8 +500,8 @@ class AnnIndexSpec extends AnyFunSuite {
       // the bad batch arrives as a committed epoch AFTER v1
       assert(AnnIndex.appendIdempotent(spark, loaded, batch, path, 4L))
       AnnIndex.rollback(spark, path, 1)
-      assert(!graft.core.Fs.exists(spark, s"$path/codes.parquet/batch-4"))
-      assert(!graft.core.Fs.exists(spark, s"$path/_applied/batch-4"))
+      assert(TestSpark.unitDirs(s"$path/codes.parquet", "batch-4-").isEmpty)
+      assert(!graft.core.Snapshots.current(spark, path).contains(("applied", "batch-4")))
       assert(AnnIndex.load(spark, path).codes.count() == half)
       // the epoch can legitimately RE-APPLY: its data was rolled away
       assert(AnnIndex.appendIdempotent(spark, loaded, batch, path, 4L))
@@ -535,30 +588,29 @@ class AnnIndexSpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft_annidx_rb3").toString
     try {
       AnnIndex.save(spark, built, path)
-      // a FLAT-append epoch with its marker (the carried-ledger shape a
-      // compacted generation has: marker, no batch directory)
+      // epoch 21 applied, snapshotted as v1
       val loaded = AnnIndex.load(spark, path)
-      AnnIndex.append(spark, loaded,
-        all.filter(col("vec_id") >= half && col("vec_id") % 2 === 0), path)
-      graft.core.Fs.touch(spark, s"$path/_applied/batch-21")
+      val even = all.filter(col("vec_id") >= half && col("vec_id") % 2 === 0)
+      val odd = all.filter(col("vec_id") >= half && col("vec_id") % 2 === 1)
+      assert(AnnIndex.appendIdempotent(spark, loaded, even, path, 21L))
       AnnIndex.snapshot(spark, path, 1)
       val v1 = AnnIndex.loadAt(spark, path, 1).codes.orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-      // a second flat epoch + marker, snapshotted as v2
-      AnnIndex.append(spark, loaded,
-        all.filter(col("vec_id") >= half && col("vec_id") % 2 === 1), path)
-      graft.core.Fs.touch(spark, s"$path/_applied/batch-22")
+      // a second epoch, snapshotted as v2
+      assert(AnnIndex.appendIdempotent(spark, loaded, odd, path, 22L))
       AnnIndex.snapshot(spark, path, 2)
       AnnIndex.rollback(spark, path, 1)
-      // ADVICE r10: epoch 22's flat files leave no batch directory, so
-      // the dir-emptied heuristic never touched its marker — a restarted
-      // stream would then never re-apply the deliberately-removed epoch.
-      // The recorded ledger restores the marker set to its v1 state.
-      assert(!graft.core.Fs.exists(spark, s"$path/_applied/batch-22"))
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-21"))
+      // ADVICE r10: the ledger is restored to its v1 state with the data
+      // — a restarted stream re-applies the deliberately removed epoch
+      // 22 and still skips epoch 21
+      val ledger = graft.core.Snapshots.current(spark, path).filter(_._1 == "applied")
+      assert(ledger == Seq(("applied", "batch-21")))
       val cur = AnnIndex.load(spark, path).codes.orderBy("vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
       assert(cur.nonEmpty && cur.sameElements(v1))
+      assert(!AnnIndex.appendIdempotent(spark, loaded, even, path, 21L))
+      assert(AnnIndex.appendIdempotent(spark, loaded, odd, path, 22L))
+      assert(AnnIndex.load(spark, path).codes.count() == all.count())
     } finally rmDir(path)
   }
 
@@ -580,17 +632,17 @@ class AnnIndexSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
       val preCur = AnnIndex.load(spark, path).codes.orderBy("vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-      val preFiles = graft.core.Fs.listDataFiles(spark, s"$path/codes.parquet")
+      val preFiles = TestSpark.parquetFiles(s"$path/codes.parquet")
       AnnIndex.expire(spark, path, keepLast = 2)
       // v1 is forgotten; v2/v3 remain
       assert(AnnIndex.versions(spark, path) == Seq(2, 3))
       assert(!graft.core.Fs.exists(spark, s"$path/manifest/v00001.tsv"))
       assert(graft.core.Fs.exists(spark, s"$path/manifest/v00002.tsv"))
       intercept[Exception] { AnnIndex.loadAt(spark, path, 1).codes.count() }
-      // append-only history: v1's files are all in v2/v3's supersets, so
+      // append-only history: v1's units are all in v2/v3's supersets, so
       // NO data file may be reclaimed — retained pinned reads and the
       // current masked state are bit-identical to before
-      assert(graft.core.Fs.listDataFiles(spark, s"$path/codes.parquet") == preFiles)
+      assert(TestSpark.parquetFiles(s"$path/codes.parquet") == preFiles)
       val postV2 = AnnIndex.loadAt(spark, path, 2).codes.orderBy("vec_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
       assert(postV2.length == n && postV2.sameElements(preV2))
@@ -604,41 +656,29 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("expire reclaims files exclusive to expired versions (subtraction fires)") {
-    import spark.implicits._
+    val all = vecs
+    val half = all.count() / 2
     val path = java.nio.file.Files.createTempDirectory("graft_annidx_exf").toString
     try {
-      // a two-file codes artifact with centroids, snapshotted as v1
-      Seq((0, 0, Seq(0.0))).toDF("space", "cid", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids.parquet")
-      Seq((1L, 0L, Seq(0L))).toDF("vec_id", "cell", "codes")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codes.parquet/batch-1")
-      Seq((2L, 0L, Seq(0L))).toDF("vec_id", "cell", "codes")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codes.parquet/batch-2")
-      graft.core.Fs.touch(spark, s"$path/_applied/batch-1")
-      graft.core.Fs.touch(spark, s"$path/_applied/batch-2")
+      // v1: an index with a streamed batch; v2: a rebuild saved over it,
+      // which shares no unit with v1
+      val built = AnnIndex.build(all.filter(col("vec_id") < half))
+      AnnIndex.save(spark, built, path)
+      assert(AnnIndex.appendIdempotent(spark, built, all.filter(col("vec_id") >= half), path, 1L))
       AnnIndex.snapshot(spark, path, 1)
-      // an out-of-band removal between snapshots (foreign writer /
-      // partial restore): batch-1 leaves the lineage before v2 — v2's
-      // manifest records only batch-2, yet batch-1's files are back on
-      // disk when expire runs. This is exactly the history shape the
-      // file-set subtraction exists for.
-      val parked = java.nio.file.Files.createTempDirectory("graft_annidx_prk").toString
-      graft.core.Fs.delete(spark, parked)
-      graft.core.Fs.rename(spark, s"$path/codes.parquet/batch-1", parked)
+      val v1Units = graft.core.Snapshots.entries(spark, path, 1).filter(_._1 != "applied").map(_._2)
+      AnnIndex.save(spark, AnnIndex.build(all), path)
       AnnIndex.snapshot(spark, path, 2)
-      graft.core.Fs.rename(spark, parked, s"$path/codes.parquet/batch-1")
+      val v2 = AnnIndex.loadAt(spark, path, 2).codes.select("vec_id").collect()
+        .map(_.getLong(0)).sorted.toSeq
       AnnIndex.expire(spark, path, keepLast = 1)
-      // batch-1 was referenced only by the expired v1: reclaimed, with
-      // its emptied dir and epoch marker; batch-2 (retained) survives
-      assert(!graft.core.Fs.exists(spark, s"$path/codes.parquet/batch-1"))
-      assert(!graft.core.Fs.exists(spark, s"$path/_applied/batch-1"))
-      assert(graft.core.Fs.exists(spark, s"$path/codes.parquet/batch-2"))
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-2"))
+      // v1's units are referenced only by the expired v1: reclaimed; the
+      // retained v2 (the head) still serves
+      assert(v1Units.length == 3 && v1Units.forall(u => !graft.core.Fs.exists(spark, s"$path/$u")))
       assert(AnnIndex.versions(spark, path) == Seq(2))
-      val ids = spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$path/codes.parquet")
-        .select("vec_id").collect().map(_.getLong(0)).toSeq
-      assert(ids == Seq(2L))
+      assert(AnnIndex.load(spark, path).codes.select("vec_id").collect()
+        .map(_.getLong(0)).sorted.toSeq == v2)
+      assert(v2.length == all.count())
     } finally rmDir(path)
   }
 
@@ -651,11 +691,10 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.save(spark, built, path)
       val loaded = AnnIndex.load(spark, path)
       val batch = all.filter(col("vec_id") >= half)
-      // a zombie executor and its replacement: both stage privately and
-      // race the atomic rename; Fs.rename's refuse-existing-destination
-      // arbitration must leave exactly ONE committed copy (ADVICE r10:
-      // the legacy rename semantics nested the loser INTO the winner and
-      // recursive readers double-counted the batch).
+      // a zombie executor and its replacement: both stage their own unit
+      // and race the log commit; Fs.rename's refuse-existing-destination
+      // arbitration makes the loser re-read the head, find the batch in
+      // its ledger and delete its unit — exactly ONE committed copy.
       val barrier = new java.util.concurrent.CyclicBarrier(2)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val ts = (1 to 2).map { _ =>
@@ -669,11 +708,11 @@ class AnnIndexSpec extends AnyFunSuite {
       }
       ts.foreach(_.start()); ts.foreach(_.join(300000))
       assert(errs.isEmpty, s"racing committer failed: ${errs.peek()}")
-      // single application: no nested directory, one data copy, marker on
-      val dir = new java.io.File(s"$path/codes.parquet/batch-42")
-      assert(dir.isDirectory && dir.listFiles().forall(!_.isDirectory))
+      // single application: one batch unit, no nested directory
+      val units = TestSpark.unitDirs(s"$path/codes.parquet", "batch-42-")
+      assert(units.length == 1 && new java.io.File(s"$path/codes.parquet/${units.head}")
+        .listFiles().forall(!_.isDirectory))
       assert(AnnIndex.load(spark, path).codes.count() == all.count())
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-42"))
       // the replayed epoch stays skipped after the race
       assert(!AnnIndex.appendIdempotent(spark, loaded, batch, path, 42L))
       assert(AnnIndex.load(spark, path).codes.count() == all.count())
@@ -728,18 +767,18 @@ class AnnIndexSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] {
         AnnIndex.mergeShards(spark, pa, pb, paDotDot)
       }
-      // refusal 3c: a reused destination carrying only a stale ledger
+      // refusal 3c: a reused destination carrying only a stale log head
       // or manifest (no codes/tombstones) is NOT fresh — a leftover
-      // _applied/batch-N would make a later appendIdempotent silently
+      // ledger line batch-N would make a later appendIdempotent silently
       // skip epoch N, and a stale manifest/ poisons loadAt (ADVICE r11)
       val pStale = java.nio.file.Files.createTempDirectory("graft_merge_stale").toString
       try {
-        graft.core.Fs.touch(spark, s"$pStale/_applied/batch-7")
+        graft.core.Fs.writeLines(spark, s"$pStale/_log/0.tsv", Seq("applied\tbatch-7"))
         intercept[IllegalArgumentException] {
           AnnIndex.mergeShards(spark, pa, pb, pStale)
         }
-        graft.core.Fs.delete(spark, s"$pStale/_applied")
-        graft.core.Fs.touch(spark, s"$pStale/manifest/v00001.tsv")
+        graft.core.Fs.delete(spark, s"$pStale/_log")
+        graft.core.Fs.writeLines(spark, s"$pStale/manifest/v00001.tsv", Nil)
         intercept[IllegalArgumentException] {
           AnnIndex.mergeShards(spark, pa, pb, pStale)
         }
@@ -751,8 +790,8 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.mergeShards(spark, pa, pb, pm)
       // merged generation is tombstone-free and physically excludes them
       assert(!graft.core.Fs.exists(spark, s"$pm/tombstones.parquet"))
-      val mergedIds = spark.read.parquet(s"$pm/codes.parquet")
-        .select("vec_id").collect().map(_.getLong(0)).toSet
+      val mergedIds = spark.read.option("recursiveFileLookup", "true")
+        .parquet(s"$pm/codes.parquet").select("vec_id").collect().map(_.getLong(0)).toSet
       val wantIds = all.filter(col("vec_id") % 10 =!= 3)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       assert(mergedIds == wantIds)

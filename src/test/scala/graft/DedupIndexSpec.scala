@@ -64,8 +64,7 @@ class DedupIndexSpec extends AnyFunSuite {
   test("compact: bin-packed file count, doc_id ordering, row-identical index") {
     val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_cpa").toString
     val path2 = java.nio.file.Files.createTempDirectory("graft_dedupidx_cpb").toString
-    def parquetFiles(p: String) = new java.io.File(s"$p/rows.parquet")
-      .listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    def parquetFiles(p: String) = TestSpark.parquetFiles(s"$p/rows.parquet")
     try {
       // fragment: base write + three appended batches
       DedupIndex.save(spark,
@@ -128,8 +127,98 @@ class DedupIndexSpec extends AnyFunSuite {
         sorted(DedupIndex.maintainClusters(spark, path2, v, batch)) == want)
       // the carried gen keeps its number and the carried ledger its epoch
       assert(graft.core.Fs.exists(spark, s"$path2/forest.parquet/gen-2"))
-      assert(graft.core.Fs.exists(spark, s"$path2/_applied/batch-4"))
+      val n = DedupIndex.load(spark, path2).count()
+      assert(!DedupIndex.appendIdempotent(spark,
+        DedupIndex.index(docs.filter(col("doc_id") % 3 === 1)), path2, 4L))
+      assert(DedupIndex.load(spark, path2).count() == n)
     } finally { rmrf(path); rmrf(path2); spark.catalog.clearCache() }
+  }
+
+  /** An artifact with history, for in-place compaction: v1 is the base
+    * with forest gen 1; v2 adds an appended batch and a takedown. */
+  private def twoVersions(path: String): Unit = {
+    DedupIndex.save(spark, DedupIndex.index(docs.filter(col("doc_id") % 4 === 0)), path)
+    DedupIndex.saveForest(spark,
+      DedupIndex.clusterLabels(DedupIndex.load(spark, path)), path, gen = 1)
+    DedupIndex.snapshot(spark, path, 1, forestGen = Some(1))
+    DedupIndex.append(spark, DedupIndex.index(docs.filter(col("doc_id") % 4 === 1)), path)
+    DedupIndex.delete(spark, docs.filter(col("doc_id") % 7 === 0).select("doc_id"), path)
+    DedupIndex.snapshot(spark, path, 2)
+  }
+
+  private def sorted(df: DataFrame) = df.orderBy(df.columns.head).collect().toSeq
+
+  test("in-place compaction keeps every tag servable, across rollback too") {
+    val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_cip").toString
+    try {
+      twoVersions(path)
+      val at1 = sorted(DedupIndex.loadAt(spark, path, 1))
+      val live = sorted(DedupIndex.load(spark, path))
+      val batch = docs.filter(col("doc_id") % 4 === 2)
+      val maintained = sorted(DedupIndex.maintainClusters(spark, path, 2, batch))
+      DedupIndex.compact(spark, path, path)
+      // one packed rows unit serves the head, tagged as v3
+      assert(DedupIndex.versions(spark, path) == Seq(1, 2, 3))
+      val head = graft.core.Snapshots.current(spark, path)
+      assert(graft.core.Snapshots.units(head, "rows").length == 1 &&
+        graft.core.Snapshots.units(head, "tombstones").isEmpty)
+      assert(at1.nonEmpty && sorted(DedupIndex.loadAt(spark, path, 1)) == at1)
+      assert(sorted(DedupIndex.load(spark, path)) == live)
+      assert(maintained.nonEmpty &&
+        sorted(DedupIndex.maintainClusters(spark, path, 2, batch)) == maintained)
+      // rollback across the compaction restores v1 and reclaims the rest
+      DedupIndex.rollback(spark, path, 1)
+      assert(DedupIndex.versions(spark, path) == Seq(1))
+      assert(sorted(DedupIndex.load(spark, path)) == at1)
+      assert(TestSpark.unitDirs(s"$path/rows.parquet", "").length == 1)
+      assert(!graft.core.Fs.exists(spark, s"$path/tombstones.parquet"))
+    } finally { rmrf(path); spark.catalog.clearCache() }
+  }
+
+  test("in-place compaction: expire(keepLast = 1) reclaims the fragment units") {
+    val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_cix").toString
+    try {
+      twoVersions(path)
+      val live = sorted(DedupIndex.load(spark, path))
+      val head = graft.core.Snapshots.current(spark, path)
+      val fragments = graft.core.Snapshots.units(head, "rows") ++
+        graft.core.Snapshots.units(head, "tombstones")
+      assert(fragments.length == 3)
+      DedupIndex.compact(spark, path, path)
+      assert(fragments.forall(u => graft.core.Fs.exists(spark, s"$path/$u")))
+      DedupIndex.expire(spark, path, keepLast = 1)
+      assert(DedupIndex.versions(spark, path) == Seq(3))
+      assert(fragments.forall(u => !graft.core.Fs.exists(spark, s"$path/$u")))
+      assert(sorted(DedupIndex.load(spark, path)) == live)
+      assert(sorted(DedupIndex.loadAt(spark, path, 3)) == live)
+      assert(DedupIndex.loadForestAt(spark, path, 3).count() ==
+        docs.filter(col("doc_id") % 4 === 0).count())
+    } finally rmrf(path)
+  }
+
+  test("a unit staged without its log commit is invisible; the replay applies the batch once") {
+    val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_crash").toString
+    try {
+      DedupIndex.save(spark,
+        DedupIndex.index(docs.filter(col("doc_id") % 2 === 0)), path)
+      val base = DedupIndex.load(spark, path).count()
+      val batch = DedupIndex.index(docs.filter(col("doc_id") % 2 === 1))
+      // the crash: epoch 3's unit is written into the rows directory and
+      // a second attempt's stage is half written; no log commit lands
+      batch.write.parquet(s"$path/rows.parquet/batch-3-crashed")
+      batch.limit(5).write.parquet(s"$path/_staging/batch-3-partial")
+      assert(DedupIndex.load(spark, path).count() == base)
+      // the replay applies the batch exactly once
+      assert(DedupIndex.appendIdempotent(spark, batch, path, 3L))
+      assert(!DedupIndex.appendIdempotent(spark, batch, path, 3L))
+      val ids = DedupIndex.load(spark, path).select("doc_id").collect().map(_.getLong(0))
+      assert(ids.length == docs.count() && ids.length == ids.distinct.length)
+      // rollback reclaims the dead stage
+      DedupIndex.snapshot(spark, path, 1)
+      DedupIndex.rollback(spark, path, 1)
+      assert(!graft.core.Fs.exists(spark, s"$path/_staging"))
+      assert(DedupIndex.load(spark, path).count() == docs.count())
+    } finally rmrf(path)
   }
 
   test("docs too short to shingle keep NULL lanes, never near-dup") {
@@ -170,23 +259,24 @@ class DedupIndexSpec extends AnyFunSuite {
     } finally rmrf(path)
   }
 
-  test("a batch committed without its marker is skipped on replay (ADVICE r9)") {
+  test("a batch committed by commitBatch carries its ledger line: replay skipped") {
     val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_cw").toString
     try {
       DedupIndex.save(spark,
         DedupIndex.index(docs.filter(col("doc_id") % 2 === 0)), path)
       val batch = DedupIndex.index(docs.filter(col("doc_id") % 2 === 1))
-      // simulate the crash window: the atomic data commit lands, the
-      // marker never does
+      // the bare data commit (s16's crash point): the batch's unit and
+      // its ledger line land in the same log commit
       DedupIndex.commitBatch(spark, batch, path, 3L)
-      assert(!graft.core.Fs.exists(spark, s"$path/_applied/batch-3"))
+      assert(graft.core.Snapshots.current(spark, path).contains(("applied", "batch-3")))
       val once = DedupIndex.load(spark, path).count()
       assert(once == docs.count())
-      // the committed batch is VISIBLE to load (atomic rename, not torn)
-      // and the replay is skipped off the committed directory itself
+      // the replay is skipped off the head's ledger, and a second bare
+      // commit of the same batch commits nothing and leaves no unit
       assert(!DedupIndex.appendIdempotent(spark, batch, path, 3L))
+      DedupIndex.commitBatch(spark, batch, path, 3L)
       assert(DedupIndex.load(spark, path).count() == once)
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-3"))
+      assert(TestSpark.unitDirs(s"$path/rows.parquet", "batch-3-").length == 1)
       // no doc_id became a multiset entry
       val ids = DedupIndex.load(spark, path).select("doc_id").collect()
         .map(_.getLong(0))
@@ -203,9 +293,8 @@ class DedupIndexSpec extends AnyFunSuite {
       val batch = DedupIndex.index(docs.filter(col("doc_id") % 2 === 1))
       assert(DedupIndex.appendIdempotent(spark, batch, path, 5L))
       DedupIndex.compact(spark, path, path2)
-      // the generation rewrite dropped the batch directory, but the
+      // the generation rewrite dropped the batch unit, but the
       // carried ledger still refuses a checkpoint-replayed epoch 5
-      assert(graft.core.Fs.exists(spark, s"$path2/_applied/batch-5"))
       val n = DedupIndex.load(spark, path2).count()
       assert(!DedupIndex.appendIdempotent(spark, batch, path2, 5L))
       assert(DedupIndex.load(spark, path2).count() == n)
@@ -246,10 +335,10 @@ class DedupIndexSpec extends AnyFunSuite {
         DedupIndex.index(docs.filter(col("doc_id") % 2 === 0)), path)
       val batch = DedupIndex.index(docs.filter(col("doc_id") % 2 === 1))
       // a zombie executor plus its replacement, racing the same batch id
-      // (VERDICT r10 task 6): each stages privately; Fs.rename's atomic
-      // refuse-existing-destination arbitration must leave exactly one
-      // committed copy — the legacy rename nested the loser INTO the
-      // winner's directory and the recursive loader double-counted it.
+      // (VERDICT r10 task 6): each stages its own unit; Fs.rename's
+      // atomic refuse-existing-destination arbitrates the log commit, and
+      // the loser finds the batch in the head's ledger and deletes its
+      // unit — exactly one committed copy.
       val barrier = new java.util.concurrent.CyclicBarrier(2)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val ts = (1 to 2).map { _ =>
@@ -263,10 +352,10 @@ class DedupIndexSpec extends AnyFunSuite {
       }
       ts.foreach(_.start()); ts.foreach(_.join(300000))
       assert(errs.isEmpty, s"racing committer failed: ${errs.peek()}")
-      val dir = new java.io.File(s"$path/rows.parquet/batch-9")
-      assert(dir.isDirectory && dir.listFiles().forall(!_.isDirectory))
+      val units = TestSpark.unitDirs(s"$path/rows.parquet", "batch-9-")
+      assert(units.length == 1 && new java.io.File(s"$path/rows.parquet/${units.head}")
+        .listFiles().forall(!_.isDirectory))
       assert(DedupIndex.load(spark, path).count() == docs.count())
-      assert(graft.core.Fs.exists(spark, s"$path/_applied/batch-9"))
       // and the epoch stays refused afterwards
       assert(!DedupIndex.appendIdempotent(spark, batch, path, 9L))
       assert(DedupIndex.load(spark, path).count() == docs.count())
