@@ -40,8 +40,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * on in Spark 4), shuffle parallelism sized to the core count rather
   * than the 200 default, and graft's Catalyst extensions installed. */
 object GraftSession {
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -90,19 +90,6 @@ object GraftSession {
       // NTZ — Tables normalizes everything to TimestampType itself.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    // OPTIONAL state-store provider override (round 15, VERDICT r14
-    // item 8): the stream-stream rows' floor is state-store commit
-    // cost × trigger count; SPARK_GRAFT_STATESTORE=rocksdb switches
-    // the provider for a TWIN measurement without touching what the
-    // rows prove. Default (env unset) is Spark's HDFS-backed provider
-    // — the bench contract is unchanged.
-    sys.env.get("SPARK_GRAFT_STATESTORE") match {
-      case Some("rocksdb") => b.config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case _ => b
-    }
-  }
 
   def local(cores: Int): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()

@@ -23,8 +23,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * replaced, so `_log` holds the head alone.
   *
   * A snapshot TAG is the head copied to `{path}/manifest/v00005.tsv`.
-  * Pinned reads, rollback and retention are unit-set operations over the
-  * head and the tags: none lists a data directory or starts a Spark job.
+  * Pinned reads and retention are unit-set operations over the head and
+  * the tags: neither lists a data directory or starts a Spark job.
+  * Rollback lists each kind directory once, to reclaim every unit no
+  * retained entry names.
   * Every read declares its kind's schema, so building an artifact
   * DataFrame starts no Spark job either.
   */
@@ -106,12 +108,13 @@ object Snapshots {
 
   /** Stage `data` as the unit `{kind}.parquet/{name}`, cast to the
     * kind's declared schema and written under `_staging`, then renamed
-    * into place; returns its entry. Not yet visible: a commit names it. */
+    * into place; returns its entry. Not yet visible: a commit names it.
+    * The log names every unit, so it carries no `_SUCCESS` marker. */
   def stage(spark: SparkSession, path: String, layout: Layout, kind: String,
       name: String, data: DataFrame, partitionBy: Seq[String] = Nil): (String, String) = {
     val dir = staged(path, name)
     val w = data.select(layout.schema(kind).map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("overwrite")
+      .write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(dir)
     val unit = s"$kind.parquet/$name"
     require(Fs.rename(spark, dir, s"$path/$unit"),
@@ -216,40 +219,41 @@ object Snapshots {
   def entries(spark: SparkSession, path: String, version: Int): Entries =
     read(spark, manifestPath(path, version))
 
-  /** Delete the units of `gone` that `kept` does not name. */
-  private def vacuum(spark: SparkSession, path: String, gone: Entries, kept: Entries): Unit = {
-    val keep = kept.map(_._2).toSet
-    gone.collect { case (k, u) if k != "applied" && !keep(u) => u }.distinct
-      .foreach(u => Fs.delete(spark, s"$path/$u"))
-  }
-
   /** ROLL BACK to snapshot `toVersion`: its tag is committed as the head
-    * (ledger included, so a rolled-back batch can re-apply), newer tags
-    * are dropped, and the units of the replaced head and the dropped tags
-    * that neither the new head nor a retained tag names are deleted, with
-    * every kind directory no retained entry uses. `_staging` leftovers
-    * are reclaimed: staged-but-uncommitted work is replayable by
-    * definition. Cost: one file read per tag plus per-unit deletes. */
+    * (ledger included, so a rolled-back batch can re-apply) and newer
+    * tags are dropped. Then every unit that neither the new head nor a
+    * retained tag names is deleted, found by listing each kind
+    * directory, and so is a kind directory nothing names a unit of.
+    * That reclaims units that left the head untagged and units renamed
+    * into place whose log commit never landed. `_staging` leftovers go
+    * too: staged-but-uncommitted work is replayable by definition. Like
+    * the `_staging` sweep, this assumes no concurrent writer. Cost: one
+    * file read per retained tag, one listing per kind, per-unit
+    * deletes. */
   def rollback(spark: SparkSession, path: String, toVersion: Int, layout: Layout): Unit = {
     val vs = versions(spark, path)
     require(vs.contains(toVersion), s"no committed snapshot v$toVersion at $path")
     val tag = entries(spark, path, toVersion)
     val (dropped, retained) = vs.filter(_ != toVersion).partition(_ > toVersion)
-    val droppedEntries = dropped.flatMap(v => entries(spark, path, v))
     dropped.foreach(v => Fs.delete(spark, manifestPath(path, v)))
-    var replaced: Entries = Nil
-    commit(spark, path) { cur => replaced = cur; tag }
-    val kept = tag ++ retained.flatMap(v => entries(spark, path, v))
-    vacuum(spark, path, replaced ++ droppedEntries, kept)
-    layout.kinds.filterNot(k => kept.exists(_._1 == k))
-      .foreach(k => Fs.delete(spark, s"$path/$k.parquet"))
+    commit(spark, path)(_ => tag)
+    val named = (tag ++ retained.flatMap(v => entries(spark, path, v))).map(_._2).toSet
+    for (kind <- layout.kinds) {
+      val dir = s"$kind.parquet"
+      if (!named.exists(_.startsWith(s"$dir/"))) Fs.delete(spark, s"$path/$dir")
+      else Fs.listPrefixedDirs(spark, s"$path/$dir", "").map(u => s"$dir/$u")
+        .filterNot(named).foreach(u => Fs.delete(spark, s"$path/$u"))
+    }
     Fs.delete(spark, s"$path/_staging")
   }
 
   /** EXPIRE snapshot history older than the last `keepLast` tags —
     * Delta/Iceberg `VACUUM` / `expire_snapshots`: the oldest tags are
-    * dropped, and their units that neither the head nor a retained tag
-    * names are deleted. No `_staging` sweep: expire may run beside a
+    * dropped, and the units they name that neither the head nor a
+    * retained tag names are deleted. Only units an expired tag names are
+    * reclaimed: a unit that left the head before any tag named it, or
+    * one whose log commit never landed, waits for [[rollback]]. No
+    * listing and no `_staging` sweep, because expire may run beside a
     * live writer, whose fresh unit no expired tag names. */
   def expire(spark: SparkSession, path: String, keepLast: Int): Unit = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
@@ -258,8 +262,10 @@ object Snapshots {
       val (expired, retained) = vs.splitAt(vs.length - keepLast)
       val gone = expired.flatMap(v => entries(spark, path, v))
       expired.foreach(v => Fs.delete(spark, manifestPath(path, v)))
-      vacuum(spark, path, gone,
-        current(spark, path) ++ retained.flatMap(v => entries(spark, path, v)))
+      val keep = (current(spark, path) ++ retained.flatMap(v => entries(spark, path, v)))
+        .map(_._2).toSet
+      gone.collect { case (k, u) if k != "applied" && !keep(u) => u }.distinct
+        .foreach(u => Fs.delete(spark, s"$path/$u"))
     }
   }
 

@@ -248,7 +248,7 @@ object DedupIndex {
     *
     * Candidates and verify are [[MinHash.banded]] under
     * `Rule.Deployed` (the x86-gated cap plus the x88 chain): ordinary
-    * buckets keep the exact all-pairs join, template-flooded ones
+    * buckets keep all pairs, template-flooded ones
     * escalate to the anchor star and SNM chain, so the day-0 resolve
     * is O(cap · keys) worst-case instead of Σ b² — the difference
     * between a payable and an unpayable build on a boilerplate-heavy
@@ -323,7 +323,7 @@ object DedupIndex {
     * (n rows — the old quadratic pair bulk is never re-formed).
     * Candidates are [[MinHash.banded]] under `Rule.Deployed` with the
     * batch as probe side: batch keys probe (index ∪ batch) buckets,
-    * ordinary buckets keep the exact all-pairs join, template-flooded
+    * ordinary buckets keep all pairs, template-flooded
     * ones escalate to the anchor star and SNM chain — so per-ingest
     * candidate volume is O(cap · batch-keys) plus Σ(b−1) over
     * escalated buckets,
@@ -405,8 +405,8 @@ object DedupIndex {
     * price. Candidates and verify are [[MinHash.banded]] under
     * `Rule.Deployed` with the batch as probe side (batch keys probe
     * index-side buckets): within-index pairs and batch–batch pairs
-    * are never formed, ordinary buckets keep the exact batch×bucket
-    * join so candidate volume scales with the batch, and an
+    * are never formed, ordinary buckets keep every batch×bucket
+    * pair so candidate volume scales with the batch, and an
     * index-side bucket a template corpus floods costs each batch key
     * ONE anchor pair instead of bucket-size work. A batch doc in an
     * escalated bucket is flagged near-dup through the bucket's anchor

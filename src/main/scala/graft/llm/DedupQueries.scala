@@ -1080,9 +1080,10 @@ object DedupQueries {
     // still recovers the full 1,000-doc cluster and leaves the 4,000
     // distinct docs singletons (DedupSpec pins the expected histogram —
     // capping may not fragment the planted cluster). SCALE SHAPE: one
-    // (bp,k) partial agg for anchors + one co-partitioned join back +
-    // a star-shaped verified set stars() collapses in one round;
-    // nothing anywhere is quadratic in cluster size.
+    // (bp,k) shuffle and one sorted pass per bucket that finds the
+    // anchor and emits its star, with no join + a star-shaped verified
+    // set stars() collapses in one round; nothing anywhere is
+    // quadratic in cluster size.
     Q(
       "x85_capped_neardup",
       s"""WITH RECURSIVE ${templateCorpusSql(1000, 5000)},
@@ -1135,7 +1136,7 @@ object DedupQueries {
 
     // X86 — HYBRID bucket escalation, the rule x85's cap DEPLOYS as
     // (the judge's "sub-band escalation" remedy made the default):
-    // buckets at or under 16 members keep the exact all-pairs join —
+    // buckets at or under 16 members keep all pairs —
     // LOSSLESS, and on ordinary corpora that is every bucket, so the
     // candidate set equals Rule.Exact's — while buckets over 16
     // escalate to x85's min-id anchor pairing, so a flooded template
@@ -1148,9 +1149,10 @@ object DedupQueries {
     // escalate). Oracle restates the union, the bucket-size split, the
     // anchor rule, the ≥ 14/16 verify and the reach fixpoint; output =
     // cluster histogram + the volume audit (hybrid vs uncapped bucket
-    // pairs, buckets escalated). SCALE SHAPE: one bucket-size
-    // aggregate + one co-partitioned meta join feed both branches;
-    // nothing is quadratic in cluster size anywhere, and the lossless
+    // pairs, buckets escalated). SCALE SHAPE: one (bp, k) shuffle and
+    // one sorted pass per bucket measure its size and emit either
+    // branch's pairs, with no join; nothing is quadratic in cluster
+    // size anywhere, and the lossless
     // guarantee degrades ONLY inside buckets a 100 TB template corpus
     // floods — exactly where all-pairs is unpayable anyway.
     Q(

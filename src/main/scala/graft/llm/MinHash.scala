@@ -2,6 +2,7 @@ package graft.llm
 
 import graft.core.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic MinHash over character shingles — no RNG anywhere
@@ -120,8 +121,8 @@ object MinHash {
 
   /** The bucket-size cap the DEPLOYED dedup paths run with
     * ([[graft.llm.DedupIndex]], `Rule.Deployed`): buckets at or under it
-    * keep the exact all-pairs join (lossless for the >= 14/16 gate),
-    * bigger ones escalate to the min-id anchor star PLUS the
+    * keep all pairs (lossless for the >= 14/16 gate), bigger ones
+    * escalate to the min-id anchor star PLUS the
     * signature-sorted SNM successor chain — 2(b−1) rows per escalated
     * bucket, still linear. 16 is the x86-gated value: at the
     * correctness-gate scales the real corpus's largest band-pair
@@ -162,8 +163,8 @@ object MinHash {
     *
     * `base` (and `probe`) are [[bandPairKeysSorted]] rows.
     *   - `probe = None` (symmetric): pairs within `base`; the all-pairs
-    *     and anchor legs emit d1 < d2, the chain leg (predecessor,
-    *     successor).
+    *     and anchor pairs are (smaller id, larger id), a chain pair is
+    *     (predecessor, successor).
     *   - `probe = Some(p)` (batch against corpus): only pairs with one
     *     probe end and one base end, the probe end as d1; bucket size
     *     and anchor are measured over `base`, and an anchor that is
@@ -178,56 +179,21 @@ object MinHash {
     * share its 8 keyed lanes, so `matches` is always >= 8. That also
     * makes the verify row-local — 8 + agreement of the carried r0..r3
     * complement quads — and since a pair's count is the same in every
-    * bucket it shares, verifying per leg commutes with the distinct.
-    * With an unbounded cap no bucket aggregate is built: the plan is
-    * the plain bucket join. */
+    * bucket it shares, verifying per pair commutes with the distinct.
+    *
+    * Plan: with an unbounded cap, the plain bucket join. Under a finite
+    * cap, one pass over bucket members ([[bucketPairs]]): one (bp, k)
+    * shuffle, one sort, two windows and one explode, with no join, in
+    * both shapes. */
   def banded(base: DataFrame, probe: Option[DataFrame], rule: Rule,
       threshold: Int): DataFrame = {
-    val legs = (probe, rule.cap) match {
-      case (None, Int.MaxValue) => Seq(pairsWithin(base, base, _ < _))
-      case (Some(p), Int.MaxValue) => Seq(pairsWithin(p, base, _ =!= _))
-      case (None, cap) =>
-        val sized = base.join(bucketMeta(base), Seq("bp", "k"))
-        val esc = sized.filter(col("b") > cap)
-        val small = sized.filter(col("b") <= cap)
-        Seq(pairsWithin(small, small, _ < _), anchorStar(esc, probeFirst = false)) ++
-          (if (rule.chain) Seq(snmChain(esc, flagged = false)) else Nil)
-      case (Some(p), cap) =>
-        val meta = bucketMeta(base)
-        // base ⋈ meta once; every base-side leg filters this one join
-        val sized = base.join(meta, Seq("bp", "k"))
-        val escBase = sized.filter(col("b") > cap)
-        // probe rows of escalated buckets, carrying the anchor's quads:
-        // they feed the probe→anchor star and the chain members
-        val escProbe = p.join(meta.filter(col("b") > cap)
-          .select(Seq(col("bp"), col("k"), col("anchor")) ++ quad("q"): _*), Seq("bp", "k"))
-        val probeAnchored = escBase.join(
-          p.select(col("doc_id").as("anchor")).distinct(), Seq("anchor"), "left_semi")
-        // chain members: escalated base ∪ probe rows, merged per doc
-        // with p = "is a probe doc" and q = "is a base doc"
-        def flagged(rows: DataFrame, isProbe: Long) =
-          rows.select(Seq(col("bp"), col("k"), col("doc_id"),
-            lit(isProbe).as("p"), lit(1L - isProbe).as("q")) ++ quad("r"): _*)
-        val members = flagged(escBase, 0L).unionByName(flagged(escProbe, 1L))
-          .groupBy(Seq(col("bp"), col("k"), col("doc_id")) ++ quad("r"): _*)
-          .agg(max(col("p")).as("p"), max(col("q")).as("q"))
-        Seq(pairsWithin(p, sized.filter(col("b") <= cap), _ =!= _),
-          anchorStar(escProbe, probeFirst = true),
-          anchorStar(probeAnchored, probeFirst = false)) ++
-          (if (rule.chain) Seq(snmChain(members, flagged = true)) else Nil)
+    val pairs = (probe, rule.cap) match {
+      case (None, Int.MaxValue) => pairsWithin(base, base, _ < _)
+      case (Some(p), Int.MaxValue) => pairsWithin(p, base, _ =!= _)
+      case _ => bucketPairs(base, probe, rule)
     }
-    legs.reduce(_ unionByName _).filter(col("matches") >= threshold).distinct()
+    pairs.filter(col("matches") >= threshold).distinct()
   }
-
-  /** Per (bp, k) bucket: size b, anchor (min doc_id) and the anchor's
-    * r0..r3 as q0..q3. min_by keeps every buffer slot a fixed-width
-    * long (doc_id is unique per bucket, so it is deterministic), so the
-    * aggregate stays a whole-stage HashAggregate; a min(struct(...))
-    * spelling forces the sort-based object aggregate. */
-  private def bucketMeta(keys: DataFrame): DataFrame =
-    keys.groupBy("bp", "k").agg(count(lit(1)).as("b"),
-      min("doc_id").as("anchor") +:
-        (0 until 4).map(i => min_by(col(s"r$i"), col("doc_id")).as(s"q$i")): _*)
 
   /** Pairs of a `left` and a `right` row in one bucket, d1 from `left`,
     * kept where `keep(d1, d2)`. */
@@ -239,43 +205,76 @@ object MinHash {
         col("bp") === col("bp2") && col("k") === col("k2") && keep(col("d1"), col("d2")))
       .select(col("d1"), col("d2"), packedLaneAgree("x", "y").as("matches"))
 
-  /** Each row's doc paired with its bucket's anchor (rows carry
-    * `anchor` and its quads q0..q3); the anchor is d1 unless
-    * `probeFirst`. */
-  private def anchorStar(rows: DataFrame, probeFirst: Boolean): DataFrame = {
-    val (d1, d2) =
-      if (probeFirst) (col("doc_id"), col("anchor")) else (col("anchor"), col("doc_id"))
-    rows.filter(col("doc_id") =!= col("anchor"))
-      .select(d1.as("d1"), d2.as("d2"), packedLaneAgree("r", "q").as("matches"))
-  }
-
-  /** Each bucket member paired with its successor in (r0..r3, doc_id)
-    * order — within a bucket the packed key pins the 8 keyed lanes, so
-    * that IS the (mh0..mh15, doc_id) order, at a quarter of the
-    * comparator width and with no signature re-join. One window over
-    * the escalated rows only: free when nothing escalates. `flagged`
-    * members carry p (probe doc) and q (base doc): a pair is kept only
-    * with one probe end and one base end, the probe end as d1. */
-  private def snmChain(members: DataFrame, flagged: Boolean): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("bp", "k")
-      .orderBy(col("r0"), col("r1"), col("r2"), col("r3"), col("doc_id"))
-    def next(c: String) = lead(col(c), 1).over(w)
-    val flags =
-      if (flagged) Seq(col("p").as("pa"), col("q").as("qa"), next("p").as("pb"), next("q").as("qb"))
-      else Nil
-    val succ = members
-      .select(Seq(col("doc_id").as("ca"), next("doc_id").as("cb")) ++ flags ++
-        quadAs("x") ++ (0 until 4).map(i => next(s"r$i").as(s"y$i")): _*)
-      .filter(col("cb").isNotNull)
-    val agree = packedLaneAgree("x", "y").as("matches")
-    if (!flagged) succ.select(col("ca").as("d1"), col("cb").as("d2"), agree)
-    else {
-      val fwd = col("pa") === 1L && col("qb") === 1L
-      succ.filter(fwd || (col("pb") === 1L && col("qa") === 1L))
-        .select(when(fwd, col("ca")).otherwise(col("cb")).as("d1"),
-          when(fwd, col("cb")).otherwise(col("ca")).as("d2"), agree)
+  /** [[banded]] under a finite cap, as one reduce per bucket.
+    *
+    * Members carry p ("is a probe doc") and q ("is a base doc"); in the
+    * symmetric shape every row is both. They are shuffled once by
+    * (bp, k); in the probe shape a doc's two rows merge there, on the
+    * same partitioning. One window order — (r0..r3, doc_id), which the
+    * packed key makes the (mh0..mh15, doc_id) order — serves the whole
+    * rule:
+    *   - over the whole bucket: its base size b, the anchor (min base
+    *     doc_id), whether the anchor is a probe doc, and its quads;
+    *   - the predecessor's doc_id, p, q and quads, for the chain pair;
+    *   - stacked on the same sort, the base members of buckets with
+    *     b <= cap, so no row holds more than cap of them.
+    * Each row then emits the pairs it is one end of, through one
+    * explode: its small-bucket partners, the anchor star, and the chain
+    * link to its predecessor. An element is (o, first, y0..y3): the
+    * other end, whether that end is d1, and its quads. Elements with
+    * the row's doc as d1 are kept only from probe rows, and as
+    * d1 < d2 (symmetric) or d1 != d2 (probe); that is the partner
+    * rule, and it holds already for the probe-first star and the
+    * probe-first chain link. */
+  private def bucketPairs(base: DataFrame, probe: Option[DataFrame], rule: Rule): DataFrame = {
+    def tagged(rows: DataFrame, p: Long, q: Long) =
+      rows.select(Seq(col("bp"), col("k"), col("doc_id"),
+        lit(p).as("p"), lit(q).as("q")) ++ quad("r"): _*)
+    val members = probe match {
+      case None => tagged(base, 1L, 1L).repartition(col("bp"), col("k"))
+      case Some(p) => tagged(base, 0L, 1L).unionByName(tagged(p, 1L, 0L))
+        .repartition(col("bp"), col("k"))
+        .groupBy(Seq(col("bp"), col("k"), col("doc_id")) ++ quad("r"): _*)
+        .agg(max(col("p")).as("p"), max(col("q")).as("q"))
     }
+    val order = Window.partitionBy("bp", "k")
+      .orderBy(col("r0"), col("r1"), col("r2"), col("r3"), col("doc_id"))
+    val bucket = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val baseId = when(col("q") === 1L, col("doc_id"))
+    def prev(c: String) = lag(col(c), 1).over(order)
+    def elem(o: Column, first: Column, quads: Seq[Column]) =
+      struct(o.as("o") +: first.as("first") +:
+        quads.zipWithIndex.map { case (c, i) => c.as(s"y$i") }: _*)
+
+    val measured = members.select(Seq(col("bp"), col("k"), col("doc_id"), col("p"), col("q")) ++
+      quad("r") ++ Seq(sum(col("q")).over(bucket).as("b"), min(baseId).over(bucket).as("a"),
+        min_by(col("p"), baseId).over(bucket).as("ap"),
+        prev("doc_id").as("pd"), prev("p").as("pp"), prev("q").as("pq")) ++
+      (0 until 4).map(i => min_by(col(s"r$i"), baseId).over(bucket).as(s"a$i")) ++
+      (0 until 4).map(i => prev(s"r$i").as(s"pr$i")): _*)
+    val small = col("b") <= rule.cap
+    val withPartners = measured.select(col("*"), collect_list(when(small && col("q") === 1L,
+      elem(col("doc_id"), lit(false), quad("r")))).over(bucket).as("ys"))
+
+    val other = col("doc_id") =!= col("a")
+    val star = when(!small && col("q") === 1L && col("ap") === 1L && other,
+      elem(col("a"), lit(true), quad("a")))
+    val probeStar = when(!small && col("p") === 1L && other, elem(col("a"), lit(false), quad("a")))
+    // the predecessor is d1 when it is the probe end; in the symmetric
+    // shape it always is
+    val link = when(!small && col("pp") === 1L && col("q") === 1L,
+        elem(col("pd"), lit(true), quad("pr")))
+      .when(!small && col("p") === 1L && col("pq") === 1L, elem(col("pd"), lit(false), quad("pr")))
+    val own = Seq(star) ++ probe.map(_ => probeStar) ++ (if (rule.chain) Seq(link) else Nil)
+    val keep = if (probe.isEmpty) col("doc_id") < col("e.o") else col("doc_id") =!= col("e.o")
+    val first = col("e.first")
+    withPartners
+      .select(Seq(col("doc_id"), col("p"), explode(concat(col("ys"), array(own: _*))).as("e")) ++
+        quad("r"): _*)
+      .filter(col("e").isNotNull && (first || (col("p") === 1L && keep)))
+      .select(when(first, col("e.o")).otherwise(col("doc_id")).as("d1"),
+        when(first, col("doc_id")).otherwise(col("e.o")).as("d2"),
+        packedLaneAgree("r", "e.y").as("matches"))
   }
 
   /** 16-lane agreement of two rows of one bucket, from their carried

@@ -154,13 +154,14 @@ object PlanDump {
     // plan is one partial+final HashAggregate over the cached
     // centered-feature projection.)
     "x81_matryoshka_recall", "x84_rendezvous_rebalance",
-    // round 12: x85's capped candidate generation — the thing to read
-    // is the shape after the band-pair key projection: ONE
-    // partial+final HashAggregate pair (the per-bucket min-id anchors)
-    // and one co-partitioned join back on (bp, k), in place of
-    // Rule.Exact's bucket self-join — the
-    // plan's join output is Σ(b−1) rows by construction, which is the
-    // entire bounded-work claim in physical form. b26's forest-fed
+    // x85's capped candidate generation — the thing to read is the
+    // shape after the band-pair key projection: ONE Exchange on
+    // (bp, k), one Sort and two stacked Windows (bucket size, min-id
+    // anchor and its quads; then the small-bucket member lists) and a
+    // Generate that emits each row's pairs, in place of Rule.Exact's
+    // bucket self-join — no join anywhere, and an escalated bucket
+    // emits Σ(b−1) star rows by construction, which is the entire
+    // bounded-work claim in physical form. b26's forest-fed
     // maintenance — the star rounds run eagerly, so the printed plan
     // is the final label assembly, and it carries the isolation claim
     // directly: the node set unions the ARTIFACT's rows.parquet scan
@@ -170,26 +171,24 @@ object PlanDump {
     // only text the whole ingest ever scanned (eagerly, in the star
     // rounds) was the batch slice's.
     "x85_capped_neardup", "b26_forest_fed_clusters",
-    // round 13: b28's flooded maintenance — the printed final-assembly
-    // plan is b26's (the star rounds run eagerly) but the ingest that
-    // produced it ran the HYBRID asymmetric candidate rule inside
-    // maintainClusters: one (bp, k) partial+final HashAggregate pair
-    // for the bucket meta (count + min anchor) and three
-    // co-partitioned join-backs (small all-pairs, probe→anchor,
-    // anchor-star) feeding a union — the escalated buckets' join
-    // output is Σ(b−1) rows by construction where the raw band join's
-    // was Σ nb·(b−1). x87's plan shows the same meta-aggregate +
-    // branch-union shape on the symmetric rule over the in-plan
-    // signature fixture, with no parquet scan at all (spark.range
-    // feeds the whole pipeline).
+    // b28's flooded maintenance — the printed final-assembly plan is
+    // b26's (the star rounds run eagerly) but the ingest that produced
+    // it ran the deployed asymmetric rule inside maintainClusters: the
+    // batch and index key rows unioned, one Exchange on (bp, k), the
+    // probe/base merge aggregate on that same partitioning, then x85's
+    // Sort + two Windows + Generate — the escalated buckets emit
+    // Σ(b−1) star rows plus one chain link per member. x87's plan
+    // shows the symmetric rule over the in-plan signature fixture,
+    // with no parquet scan at all (spark.range feeds the whole
+    // pipeline).
     "b28_flooded_maintenance", "x87_chain_recall",
-    // round 14: x89's general-shape recall bound — the thing to read
-    // is the deployed chain rule's plan WITHOUT any signature re-join:
-    // the escalated rows' window sorts by the carried packed r0..r3
-    // lanes (riding the one keys↔meta join), so the chain leg adds no
-    // scan and no doc_id shuffle beyond what the anchor star already
-    // built; b13's plan (above) shows the same on the artifact path —
-    // the rows.parquet scans feed band keys and verify only.
+    // x89's general-shape recall bound — the thing to read is the
+    // deployed chain rule's plan WITHOUT any signature re-join: the
+    // bucket window sorts by the carried packed r0..r3 lanes, so the
+    // chain link is a lag over the same sort that finds the anchor —
+    // no extra scan, shuffle or sort; b13's plan (above) shows the
+    // same on the artifact path — the rows.parquet scans feed band
+    // keys and verify only.
     "x89_random_graph_recall")
 
   def main(args: Array[String]): Unit = {

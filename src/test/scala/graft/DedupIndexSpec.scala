@@ -213,10 +213,11 @@ class DedupIndexSpec extends AnyFunSuite {
       assert(!DedupIndex.appendIdempotent(spark, batch, path, 3L))
       val ids = DedupIndex.load(spark, path).select("doc_id").collect().map(_.getLong(0))
       assert(ids.length == docs.count() && ids.length == ids.distinct.length)
-      // rollback reclaims the dead stage
+      // rollback reclaims the dead stage and the uncommitted unit
       DedupIndex.snapshot(spark, path, 1)
       DedupIndex.rollback(spark, path, 1)
       assert(!graft.core.Fs.exists(spark, s"$path/_staging"))
+      assert(!graft.core.Fs.exists(spark, s"$path/rows.parquet/batch-3-crashed"))
       assert(DedupIndex.load(spark, path).count() == docs.count())
     } finally rmrf(path)
   }
@@ -561,6 +562,24 @@ class DedupIndexSpec extends AnyFunSuite {
       assert(spark.read.parquet(s"$path/forest.parquet/gen-1").count() == 2)
       DedupIndex.saveForest(spark, Seq((4L, 4L)).toDF("id", "lbl"), path, gen = 2)
       assert(spark.read.parquet(s"$path/forest.parquet/gen-2").count() == 1)
+    } finally rmrf(path)
+  }
+
+  test("rollback reclaims a forest gen that left the head before any tag named it") {
+    val sp = spark
+    import sp.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_dedupidx_frb").toString
+    try {
+      DedupIndex.save(spark,
+        DedupIndex.index(docs.filter(col("doc_id") % 2 === 0)), path)
+      DedupIndex.saveForest(spark, Seq((0L, 0L)).toDF("id", "lbl"), path, gen = 1)
+      DedupIndex.saveForest(spark, Seq((0L, 0L), (2L, 0L)).toDF("id", "lbl"), path, gen = 2)
+      DedupIndex.snapshot(spark, path, 1, forestGen = Some(2))
+      DedupIndex.rollback(spark, path, 1)
+      assert(!graft.core.Fs.exists(spark, s"$path/forest.parquet/gen-1"))
+      assert(DedupIndex.loadForestAt(spark, path, 1).count() == 2)
+      // units carry no _SUCCESS marker: the log names them
+      assert(!graft.core.Fs.exists(spark, s"$path/forest.parquet/gen-2/_SUCCESS"))
     } finally rmrf(path)
   }
 

@@ -74,7 +74,8 @@ class DedupSpec extends AnyFunSuite {
 
   private val rules = Seq(
     "exact" -> MinHash.Rule.Exact, "anchor" -> MinHash.Rule.Anchor,
-    "hybrid" -> MinHash.Rule(16, chain = false), "chain" -> MinHash.Rule(16, chain = true))
+    "hybrid" -> MinHash.Rule(16, chain = false), "chain" -> MinHash.Rule(16, chain = true),
+    "cap-4-chain" -> MinHash.Rule(4, chain = true))
 
   /** banded == [[bandedRef]] on every (shape, rule, threshold); a shape
     * is its base and optional probe doc_id predicates over `sig`. */
@@ -408,6 +409,25 @@ class DedupSpec extends AnyFunSuite {
       assert(pairSet(MinHash.banded(MinHash.bandPairKeysSorted(sig), None,
         MinHash.Rule.Deployed, 14)).size > 300, "fixture degenerate")
     } finally { sig.unpersist(false); spark.catalog.clearCache() }
+  }
+
+  test("capped banded plan: one bucket pass, no join, two shuffles, in both shapes") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val keys = MinHash.bandPairKeysSorted(chainSig())
+    for (probe <- Seq(None, Some(keys.filter(col("doc_id") >= 40)))) {
+      val plan = MinHash.banded(keys, probe, MinHash.Rule.Deployed, 14).queryExecution.executedPlan
+      val all = nodes(plan)
+      val joins = all.collect { case j: BaseJoinExec => j }
+      val shuffles = all.collect { case e: ShuffleExchangeLike => e }
+      assert(joins.isEmpty && shuffles.size == 2, s"probe=${probe.isDefined}: $plan")
+    }
   }
 
   test("x86 hybrid escalation: lossless at cap=infinity, planted cluster recalled at cap=16") {
